@@ -311,7 +311,3 @@ def _batch_features_unique(texts, cfg: DedupConfig, a, b):
 def u64_to_i64(x: np.ndarray) -> np.ndarray:
     """Reinterpret uint64 as two's-complement int64 (Spark LongType view)."""
     return np.asarray(x, dtype=np.uint64).view(np.int64)
-
-
-def i64_to_u64(x: np.ndarray) -> np.ndarray:
-    return np.asarray(x, dtype=np.int64).view(np.uint64)

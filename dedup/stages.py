@@ -5,11 +5,11 @@ pruning/pushdown; the only Python on the data path is the Arrow UDF surface
 in udfs.py.
 
 Scale notes (the 100 TB story, SURVEY.md §4):
-- Candidate generation never self-joins the bucket table. Buckets are
-  grouped (map-side partial agg on the count pass), oversized groups are
-  removed BEFORE any collect_list via a pre-count semi-join — a hot bucket
-  (boilerplate pages) costs one counter row per map task, never an
-  all-pairs explosion or a giant collected list (A1 + A2).
+- Candidate generation never self-joins the bucket table. One window
+  count marks every bucket entry with its key's cardinality and the cap
+  filters oversized groups row-wise BEFORE any collect_list — a hot
+  bucket (boilerplate pages) is sorted and counted on one task, never
+  exploded into all pairs or collected into a giant list (A1 + A2).
 - Probe rows multiply shuffle volume by <= T/bands compared to adding
   tables; that trade (probe more, shuffle less) is the [MPLSH] idea
   restated for Spark (SURVEY.md §4).
@@ -29,42 +29,19 @@ from . import udfs
 
 
 # ---------------------------------------------------------------------------
-# stage 1 — signatures
-# ---------------------------------------------------------------------------
-def stage1_signatures(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """pages -> signatures. P1: only (url, text) crosses into Arrow; html
-    and every other column are pruned at the scan. P2: the lang allowlist
-    (when set) filters at the scan too — pushed into the parquet reader."""
-    src = pages
-    if cfg.lang_allow is not None:
-        src = src.filter(F.col("lang").isin(*cfg.lang_allow))
-    narrow = src.select("url", "text").filter(F.col("text").isNotNull())
-    return narrow.mapInPandas(udfs.make_signatures_fn(cfg), udfs.SIGNATURES_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
-# stage 2 — banding + multi-probe bucket rows
-# ---------------------------------------------------------------------------
-def stage2_buckets(signatures: DataFrame, cfg: DedupConfig) -> DataFrame:
-    narrow = signatures.select("url", "minhash", "runnerup")
-    return narrow.mapInPandas(udfs.make_buckets_fn(cfg), udfs.BUCKETS_SCHEMA)
-
-
-# ---------------------------------------------------------------------------
 # fused stage 1+2 — one Arrow pass emits signatures AND bucket entries
 # ---------------------------------------------------------------------------
 def stage12_fused(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     """pages -> fused (signature columns + per-doc bucket-entry arrays).
 
-    The separate stage-2 path reads the committed signatures table back
-    through a second Arrow round-trip just to recompute keys from the
-    minhash/runnerup arrays; fusing computes bucket entries inside the
-    SAME Python pass (the matrices are already in NumPy) and stage 2
-    collapses to a JVM explode (buckets_from_fused) over the cached fused
-    relation — one fewer commit barrier's worth of serial latency and one
-    fewer JVM->Python->JVM copy of the signature arrays (VERDICT r2
-    "next round" #2). Values are identical to stage1 + stage2 run apart
-    (tests/test_parity.py + tests/test_resume.py cover both paths)."""
+    Stages 1 and 2 share ONE Arrow pass: bucket entries are computed
+    from the minhash/runnerup matrices while they are still in NumPy,
+    and stage 2 is a JVM explode (buckets_from_fused) over the fused
+    relation — no second JVM->Python->JVM copy of the signature arrays.
+    P1: only (url, text) crosses into Arrow; html and every other column
+    are pruned at the scan. P2: the lang allowlist (when set) filters at
+    the scan too — pushed into the parquet reader. Values match the
+    oracle bit-for-bit (tests/test_parity.py)."""
     src = pages
     if cfg.lang_allow is not None:
         src = src.filter(F.col("lang").isin(*cfg.lang_allow))
@@ -80,8 +57,9 @@ def signatures_from_fused(fused: DataFrame) -> DataFrame:
 
 
 def buckets_from_fused(fused: DataFrame) -> DataFrame:
-    """Explode the fused bucket-entry arrays into BUCKETS_SCHEMA rows —
-    pure whole-stage-codegen JVM work (arrays_zip + explode)."""
+    """Explode the fused bucket-entry arrays into bucket rows (band,
+    bucket_key, url, is_probe, probe_rank) — pure whole-stage-codegen JVM
+    work (arrays_zip + explode)."""
     e = fused.select(
         "url",
         F.explode(F.arrays_zip(*FUSED_BUCKET_COLS)).alias("e"),
@@ -101,8 +79,9 @@ def buckets_from_fused(fused: DataFrame) -> DataFrame:
 class CandidateOut(NamedTuple):
     candidates: DataFrame      # url_a, url_b, sources (comma-joined, sorted)
     dropped_buckets: DataFrame # generator, key, n
-    entries: DataFrame         # persisted intermediates — unpersist() once
-    counts: DataFrame          # candidates AND dropped_buckets materialized
+    entries: DataFrame         # persisted window-marked entries —
+                               # unpersist() once candidates AND
+                               # dropped_buckets are materialized
 
 
 def _simhash_combo_entries(
@@ -135,43 +114,6 @@ def _simhash_combo_entries(
     return signatures.select(
         "url", *carry, F.explode(F.array(*combo_structs)).alias("b")
     ).select(F.col("b.k1").alias("k1"), F.col("b.k2").alias("k2"), "url", *carry)
-
-
-#: physical strategy for the shared capped-generator pipeline in
-#: stage3_candidates — output-identical, different shuffle shapes:
-#:   "semijoin": count -> left-semi -> collect_list (three passes over the
-#:     entries relation, two of them full-data shuffles).
-#:   "window":   one shuffle: count(*) over Window.partitionBy(key), filter
-#:     the cap on the marked rows, then collect_list reuses the window's
-#:     hash partitioning (EnsureRequirements inserts no second exchange).
-#: Selected by measurement on the bench corpus (BENCH/BASELINE.md); the
-#: semijoin path remains selectable — its pre-collect drop is the safer
-#: shape if a deployment's AQE skew splitting is disabled. A physical-plan
-#: knob (results identical), so it rides an env var, not DedupConfig /
-#: the config hash.
-import os as _os
-
-STAGE3_STRATEGY = _os.environ.get("DEDUP_STAGE3_STRATEGY", "window")
-
-#: physical strategy for stage4_verify's signature-attach joins —
-#: output-identical, different shuffle payloads:
-#:   "full": join candidates against ALL signatures; every url's ~1 KB
-#:     minhash array enters the two join shuffles whether or not it
-#:     appears in any pair. The right default when pair-url density is
-#:     high (the bench corpus: 94% of docs are in a dup pair, so the
-#:     semi-join prefilter would drop almost nothing and its extra
-#:     candidate-scan passes are pure overhead).
-#:   "semi": left-semi-join each signature side to the distinct
-#:     participating urls first (AQE broadcasts the url sets when small),
-#:     so only pair-participating urls ship their minhash payload. The
-#:     scale shape when pair-url density is LOW — a lightly-duplicated
-#:     crawl where |pair urls| << |corpus| cuts the dominant verify
-#:     shuffle by that ratio (docs/SCALE.md verify-join note; measured
-#:     deltas in BENCH/BASELINE.md).
-#: A physical-plan knob (results identical, gated by
-#: tests/test_stage4_strategy.py), so it rides an env var like
-#: STAGE3_STRATEGY, not DedupConfig / the config hash.
-STAGE4_STRATEGY = _os.environ.get("DEDUP_STAGE4_STRATEGY", "full")
 
 
 def _dense_url_ids(urls: DataFrame) -> DataFrame:
@@ -234,7 +176,6 @@ def stage3_candidates(
     buckets: DataFrame,
     cfg: DedupConfig,
     new_urls: DataFrame | None = None,
-    strategy: str | None = None,
 ) -> CandidateOut:
     """All four candidate generators in one unified pass.
 
@@ -248,16 +189,16 @@ def stage3_candidates(
     fingerprints) normalize to a single entries relation
     (gen, k1 int, k2 long, uid long, is_probe) — uid is a dense url id
     (see _dense_url_ids), so every shuffle in this stage moves fixed-width
-    longs, not url strings — and share ONE count -> semi-join ->
-    collect_list -> explode pipeline: ~6 shuffles total instead of ~4 per
-    generator. The sha tier stays separate (star pairs are linear and
+    longs, not url strings — and share ONE window count -> cap filter ->
+    collect_list -> explode pipeline. The window's exchange is the only
+    shuffle of the entries relation: collect_list reuses its hash
+    partitioning. The sha tier stays separate (star pairs are linear and
     skew-proof, no cap needed).
 
-    Skew defense (A1): the pre-count is a plain groupBy().count() — Spark's
-    map-side partial aggregation makes a hot key cost one counter row per
-    map task — and the left-semi join against surviving keys removes
-    hot-bucket rows BEFORE collect_list, so no task ever materializes an
-    oversized member list.
+    Skew defense (A1): the cap filter drops hot-bucket rows BEFORE
+    collect_list, so no task ever materializes an oversized member list;
+    a hot key's rows land on one window task, which sorts and counts
+    them (spilling if huge) but never collects them.
     """
     from pyspark import StorageLevel
 
@@ -266,7 +207,7 @@ def stage3_candidates(
     # base+delta union), so one dictionary covers all three generators
     # and the sha tier. The encode joins are map-side at fixture scale
     # (AQE broadcasts the dictionary) and every shuffle in this stage —
-    # the lsh J2 dedup, the entries window/semijoin, the pair distinct —
+    # the lsh J2 dedup, the entries window, the pair distinct —
     # then moves 8-byte longs instead of url strings; pairs decode back
     # to urls once, after the cap and the distinct. is_new rides the
     # dictionary row, so the incremental mark costs no extra join over
@@ -328,19 +269,30 @@ def stage3_candidates(
         F.explode("fingerprints").alias("k2"),
         F.lit(False).alias("is_probe"),
     ).join(ids, "url").select("g", "k1", "k2", "uid", "is_probe", "is_new")
-    # entries are persisted (spilling): consumed by the counts pass, the
-    # collect_list pass, and (via counts) the dropped_buckets action.
+    # The window count marks every row with its key's cardinality; the
+    # collect_list groupBy reuses the window's HashPartitioning(keys), so
+    # EnsureRequirements inserts no second exchange. The marked relation
+    # is persisted (spilling): consumed by the collect_list pass and by
+    # the dropped_buckets action.
     # Scale note: at the 100 TB design point the entries relation (~64
     # rows/doc) exceeds any executor-storage budget — there a deployment
     # flips this to no-persist and lets both passes recompute from the
     # committed buckets/signatures tables (two cheap columnar scans);
     # persist wins only while entries fit the cluster's storage fraction.
-    entries = lsh_entries.unionByName(sim_entries).unionByName(fp_entries)
-    keys = ["g", "k1", "k2"]
-    strategy = strategy or STAGE3_STRATEGY
+    from pyspark.sql import Window
 
-    def _dropped_from_counts(cdf: DataFrame) -> DataFrame:
-        return cdf.filter(F.col("n") > cfg.max_bucket).select(
+    keys = ["g", "k1", "k2"]
+    entries = (
+        lsh_entries.unionByName(sim_entries)
+        .unionByName(fp_entries)
+        .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    dropped = (
+        entries.filter(F.col("n") > cfg.max_bucket)
+        .groupBy(*keys)
+        .agg(F.max("n").alias("n"))
+        .select(
             F.element_at(GEN_NAMES, F.col("g") + 1).alias("generator"),
             # key strings match the oracle's per-generator formats
             F.when(F.col("g") == 2, F.col("k2").cast("string"))
@@ -348,61 +300,16 @@ def stage3_candidates(
             .alias("key"),
             F.col("n").cast("long").alias("n"),
         )
-
-    if strategy == "window":
-        # ONE shuffle of the entries relation: the window count marks every
-        # row with its key's cardinality; the cap filter then drops hot and
-        # singleton keys row-wise, and the collect_list groupBy reuses the
-        # window's HashPartitioning(keys) with no further exchange. The hot
-        # key's rows do land on one window task (sorted, counted, spilled if
-        # huge, never collected into a list) — same single-task exposure the
-        # semijoin path has at its shuffle-join probe, one whole pass
-        # cheaper.
-        from pyspark.sql import Window
-
-        marked = entries.withColumn(
-            "n", F.count(F.lit(1)).over(Window.partitionBy(*keys))
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        counts = marked.groupBy(*keys).agg(F.max("n").alias("n"))
-        dropped = _dropped_from_counts(
-            marked.filter(F.col("n") > cfg.max_bucket)
-            .groupBy(*keys)
-            .agg(F.max("n").alias("n"))
-        )
-        grouped = (
-            marked.filter((F.col("n") >= 2) & (F.col("n") <= cfg.max_bucket))
-            .groupBy(*keys)
-            .agg(
-                F.collect_list(F.struct("uid", "is_probe", "is_new")).alias(
-                    "members"
-                )
+    )
+    grouped = (
+        entries.filter((F.col("n") >= 2) & (F.col("n") <= cfg.max_bucket))
+        .groupBy(*keys)
+        .agg(
+            F.collect_list(F.struct("uid", "is_probe", "is_new")).alias(
+                "members"
             )
         )
-        entries = marked  # the persisted relation callers must release
-    else:
-        entries = entries.persist(StorageLevel.MEMORY_AND_DISK)
-        # counts is tiny (one row per distinct key) and read twice — by the
-        # candidates job (ok_keys semi-join) and by the dropped_buckets
-        # write; persisting it turns the dropped_buckets stage into a filter
-        # over cached rows instead of a second shuffle of the entries
-        # relation
-        counts = (
-            entries.groupBy(*keys).agg(F.count("*").alias("n"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        ok_keys = counts.filter(
-            (F.col("n") >= 2) & (F.col("n") <= cfg.max_bucket)
-        )
-        dropped = _dropped_from_counts(counts)
-        grouped = (
-            entries.join(ok_keys.select(*keys), keys, "left_semi")
-            .groupBy(*keys)
-            .agg(
-                F.collect_list(F.struct("uid", "is_probe", "is_new")).alias(
-                    "members"
-                )
-            )
-        )
+    )
     # Pair explosion stays JVM-side (double explode inside whole-stage
     # codegen — no Arrow round-trip): a bucket of n members -> n^2 generated
     # rows filtered to canonical pairs, bounded by max_bucket. The
@@ -480,7 +387,7 @@ def stage3_candidates(
             ).alias("sources"),
         )
     )
-    return CandidateOut(candidates, dropped, entries, counts)
+    return CandidateOut(candidates, dropped, entries)
 
 
 # ---------------------------------------------------------------------------
@@ -491,7 +398,6 @@ def stage4_verify(
     signatures: DataFrame,
     pages: DataFrame,
     cfg: DedupConfig,
-    strategy: str | None = None,
 ) -> DataFrame:
     """Attach exact signature-Jaccard, Hamming distance and sha equality to
     every candidate pair (all JVM-side expressions); run the substring
@@ -502,12 +408,11 @@ def stage4_verify(
                  OR (winnow-sourced AND shares a normalized substring
                      >= min_substr)
 
-    `strategy` ("full" | "semi", default STAGE4_STRATEGY) picks the
-    physical shape of the signature-attach joins — see STAGE4_STRATEGY.
+    Both signature-attach joins take the whole signatures relation:
+    pruning each side to the pair urls first (a semi-join prefilter)
+    measured slower and shuffled more on the benchmark corpora, where
+    most docs sit in some candidate pair (docs/SCALE.md).
     """
-    strategy = strategy or STAGE4_STRATEGY
-    if strategy not in ("full", "semi"):
-        raise ValueError(f"unknown stage-4 strategy {strategy!r}")
     mh_col = F.col("minhash")
     if cfg.minhash_scheme == "oph":
         # OPH slots are 31-bit values (hashing.oph_minhash_with_runnerup):
@@ -532,18 +437,6 @@ def stage4_verify(
         F.col("simhash").alias("sim_b"),
         F.col("text_sha").alias("sha_b"),
     )
-    if strategy == "semi":
-        # prune each signature side to the urls that actually appear in a
-        # pair BEFORE its 1 KB minhash payload enters the attach join's
-        # shuffle: the distinct url sets are pair-bounded, AQE broadcasts
-        # them when small, and the prune runs map-side over the (cached)
-        # signatures relation
-        sig_a = sig_a.join(
-            candidates.select("url_a").distinct(), "url_a", "left_semi"
-        )
-        sig_b = sig_b.join(
-            candidates.select("url_b").distinct(), "url_b", "left_semi"
-        )
     joined = candidates.join(sig_a, "url_a").join(sig_b, "url_b")
 
     matches = F.aggregate(

@@ -41,8 +41,8 @@ def _table_pd(spark, res, name):
 
 @pytest.fixture(scope="module")
 def three_runs(spark, corpus_smoke, tmp_path_factory):
-    """(full run A, full run B, killed-then-resumed run C)."""
-    roots = [str(tmp_path_factory.mktemp(f"wh_{i}")) for i in range(3)]
+    """(full run A, full run B, killed-then-resumed runs C and D)."""
+    roots = [str(tmp_path_factory.mktemp(f"wh_{i}")) for i in range(4)]
     pages = _pages_df(spark, corpus_smoke)
     a = pipeline.run(spark, pages, DEFAULT, roots[0])
     b = pipeline.run(spark, pages, DEFAULT, roots[1])
@@ -54,13 +54,17 @@ def three_runs(spark, corpus_smoke, tmp_path_factory):
     with open(os.path.join(torn, "part-00000.parquet"), "wb") as f:
         f.write(b"torn write, no manifest")
     c = pipeline.run(spark, pages, DEFAULT, roots[2])
-    yield spark, a, b, c
+    # run D: stop after signatures, so the resume finds signatures
+    # committed but buckets not — it reruns stages 1+2 and commits buckets
+    pipeline.run(spark, pages, DEFAULT, roots[3], stop_after="signatures")
+    d = pipeline.run(spark, pages, DEFAULT, roots[3])
+    yield spark, a, b, c, d
     for r in roots:
         shutil.rmtree(r, ignore_errors=True)
 
 
 def test_determinism_two_runs_identical(three_runs):
-    spark, a, b, _ = three_runs
+    spark, a, b, _, _ = three_runs
     for t in FINAL_TABLES:
         pd.testing.assert_frame_equal(
             _table_pd(spark, a, t), _table_pd(spark, b, t), check_dtype=False
@@ -68,13 +72,18 @@ def test_determinism_two_runs_identical(three_runs):
 
 
 def test_resume_equals_uninterrupted(three_runs):
-    spark, a, _, c = three_runs
+    spark, a, _, c, d = three_runs
     assert "signatures" in c.stages_skipped
     assert "candidate_pairs" in c.stages_run  # torn write was rebuilt
-    for t in FINAL_TABLES:
-        pd.testing.assert_frame_equal(
-            _table_pd(spark, a, t), _table_pd(spark, c, t), check_dtype=False
-        )
+    assert "signatures" in d.stages_skipped
+    assert "buckets" in d.stages_run
+    for resumed in (c, d):
+        for t in FINAL_TABLES:
+            pd.testing.assert_frame_equal(
+                _table_pd(spark, a, t),
+                _table_pd(spark, resumed, t),
+                check_dtype=False,
+            )
 
 
 def test_config_change_invalidates_checkpoints(spark, corpus_smoke, tmp_path):
@@ -89,7 +98,7 @@ def test_config_change_invalidates_checkpoints(spark, corpus_smoke, tmp_path):
 
 
 def test_metrics_have_per_partition_rows(three_runs):
-    _, a, _, _ = three_runs
+    _, a, _, _, _ = three_runs
     rows = a.warehouse.read_metrics()
     stages = {m["stage"] for m in rows}
     assert {"signatures", "buckets", "clusters"} <= stages
