@@ -29,12 +29,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full dedup of the synthesized pages corpus at sf0.001 ->
     clusters(url, cluster_id). Driver checks rows > 0 + stable schema."""
-    from dedup.config import DEFAULT
-    from dedup.pipeline import run_in_memory
-    from dedup.synth import load_pages_spark
-
-    pages = load_pages_spark(spark, SF_SMOKE)
-    return run_in_memory(spark, pages, DEFAULT)["clusters"]
+    return _pipeline_run(spark, SF_SMOKE).df(spark, "clusters")
 
 
 # ---------------------------------------------------------------------------
@@ -315,7 +310,7 @@ def _cluster_profile(spark, sf_dir):
         F.lit(""),
     )
     meta = pages.select("url", host.alias("host"), "lang", "warc_ts")
-    clusters = _pipeline_tables(spark, sf_dir)["clusters"]
+    clusters = _pipeline_tables(spark, sf_dir).df(spark, "clusters")
     return (
         clusters.join(meta, "url")
         .groupBy("cluster_id")
@@ -2215,7 +2210,32 @@ def _semdedup_keep(spark, sf_dir):
 # stage-3..6 transforms are re-stated in SQL over the oracle's upstream
 # tables. The pytest parity suite remains the bit-for-bit gate.
 # ---------------------------------------------------------------------------
-_PIPELINE_CACHE: dict[tuple[str, str], dict] = {}
+_PIPELINE_CACHE: dict[tuple[str, str], tuple] = {}
+
+
+def _pipeline_run(spark, sf_dir):
+    """One committed `pipeline.run` over the synthesized pages of `sf_dir`
+    per (session, sf_dir), shared by `entry()` and every dedup-pipeline
+    query. Its warehouse is a temporary directory held by the cache entry:
+    deleted when the entry is evicted or the process exits. Keyed by
+    applicationId so a restarted session never reuses a run bound to a
+    stopped context."""
+    import tempfile
+
+    from dedup.config import DEFAULT
+    from dedup.pipeline import run
+    from dedup.synth import load_pages_spark
+
+    key = (spark.sparkContext.applicationId, sf_dir)
+    if key not in _PIPELINE_CACHE:
+        # evict runs of other (stopped/replaced) sessions, so a
+        # long-running service process holds one session's warehouses
+        for stale in [k for k in _PIPELINE_CACHE if k[0] != key[0]]:
+            _PIPELINE_CACHE.pop(stale)[0].cleanup()
+        wh = tempfile.TemporaryDirectory(prefix="dedup_pipeline_")
+        pages = load_pages_spark(spark, sf_dir)
+        _PIPELINE_CACHE[key] = (wh, run(spark, pages, DEFAULT, wh.name))
+    return _PIPELINE_CACHE[key][1]
 
 
 def _xor_fold(col):
@@ -2225,33 +2245,20 @@ def _xor_fold(col):
     return F.aggregate(col, F.lit(0).cast("long"), lambda a, x: a.bitwiseXOR(x))
 
 
-def _pipeline_tables(spark, sf_dir) -> dict:
-    """Shared access to the in-memory dedup pipeline's stage DataFrames.
+def _pipeline_tables(spark, sf_dir):
+    """The shared pipeline run's committed stage tables (`_pipeline_run`;
+    read each with `.df(spark, table)`).
 
     Materializes the NumPy oracle's stage tables for this sf first so the
-    DuckDB twins (oracle_sql) can read them when the driver runs them, then
-    builds the pipeline once per (session, sf_dir): the driver calls each
-    dedup_* query separately; the cached stage DataFrames (signatures/
-    candidates/verified are .cache()d inside run_in_memory) make every
-    subsequent consumer reuse the computation. Keyed by applicationId so a
-    restarted session never gets stale DataFrames bound to a stopped context.
-    """
+    DuckDB twins (oracle_sql) can read them when the driver runs them. The
+    driver calls each dedup_* query separately; every one reads the
+    tables the single run committed, so no stage is recomputed and no
+    relation stays cached between queries."""
     from dedup.config import DEFAULT
     from dedup.contract_oracle import ensure_cache
-    from dedup.pipeline import run_in_memory
-    from dedup.synth import load_pages_spark
 
     ensure_cache(sf_dir, DEFAULT)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PIPELINE_CACHE:
-        # evict entries from other (stopped/replaced) sessions: their
-        # DataFrames are unusable and would otherwise pin references
-        # for the life of a long-running service process
-        for stale in [k for k in _PIPELINE_CACHE if k[0] != key[0]]:
-            del _PIPELINE_CACHE[stale]
-        pages = load_pages_spark(spark, sf_dir)
-        _PIPELINE_CACHE[key] = run_in_memory(spark, pages, DEFAULT)
-    return _PIPELINE_CACHE[key]
+    return _pipeline_run(spark, sf_dir)
 
 
 def _dedup_stage(table: str):
@@ -2260,8 +2267,8 @@ def _dedup_stage(table: str):
 
         out = _pipeline_tables(spark, sf_dir)
         if table == "report":
-            return cluster_report(out["clusters"])
-        df = out[table]
+            return cluster_report(out.df(spark, "clusters"))
+        df = out.df(spark, table)
         if table == "signatures":
             df = df.select(
                 "url",
@@ -2314,7 +2321,7 @@ def _simhash_near_dup(spark, sf_dir):
     from dedup.stages import _simhash_combo_entries
 
     out = _pipeline_tables(spark, sf_dir)
-    sig = out["signatures"].select("url", "simhash")
+    sig = out.df(spark, "signatures").select("url", "simhash")
     ent = _simhash_combo_entries(sig, DEFAULT, carry=("simhash",)).select(
         "k1", "k2", F.struct("url", "simhash").alias("e")
     )
@@ -2362,7 +2369,7 @@ def _cross_dup_domains(spark, sf_dir):
             F.lit(""),
         )
 
-    dups = out["verified_pairs"].where(F.col("is_dup"))
+    dups = out.df(spark, "verified_pairs").where(F.col("is_dup"))
     hosts = dups.select(
         host("url_a").alias("ha"), host("url_b").alias("hb"), "sha_equal"
     )

@@ -148,12 +148,8 @@ def compact(
             view = wh.read(spark, table)
             for d in deltas:
                 view = view.unionByName(wh.read(spark, d))
-            wh.replace(
-                view,
-                table,
-                partition_by=(["warc_day"] if "warc_day" in view.columns else None),
-                includes=deltas,
-            )
+            view, by_day = stages.day_layout(view)
+            wh.replace(view, table, partition_by=by_day, includes=deltas)
             for d in deltas:
                 wh.unregister_delta(table, d)
             # this fold created the table's first generation? the plain
@@ -225,17 +221,16 @@ def _run_incremental_locked(
     if dup_urls.count() > 0:
         raise ValueError("new_pages contains urls already present in the base run")
 
-    def pages_with_day() -> DataFrame:
-        # delta pages mirror the base snapshot's warc_day partitioning so
-        # the unioned global view stays schema-identical and day-prunable
-        if "warc_day" in new_pages.columns or "warc_ts" not in new_pages.columns:
-            return new_pages
-        return new_pages.withColumn("warc_day", F.to_date("warc_ts"))
+    def commit_delta(table: str, df: DataFrame) -> DataFrame:
+        """Commit `df` as this increment's delta of `table`, register it
+        and read it back (pages keep the base's warc_day layout)."""
+        name = f"{table}_delta_{wh.run_id}"
+        df, by_day = stages.day_layout(df)
+        wh.write(df, name, partition_by=by_day)
+        wh.register_delta(table, name)
+        return wh.read(spark, name)
 
-    delta = f"delta_{wh.run_id}"
-    wh.write(pages_with_day(), f"pages_{delta}", partition_by=["warc_day"])
-    wh.register_delta("pages", f"pages_{delta}")
-    new_pages = wh.read(spark, f"pages_{delta}")
+    new_pages = commit_delta("pages", new_pages)
     # fused stage 1+2 on the new batch (same shape as pipeline.run): one
     # Arrow pass computes both deltas; buckets is a JVM explode of the
     # cached fused relation
@@ -244,13 +239,9 @@ def _run_incremental_locked(
     fused = stages.stage12_fused(new_pages, cfg).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    wh.write(stages.signatures_from_fused(fused), f"signatures_{delta}")
-    wh.register_delta("signatures", f"signatures_{delta}")
-    wh.write(stages.buckets_from_fused(fused), f"buckets_{delta}")
-    wh.register_delta("buckets", f"buckets_{delta}")
+    sig_new = commit_delta("signatures", stages.signatures_from_fused(fused))
+    buckets_new = commit_delta("buckets", stages.buckets_from_fused(fused))
     fused.unpersist()
-    sig_new = wh.read(spark, f"signatures_{delta}")
-    buckets_new = wh.read(spark, f"buckets_{delta}")
 
     sig_all = old_sigs.unionByName(sig_new)
     buckets_all = old_buckets.unionByName(buckets_new)
@@ -259,10 +250,10 @@ def _run_incremental_locked(
     cand = stages.stage3_candidates(
         sig_all, buckets_all, cfg, new_urls=sig_new.select("url")
     )
-    verified_new = stages.stage4_verify(cand.candidates, sig_all, pages_all, cfg)
-    wh.write(verified_new, f"verified_pairs_{delta}")
-    wh.register_delta("verified_pairs", f"verified_pairs_{delta}")
-    verified_new = wh.read(spark, f"verified_pairs_{delta}")
+    verified_new = commit_delta(
+        "verified_pairs",
+        stages.stage4_verify(cand.candidates, sig_all, pages_all, cfg),
+    )
     cand.entries.unpersist()
 
     # old components enter as one star per cluster — their transitive
@@ -281,14 +272,10 @@ def _run_incremental_locked(
     # — a crash mid-rewrite leaves the previous committed generation intact
     wh.replace(clusters, "clusters")
     clusters = wh.read(spark, "clusters")
-    canonical = stages.stage6_canonical(clusters, pages_all)
-    wh.replace(
-        canonical,
-        "canonical_pages",
-        partition_by=(
-            ["warc_day"] if "warc_day" in canonical.columns else None
-        ),
+    canonical, by_day = stages.day_layout(
+        stages.stage6_canonical(clusters, pages_all)
     )
+    wh.replace(canonical, "canonical_pages", partition_by=by_day)
 
     # last commit of the increment: mark it end-to-end complete so
     # compact() may fold its deltas (a crash before this line leaves the

@@ -29,6 +29,22 @@ from . import udfs
 
 
 # ---------------------------------------------------------------------------
+# table layout — the one warc_day partitioning rule
+# ---------------------------------------------------------------------------
+def day_layout(df: DataFrame) -> tuple[DataFrame, list[str] | None]:
+    """`df` and the partition columns to write it with: a table that
+    carries `warc_ts` is written partitioned by `warc_day` (added here when
+    absent) — the filesystem stand-in for Iceberg's days(warc_ts)
+    partition transform (SURVEY §2.7 F10), so incremental window reads
+    prune to the matching day directories (tests/test_partitioning.py)
+    and base and delta pages stay schema-identical. Other tables are
+    written unpartitioned."""
+    if "warc_day" not in df.columns and "warc_ts" in df.columns:
+        df = df.withColumn("warc_day", F.to_date("warc_ts"))
+    return df, (["warc_day"] if "warc_day" in df.columns else None)
+
+
+# ---------------------------------------------------------------------------
 # fused stage 1+2 — one Arrow pass emits signatures AND bucket entries
 # ---------------------------------------------------------------------------
 def stage12_fused(pages: DataFrame, cfg: DedupConfig) -> DataFrame:

@@ -22,13 +22,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from dedup.pipeline import TABLES
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", required=True, help="sf fixture dir (documents.parquet inside)")
     ap.add_argument("--warehouse", required=True)
     ap.add_argument("--replicate", type=int, default=1, help="corpus replication factor")
     ap.add_argument("--resume-run-id", default=None)
     ap.add_argument("--parallelism", type=int, default=None, help="local[N] when no cluster master")
-    ap.add_argument("--stop-after", default=None)
+    ap.add_argument("--stop-after", default=None, choices=TABLES)
     ap.add_argument("--config", default="default", choices=["default", "banding16"])
     ap.add_argument(
         "--target-file-mb", type=int, default=8,

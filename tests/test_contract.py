@@ -4,6 +4,7 @@ against its oracle_sql() DuckDB twin — the same check the driver applies.
 Non-SQL entries get the weaker rows>=0 + stable-schema check."""
 
 import math
+import os
 
 import duckdb
 import pandas as pd
@@ -876,6 +877,19 @@ def test_asof_join_tie_rule_is_inclusive(spark):
         for r in entry_mod._asof_join_over(ev).collect()
     }
     assert got == {2: (1, 0), 4: (3, 0)}
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_events_ts_and_event_id_unique(sf):
+    """asof_join_events and sessionize_events are deterministic only
+    because `events.ts` is unique (their min_by/max_by and window ties
+    never arise) — pin that fixture invariant, and event_id's, at every
+    scale factor."""
+    path = os.path.join(os.path.dirname(SF), sf, "events.parquet")
+    ev = pd.read_parquet(path, columns=["ts", "event_id"])
+    assert len(ev) > 0
+    assert ev["ts"].is_unique
+    assert ev["event_id"].is_unique
 
 
 def test_sessionize_events_matches_recomputation(spark):

@@ -41,8 +41,8 @@ def _table_pd(spark, res, name):
 
 @pytest.fixture(scope="module")
 def three_runs(spark, corpus_smoke, tmp_path_factory):
-    """(full run A, full run B, killed-then-resumed runs C and D)."""
-    roots = [str(tmp_path_factory.mktemp(f"wh_{i}")) for i in range(4)]
+    """(full run A, full run B, killed-then-resumed runs C, D and E)."""
+    roots = [str(tmp_path_factory.mktemp(f"wh_{i}")) for i in range(5)]
     pages = _pages_df(spark, corpus_smoke)
     a = pipeline.run(spark, pages, DEFAULT, roots[0])
     b = pipeline.run(spark, pages, DEFAULT, roots[1])
@@ -58,13 +58,18 @@ def three_runs(spark, corpus_smoke, tmp_path_factory):
     # committed but buckets not — it reruns stages 1+2 and commits buckets
     pipeline.run(spark, pages, DEFAULT, roots[3], stop_after="signatures")
     d = pipeline.run(spark, pages, DEFAULT, roots[3])
-    yield spark, a, b, c, d
+    # run E: stop after candidate_pairs, so the resume finds candidates
+    # committed but dropped_buckets not — it reruns stage 3 for the
+    # dropped-bucket report only
+    pipeline.run(spark, pages, DEFAULT, roots[4], stop_after="candidate_pairs")
+    e = pipeline.run(spark, pages, DEFAULT, roots[4])
+    yield spark, a, b, c, d, e
     for r in roots:
         shutil.rmtree(r, ignore_errors=True)
 
 
 def test_determinism_two_runs_identical(three_runs):
-    spark, a, b, _, _ = three_runs
+    spark, a, b, _, _, _ = three_runs
     for t in FINAL_TABLES:
         pd.testing.assert_frame_equal(
             _table_pd(spark, a, t), _table_pd(spark, b, t), check_dtype=False
@@ -72,12 +77,14 @@ def test_determinism_two_runs_identical(three_runs):
 
 
 def test_resume_equals_uninterrupted(three_runs):
-    spark, a, _, c, d = three_runs
+    spark, a, _, c, d, e = three_runs
     assert "signatures" in c.stages_skipped
     assert "candidate_pairs" in c.stages_run  # torn write was rebuilt
     assert "signatures" in d.stages_skipped
     assert "buckets" in d.stages_run
-    for resumed in (c, d):
+    assert "candidate_pairs" in e.stages_skipped
+    assert "dropped_buckets" in e.stages_run
+    for resumed in (c, d, e):
         for t in FINAL_TABLES:
             pd.testing.assert_frame_equal(
                 _table_pd(spark, a, t),
@@ -97,8 +104,18 @@ def test_config_change_invalidates_checkpoints(spark, corpus_smoke, tmp_path):
     assert "signatures" in res.stages_run  # not skipped despite existing dir
 
 
+def test_stop_after_rejects_unknown_table(tmp_path):
+    """A mistyped stop_after fails before the lease or any Spark work,
+    naming the valid tables (the pages argument is never touched)."""
+    with pytest.raises(ValueError, match="candidate_pairs") as exc:
+        pipeline.run(None, None, DEFAULT, str(tmp_path / "wh"), stop_after="candidates")
+    for name in pipeline.TABLES:
+        assert name in str(exc.value)
+    assert not (tmp_path / "wh").exists()
+
+
 def test_metrics_have_per_partition_rows(three_runs):
-    _, a, _, _, _ = three_runs
+    _, a, _, _, _, _ = three_runs
     rows = a.warehouse.read_metrics()
     stages = {m["stage"] for m in rows}
     assert {"signatures", "buckets", "clusters"} <= stages
