@@ -236,12 +236,16 @@ def _run_incremental_locked(
     # cached fused relation
     from pyspark import StorageLevel
 
+    # both caches are released on every way out: a failed delta write
+    # must not leave them pinned in a session that retries (streaming)
     fused = stages.stage12_fused(new_pages, cfg).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    sig_new = commit_delta("signatures", stages.signatures_from_fused(fused))
-    buckets_new = commit_delta("buckets", stages.buckets_from_fused(fused))
-    fused.unpersist()
+    try:
+        sig_new = commit_delta("signatures", stages.signatures_from_fused(fused))
+        buckets_new = commit_delta("buckets", stages.buckets_from_fused(fused))
+    finally:
+        fused.unpersist()
 
     sig_all = old_sigs.unionByName(sig_new)
     buckets_all = old_buckets.unionByName(buckets_new)
@@ -250,11 +254,13 @@ def _run_incremental_locked(
     cand = stages.stage3_candidates(
         sig_all, buckets_all, cfg, new_urls=sig_new.select("url")
     )
-    verified_new = commit_delta(
-        "verified_pairs",
-        stages.stage4_verify(cand.candidates, sig_all, pages_all, cfg),
-    )
-    cand.entries.unpersist()
+    try:
+        verified_new = commit_delta(
+            "verified_pairs",
+            stages.stage4_verify(cand.candidates, sig_all, pages_all, cfg),
+        )
+    finally:
+        cand.entries.unpersist()
 
     # old components enter as one star per cluster — their transitive
     # closure, so CC input is |old urls in clusters| + |new dup pairs|

@@ -132,59 +132,29 @@ def _simhash_combo_entries(
     ).select(F.col("b.k1").alias("k1"), F.col("b.k2").alias("k2"), "url", *carry)
 
 
-def _dense_url_ids(urls: DataFrame) -> DataFrame:
-    """(url) -> (url, uid): dense 0-based ids ordered by url, so uid
-    comparisons and min-uid aggregates are isomorphic to their url forms
-    (the canonical-pair `<` and the sha tier's min-root survive encoding
-    unchanged).
+def _url_ids(urls: DataFrame) -> DataFrame:
+    """(url) -> (url, uid): one unique long id per distinct url, in ONE
+    eager job (the distinct's shuffle + monotonically_increasing_id).
 
     Why ids: stage 3 shuffles the entries relation (~64 rows/doc) and the
     candidate-pair aggregate; an 8-byte long in place of a ~50-byte url
     string roughly halves the bytes of the two biggest shuffles in the
     pipeline and makes their sort/compare keys fixed-width. Encode/decode
-    joins ride AQE (the dictionary side broadcasts at fixture scale; at
-    10^12 docs a deployment materializes the dictionary once at stage-1
-    commit and bucket-aligns it instead of rebuilding per run —
-    docs/SCALE.md).
+    joins ride AQE (the map broadcasts at fixture scale; at 10^12 docs a
+    deployment materializes ids once at stage-1 commit and bucket-aligns
+    them instead of rebuilding per run — docs/SCALE.md).
 
-    Assignment is partition-parallel (range-partition by url, offsets
-    from per-partition counts, row_number within partition) — NOT a
-    single-partition global window, which would serialize at scale. The
-    map is a pure function of the url SET: range bounds move partition
-    boundaries, never the global sort order, so ids are deterministic
-    across runs, parallelism levels, and task retries."""
-    from pyspark.sql import Window
-
-    n_part = max(2, urls.sparkSession.sparkContext.defaultParallelism)
-    s = (
+    The ids are unique but neither dense nor url-ordered, and they never
+    leave stage 3: every url-order rule (pair orientation, the sha root)
+    compares urls. The eager localCheckpoint freezes the map, so every
+    consumer (three encode joins, the sha tier, both decode sides) sees
+    the same ids — a recomputed monotonically_increasing_id depends on
+    the distinct's partition layout."""
+    return (
         urls.distinct()
-        .repartitionByRange(n_part, "url")
-        .withColumn("pid", F.spark_partition_id())
-        # eager localCheckpoint: ONE materialization of the range shuffle.
-        # Without it the counts job and the consuming plan would each
-        # re-run repartitionByRange with independently SAMPLED bounds,
-        # and offsets computed from one partitioning would be applied to
-        # the other — colliding ids. (Same lineage-freeze pattern as the
-        # CC iterations, dedup/cc.py.)
+        .select("url", F.monotonically_increasing_id().alias("uid"))
         .localCheckpoint()
     )
-    cnts = {r["pid"]: r["count"] for r in s.groupBy("pid").count().collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(cnts):
-        offsets[pid] = acc
-        acc += cnts[pid]
-    omap = F.create_map(
-        *[F.lit(v) for kv in sorted(offsets.items()) for v in kv]
-    )
-    w = Window.partitionBy("pid").orderBy("url")
-    # checkpoint the FINAL projection too: stage 3 plugs the dictionary
-    # into ~6 subtrees (three generator encodes, the sha tier, both
-    # decode sides); without this each consumer re-runs the row_number
-    # window's exchange+sort over the whole url set.
-    return s.select(
-        "url",
-        (F.row_number().over(w) - 1 + omap[F.col("pid")]).alias("uid"),
-    ).localCheckpoint()
 
 
 def stage3_candidates(
@@ -203,13 +173,13 @@ def stage3_candidates(
 
     The three capped generators (lsh buckets, simhash combo keys, winnow
     fingerprints) normalize to a single entries relation
-    (gen, k1 int, k2 long, uid long, is_probe) — uid is a dense url id
-    (see _dense_url_ids), so every shuffle in this stage moves fixed-width
-    longs, not url strings — and share ONE window count -> cap filter ->
-    collect_list -> explode pipeline. The window's exchange is the only
-    shuffle of the entries relation: collect_list reuses its hash
-    partitioning. The sha tier stays separate (star pairs are linear and
-    skew-proof, no cap needed).
+    (g tinyint, k1 int, k2 long, uid long, is_probe, is_new) — uid is a
+    stage-local url id (see _url_ids), so every shuffle in this stage
+    moves fixed-width longs, not url strings. The entries relation costs
+    ONE shuffle: an explicit hash repartition on (g, k1, k2), which the
+    lsh (key, uid) dedup, the window count, the cap filter's
+    collect_list and the dropped-bucket report all reuse. The sha tier
+    stays separate (star pairs are linear and skew-proof, no cap needed).
 
     Skew defense (A1): the cap filter drops hot-bucket rows BEFORE
     collect_list, so no task ever materializes an oversized member list;
@@ -218,22 +188,21 @@ def stage3_candidates(
     """
     from pyspark import StorageLevel
 
-    # URL -> dense-id encode FIRST: every url in buckets/signatures
-    # appears in the signatures relation (incremental passes the
-    # base+delta union), so one dictionary covers all three generators
-    # and the sha tier. The encode joins are map-side at fixture scale
-    # (AQE broadcasts the dictionary) and every shuffle in this stage —
-    # the lsh J2 dedup, the entries window, the pair distinct —
-    # then moves 8-byte longs instead of url strings; pairs decode back
-    # to urls once, after the cap and the distinct. is_new rides the
-    # dictionary row, so the incremental mark costs no extra join over
-    # entries.
+    # URL -> id encode FIRST: every url in buckets/signatures appears in
+    # the signatures relation (incremental passes the base+delta union),
+    # so one id map covers all three generators and the sha tier. The
+    # encode joins are map-side at fixture scale (AQE broadcasts the map)
+    # and every shuffle in this stage — the entries exchange, the pair
+    # distinct — then moves 8-byte longs instead of url strings; pairs
+    # decode back to urls once, after the cap and the distinct. is_new
+    # rides the id-map row, so the incremental mark costs no extra join
+    # over entries.
     marks = (
         new_urls.select("url").withColumn("is_new", F.lit(True))
         if new_urls is not None
         else None
     )
-    ids = _dense_url_ids(signatures.select("url"))
+    ids = _url_ids(signatures.select("url"))
     if marks is not None:
         ids = ids.join(marks, "url", "left").withColumn(
             "is_new", F.coalesce("is_new", F.lit(False))
@@ -241,10 +210,6 @@ def stage3_candidates(
     else:
         ids = ids.withColumn("is_new", F.lit(True))
 
-    # (a) LSH home+probe buckets. Dedup (band, key, uid) with the home row
-    # winning (min over boolean: false < true) — J2 semantics; this
-    # groupBy shuffles encoded rows (is_new is per-uid constant, so max
-    # is just "carry it through the agg").
     # Generator codes (tinyint, decoded only in the tiny dropped/sources
     # outputs) keep the entries shuffle key fully numeric: (g, k1, k2,
     # uid) sorts/compares as fixed-width machine words, no string keys
@@ -253,25 +218,17 @@ def stage3_candidates(
     # order of source names ('lsh','sha','simhash','winnow'), so sorting
     # codes before decoding equals sorting names.
     GEN_NAMES = F.array(F.lit("lsh"), F.lit("simhash"), F.lit("winnow"))
-    lsh_entries = (
-        buckets.join(ids, "url")
-        .groupBy("band", "bucket_key", "uid")
-        .agg(
-            F.min("is_probe").alias("is_probe"),
-            F.max("is_new").alias("is_new"),
-        )
-        .select(
-            F.lit(0).cast("tinyint").alias("g"),
-            F.col("band").alias("k1"),
-            F.col("bucket_key").alias("k2"),
-            "uid",
-            "is_probe",
-            "is_new",
-        )
+    # (a) LSH home+probe bucket rows, raw: a doc can hit one (band, key)
+    # as home and as probe(s); the (key, uid) dedup below keeps one row.
+    lsh_entries = buckets.join(ids, "url").select(
+        F.lit(0).cast("tinyint").alias("g"),
+        F.col("band").alias("k1"),
+        F.col("bucket_key").alias("k2"),
+        "uid", "is_probe", "is_new",
     )
     # (c) simhash combination keys, (d) winnow fingerprints (distinct per
     # doc via np.unique in the kernel, so count(*) == distinct urls).
-    # Both encode map-side (broadcast dict); at 10^12 docs a deployment
+    # Both encode map-side (broadcast map); at 10^12 docs a deployment
     # materializes uids into the committed tables at stage-1 commit so
     # these joins disappear entirely (docs/SCALE.md).
     sim_entries = _simhash_combo_entries(signatures, cfg).join(ids, "url").select(
@@ -285,11 +242,16 @@ def stage3_candidates(
         F.explode("fingerprints").alias("k2"),
         F.lit(False).alias("is_probe"),
     ).join(ids, "url").select("g", "k1", "k2", "uid", "is_probe", "is_new")
-    # The window count marks every row with its key's cardinality; the
-    # collect_list groupBy reuses the window's HashPartitioning(keys), so
-    # EnsureRequirements inserts no second exchange. The marked relation
-    # is persisted (spilling): consumed by the collect_list pass and by
-    # the dropped_buckets action.
+    # ONE exchange: hash-partition the raw union on the key. The
+    # (g, k1, k2, uid) dedup — J2 semantics, the home row wins (min over
+    # boolean: false < true); is_new is per-uid constant, so max just
+    # carries it — and the window partitioned by the key both accept
+    # HashPartitioning(g, k1, k2), so EnsureRequirements adds no further
+    # exchange, and neither does the collect_list groupBy below. The
+    # dedup is a no-op for simhash and winnow rows: their keys are
+    # already distinct per doc (one combo id each; np.unique'd
+    # fingerprints). The marked relation is persisted (spilling):
+    # consumed by the collect_list pass and by the dropped_buckets action.
     # Scale note: at the 100 TB design point the entries relation (~64
     # rows/doc) exceeds any executor-storage budget — there a deployment
     # flips this to no-persist and lets both passes recompute from the
@@ -301,6 +263,12 @@ def stage3_candidates(
     entries = (
         lsh_entries.unionByName(sim_entries)
         .unionByName(fp_entries)
+        .repartition(*keys)
+        .groupBy(*keys, "uid")
+        .agg(
+            F.min("is_probe").alias("is_probe"),
+            F.max("is_new").alias("is_new"),
+        )
         .withColumn("n", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -328,10 +296,10 @@ def stage3_candidates(
     )
     # Pair explosion stays JVM-side (double explode inside whole-stage
     # codegen — no Arrow round-trip): a bucket of n members -> n^2 generated
-    # rows filtered to canonical pairs, bounded by max_bucket. The
-    # probe-probe exclusion ([MPLSH] J2: the index stores home buckets,
-    # perturbation applies to queries) only bites for gen='lsh' — other
-    # generators have is_probe=false everywhere.
+    # rows filtered to one row per unordered pair (uid_a < uid_b), bounded
+    # by max_bucket. The probe-probe exclusion ([MPLSH] J2: the index
+    # stores home buckets, perturbation applies to queries) only bites for
+    # gen='lsh' — other generators have is_probe=false everywhere.
     # source codes ordered like the source names sort: lsh=0 sha=1
     # simhash=2 winnow=3 (g 0/1/2 -> s 0/2/3)
     SRC_NAMES = F.array(
@@ -355,46 +323,51 @@ def stage3_candidates(
     )
 
     # (b) exact tier: identical text_sha -> star pairs, in id space. The
-    # root = min-uid member == min-url member (uid/url order isomorphism);
-    # min over a (uid, is_new) struct carries the root's incremental mark
-    # without a join back.
+    # root is the min-URL member (ids carry no url order): min over a
+    # (url, uid, is_new) struct picks it and carries its id and
+    # incremental mark without a join back. Star pairs are oriented
+    # (least, greatest) by id, like the bucket pairs, so a pair found by
+    # both tiers meets in the one (uid_a, uid_b) distinct below.
     sha_members = (
         signatures.select("text_sha", "url")
         .join(ids, "url")
-        .select("text_sha", "uid", "is_new")
+        .select("text_sha", "url", "uid", "is_new")
     )
     sha_roots = (
         sha_members.groupBy("text_sha")
         .agg(
-            F.min(F.struct("uid", "is_new")).alias("r"),
+            F.min(F.struct("url", "uid", "is_new")).alias("r"),
             F.count("*").alias("n"),
         )
         .filter(F.col("n") >= 2)
-        .select("text_sha", F.col("r.uid").alias("uid_a"), F.col("r.is_new").alias("_na"))
+        .select("text_sha", F.col("r.uid").alias("root"), F.col("r.is_new").alias("_na"))
     )
     sha_pairs = (
         sha_members.join(sha_roots, "text_sha")
-        .filter(F.col("uid") != F.col("uid_a"))
+        .filter(F.col("uid") != F.col("root"))
         .filter(F.col("_na") | F.col("is_new"))
-        .select("uid_a", F.col("uid").alias("uid_b"))
-        .withColumn("s", F.lit(1).cast("tinyint"))
+        .select(
+            F.least("uid", "root").alias("uid_a"),
+            F.greatest("uid", "root").alias("uid_b"),
+            F.lit(1).cast("tinyint").alias("s"),
+        )
     )
 
     # distinct + sources agg on fixed-width (long, long, tinyint) rows,
-    # THEN one decode join back to urls (uid order == url order keeps
-    # url_a < url_b) and one code->name transform (code order == name
-    # order, so sorting before decoding is sorting the names).
+    # THEN one decode join back to urls, oriented url_a < url_b there (id
+    # order is not url order), and one code->name transform (code order
+    # == name order, so sorting before decoding is sorting the names).
     cand_ids = pairs.unionByName(sha_pairs).groupBy("uid_a", "uid_b").agg(
         F.array_sort(F.collect_set("s")).alias("srcs")
     )
-    dict_a = ids.select(F.col("uid").alias("uid_a"), F.col("url").alias("url_a"))
-    dict_b = ids.select(F.col("uid").alias("uid_b"), F.col("url").alias("url_b"))
+    dict_a = ids.select(F.col("uid").alias("uid_a"), F.col("url").alias("u_a"))
+    dict_b = ids.select(F.col("uid").alias("uid_b"), F.col("url").alias("u_b"))
     candidates = (
         cand_ids.join(dict_a, "uid_a")
         .join(dict_b, "uid_b")
         .select(
-            "url_a",
-            "url_b",
+            F.least("u_a", "u_b").alias("url_a"),
+            F.greatest("u_a", "u_b").alias("url_b"),
             F.array_join(
                 F.transform(
                     "srcs", lambda s: F.element_at(SRC_NAMES, s + 1)

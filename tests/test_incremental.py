@@ -120,6 +120,33 @@ def test_incremental_rejects_nonalphanumeric_run_id(
             run_incremental(spark, new_df, DEFAULT, wh, run_id=bad)
 
 
+@pytest.mark.parametrize("fail_on", ["buckets", "verified_pairs"])
+def test_failed_delta_write_releases_caches(
+    spark, split_corpus, tmp_path_factory, monkeypatch, fail_on
+):
+    """A delta write that raises must not leave the fused or stage-3
+    entries caches pinned in the session (a streaming retry reuses it)."""
+    from dedup.catalog import Warehouse
+
+    base_pd, new_pd = split_corpus
+    wh = str(tmp_path_factory.mktemp(f"wh_fail_{fail_on}"))
+    run(spark, spark.createDataFrame(base_pd, schema=pages_schema()), DEFAULT, wh)
+
+    real_write = Warehouse.write
+
+    def failing_write(self, df, name, *args, **kwargs):
+        if name.startswith(f"{fail_on}_delta_"):
+            raise OSError(f"forged write failure: {name}")
+        return real_write(self, df, name, *args, **kwargs)
+
+    monkeypatch.setattr(Warehouse, "write", failing_write)
+    spark.catalog.clearCache()
+    new_df = spark.createDataFrame(new_pd, schema=pages_schema())
+    with pytest.raises(OSError, match="forged"):
+        run_incremental(spark, new_df, DEFAULT, wh, run_id=f"fail{fail_on[0]}")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_increment_replaces_globals_atomically(runs, tmp_path_factory):
     """After an increment, the global clusters/canonical tables live in a
     pointer-resolved generation directory; the base run's directory is

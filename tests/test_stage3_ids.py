@@ -1,0 +1,107 @@
+"""Stage 3's url-id map (stages._url_ids) and the entries exchange: ids
+are unique and frozen, the entries relation costs one shuffle, and no
+output depends on id order matching url order."""
+
+import re
+
+import pandas as pd
+import pytest
+
+from dedup import stages
+from dedup.config import DEFAULT
+from dedup.oracle import run_oracle
+from dedup.synth import pages_schema
+
+
+@pytest.fixture(scope="module")
+def sig_buckets(spark, corpus_smoke):
+    pages = spark.createDataFrame(corpus_smoke.pages, schema=pages_schema())
+    fused = stages.stage12_fused(pages, DEFAULT).cache()
+    yield (
+        stages.signatures_from_fused(fused),
+        stages.buckets_from_fused(fused),
+    )
+    fused.unpersist()
+
+
+def test_url_ids_unique_and_frozen(spark):
+    """One id per distinct url (duplicates in, one row out), and the
+    checkpointed map answers every read with the same ids."""
+    urls = [f"https://s{i % 7}.example.com/d/{i % 600:05d}" for i in range(977)]
+    df = spark.createDataFrame([(u,) for u in urls], "url string").repartition(13)
+    ids = stages._url_ids(df)
+    first = ids.collect()
+    m1 = {r["url"]: r["uid"] for r in first}
+    m2 = {r["url"]: r["uid"] for r in ids.collect()}
+    assert len(first) == len(set(urls))
+    assert set(m1) == set(urls)
+    assert len(set(m1.values())) == len(m1)
+    assert m1 == m2
+
+
+def _exchanges(df) -> list[str]:
+    """The `Exchange hashpartitioning(...)` key lists of the physical plan
+    that materialized the persisted `df` (AQE's final plan)."""
+    scan = df._jdf.queryExecution().executedPlan().executedPlan()
+    plan = scan.relation().cachedPlan().executedPlan().toString()
+    return re.findall(r"Exchange hashpartitioning\(([^)]*)\)", plan)
+
+
+def test_entries_cost_one_exchange(sig_buckets):
+    """The lsh (key, uid) dedup and the window count share ONE hash
+    exchange on (g, k1, k2): the (band, key, uid) pre-aggregation's own
+    shuffle must not come back."""
+    sigs, buckets = sig_buckets
+    out = stages.stage3_candidates(sigs, buckets, DEFAULT)
+    try:
+        assert out.entries.count() > 0
+        keys = _exchanges(out.entries)
+        assert len(keys) == 1, keys
+        cols = [re.sub(r"#\d+L?$", "", k.strip()) for k in keys[0].split(",")]
+        assert cols[:-1] == ["g", "k1", "k2"]  # the last item is the count
+    finally:
+        out.entries.unpersist()
+
+
+def test_outputs_ignore_id_order(spark, sig_buckets, corpus_smoke, monkeypatch):
+    """With ids assigned in DESCENDING url order, candidates still come out
+    as url_a < url_b, sha stars still root at the min url, and the
+    candidate set equals the oracle's."""
+    sigs, buckets = sig_buckets
+
+    def descending_ids(urls):
+        ordered = sorted({r["url"] for r in urls.collect()}, reverse=True)
+        return spark.createDataFrame(
+            list(enumerate(ordered)), "uid long, url string"
+        ).coalesce(1).localCheckpoint()
+
+    monkeypatch.setattr(stages, "_url_ids", descending_ids)
+    out = stages.stage3_candidates(sigs, buckets, DEFAULT)
+    try:
+        got = out.candidates.toPandas()
+    finally:
+        out.entries.unpersist()
+
+    assert (got["url_a"] < got["url_b"]).all()
+
+    sha = sigs.select("url", "text_sha").toPandas()
+    root = sha.groupby("text_sha")["url"].transform("min")
+    sha = sha[sha.groupby("text_sha")["url"].transform("size") >= 2]
+    want_stars = {
+        (r, u) for u, r in zip(sha["url"], root[sha.index]) if u != r
+    }
+    got_stars = {
+        (a, b)
+        for a, b, s in got[["url_a", "url_b", "sources"]].values.tolist()
+        if "sha" in s.split(",")
+    }
+    assert want_stars, "fixture should plant exact-duplicate texts"
+    assert got_stars == want_stars
+
+    cols = ["url_a", "url_b", "sources"]
+    want = run_oracle(corpus_smoke.pages, DEFAULT).candidates
+    pd.testing.assert_frame_equal(
+        got.sort_values(cols, ignore_index=True)[cols],
+        want.sort_values(cols, ignore_index=True)[cols],
+        check_dtype=False,
+    )
