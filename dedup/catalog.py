@@ -503,6 +503,3 @@ class Warehouse:
         df.coalesce(1).write.mode("append").parquet(
             os.path.join(self.root, self.METRICS_TABLE)
         )
-
-    def read_metrics_table(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(os.path.join(self.root, self.METRICS_TABLE))

@@ -4,6 +4,9 @@ This module is the parity anchor (SURVEY.md §0.2): both `dedup/oracle.py`
 (single-process reference) and `dedup/udfs.py` (distributed pipeline) call
 these exact functions, so MinHash signatures, band keys, probe sequences,
 SimHash values and winnowing fingerprints agree bit-for-bit by construction.
+The multi-probe heap (`probe_order`) and the compound-key fold (`key_hash`)
+are also the ones dedup/mplsh.py's p-stable tables use: one implementation
+of each multi-probe LSH primitive.
 
 Math sources (public):
   - FNV-1a 64-bit: public-domain Fowler–Noll–Vo spec.
@@ -12,6 +15,8 @@ Math sources (public):
   - Multi-probe sequence: Lv et al., "Multi-Probe LSH", VLDB 2007, §4.1
     (expand/shift heap over sorted perturbation scores). The reference repo
     (/root/reference/README.md:1) names exactly this algorithm.
+  - Compound bucket keys: Datar et al. [E2LSH], SoCG 2004 (one key per
+    band/table concatenates its hash values; here folded by FNV-1a).
   - SimHash: Charikar, STOC 2002.
   - Winnowing: Schleimer, Wilkerson, Aiken, SIGMOD 2003 (guarantee: any
     shared substring of length >= w + k - 1 shares a selected fingerprint).
@@ -24,6 +29,7 @@ from __future__ import annotations
 
 import hashlib
 import heapq
+import itertools
 import re
 
 import numpy as np
@@ -347,6 +353,19 @@ def _fnv_absorb_u64(h: np.ndarray, vals: np.ndarray) -> np.ndarray:
     return h
 
 
+def key_hash(ids: np.ndarray, vals: np.ndarray) -> np.ndarray:
+    """Compound-key FNV-1a fold ([E2LSH] keys as one 64-bit value): per
+    row, absorb the id (band or table index) and then each value of
+    `vals` in column order, little-endian bytes. ids (P,), vals integer
+    (P, R) -> uint64 (P,). The one fold behind MinHash band keys, their
+    multi-probe keys and the p-stable table keys (dedup/mplsh.py)."""
+    h = np.full(len(ids), FNV_OFFSET, dtype=np.uint64)
+    h = _fnv_absorb_u64(h, np.asarray(ids, dtype=np.uint64))
+    for j in range(vals.shape[1]):
+        h = _fnv_absorb_u64(h, vals[:, j])
+    return h
+
+
 def band_keys(sig: np.ndarray, bands: int, rows: int) -> np.ndarray:
     """Bucket key per band for ONE signature (K,) → uint64 (bands,)."""
     return band_keys_batch(sig[None, :], bands, rows)[0]
@@ -356,19 +375,39 @@ def band_keys_batch(sigs: np.ndarray, bands: int, rows: int) -> np.ndarray:
     """Bucket keys for a batch: sigs uint64 (N, K) → uint64 (N, bands)."""
     sigs = np.asarray(sigs, dtype=np.uint64)
     n = sigs.shape[0]
-    out = np.empty((n, bands), dtype=np.uint64)
-    for band in range(bands):
-        h = np.full(n, FNV_OFFSET, dtype=np.uint64)
-        h = _fnv_absorb_u64(h, np.full(n, np.uint64(band)))
-        for r in range(rows):
-            h = _fnv_absorb_u64(h, sigs[:, band * rows + r])
-        out[:, band] = h
-    return out
+    ids = np.tile(np.arange(bands, dtype=np.uint64), n)
+    slices = sigs[:, : bands * rows].reshape(n * bands, rows)
+    return key_hash(ids, slices).reshape(n, bands)
 
 
 # ---------------------------------------------------------------------------
 # multi-probe perturbation sequence ([MPLSH §4.1] expand/shift heap)
 # ---------------------------------------------------------------------------
+def probe_order(z):
+    """Every nonempty set of positions into `z` (perturbation costs sorted
+    ascending, all >= 0), as sorted position tuples in ascending total
+    cost; equal totals come out in tuple order.
+
+    [MPLSH §4.1] expand/shift heap: start with {0}; pop the min-score set
+    S, yield it, push shift(S) (replace its max j with j+1) and expand(S)
+    (add j+1). Each set has exactly one parent, so no set is pushed twice.
+    Lazy: a caller that stops early never pays for the rest. The one heap
+    behind MinHash band probes (probe_sets) and p-stable probes
+    (dedup/mplsh.py probe_sets_pstable).
+    """
+    m = len(z)
+    if not m:
+        return
+    heap = [(z[0], (0,))]
+    while heap:
+        score, s = heapq.heappop(heap)
+        yield s
+        j = s[-1]
+        if j + 1 < m:
+            heapq.heappush(heap, (score - z[j] + z[j + 1], s[:-1] + (j + 1,)))
+            heapq.heappush(heap, (score + z[j + 1], s + (j + 1,)))
+
+
 def probe_sets(gaps, t_probes: int) -> list[tuple[int, ...]]:
     """First (t_probes - 1) perturbation sets in ascending-score order.
 
@@ -376,47 +415,26 @@ def probe_sets(gaps, t_probes: int) -> list[tuple[int, ...]]:
           numpy array or list of ints. Rows with gap == 0 are excluded
           (perturbing them reproduces the home key).
     Returns a list of tuples of ORIGINAL row indices (within the band),
-    in exact probe order. Deterministic: ties broken by the sorted-index
-    tuple itself.
+    in exact probe order (probe_order over the sorted gaps). Deterministic:
+    ties broken by the sorted-index tuple itself.
 
-    Algorithm per [MPLSH §4.1]: sort costs ascending (z_1..z_m); start the
-    heap with {1}; pop the min-score set S, emit it, push shift(S) (replace
-    max element j with j+1) and expand(S) (add j+1).
-
-    Implementation is pure Python on purpose: numpy call overhead dominates
-    16-element arrays. sorted((gap, idx)) matches the former
-    np.lexsort((idx, gaps)) order; float() and np.float64 are the same
-    IEEE double, so scores and heap order are bit-identical.
+    Pure Python on purpose: numpy call overhead dominates 16-element
+    arrays. sorted((gap, idx)) matches the former np.lexsort((idx, gaps))
+    order; float() and np.float64 are the same IEEE double, so scores and
+    heap order are bit-identical.
     """
     if isinstance(gaps, np.ndarray):
         gaps = gaps.tolist()
     if t_probes <= 1:
         return []
     order = sorted((g, i) for i, g in enumerate(gaps) if g > 0)
-    if not order:
-        return []
-    z = [float(g) for g, _ in order]
     idx = [i for _, i in order]
-    m = len(order)
-
-    out: list[tuple[int, ...]] = []
-    # heap entries: (score, sorted-positions tuple)
-    heap: list[tuple[float, tuple[int, ...]]] = [(z[0], (0,))]
-    seen = {(0,)}
-    while heap and len(out) < t_probes - 1:
-        score, s = heapq.heappop(heap)
-        out.append(tuple(sorted(idx[p] for p in s)))
-        j = s[-1]
-        if j + 1 < m:
-            shift = s[:-1] + (j + 1,)
-            if shift not in seen:
-                seen.add(shift)
-                heapq.heappush(heap, (score - z[j] + z[j + 1], shift))
-            expand = s + (j + 1,)
-            if expand not in seen:
-                seen.add(expand)
-                heapq.heappush(heap, (score + z[j + 1], expand))
-    return out
+    return [
+        tuple(sorted(idx[p] for p in s))
+        for s in itertools.islice(
+            probe_order([float(g) for g, _ in order]), t_probes - 1
+        )
+    ]
 
 
 def probe_keys_batch(
@@ -431,9 +449,8 @@ def probe_keys_batch(
     minh_mat/run_mat: uint64 (N, K). Returns (doc_idx, band, rank, key)
     arrays; rank starts at 1 (rank 0 = home bucket, from band_keys_batch).
     Probe-set generation is per (doc, band) — a tiny pure-Python heap —
-    but all slice hashing happens in ONE vectorized FNV pass over an
-    (M, rows) matrix, absorbing the per-row band id first, exactly like
-    band_keys does for home buckets.
+    but all slice hashing happens in ONE key_hash pass over the stacked
+    (M, rows) slices, exactly like band_keys_batch does for home buckets.
     """
     n = minh_mat.shape[0]
     slices: list[np.ndarray] = []
@@ -458,17 +475,12 @@ def probe_keys_batch(
     if not slices:
         e_i = np.empty(0, dtype=np.int64)
         return e_i, e_i.copy(), e_i.copy(), np.empty(0, dtype=np.uint64)
-    mat = np.vstack(slices)
-    band_arr = np.array(meta_band, dtype=np.uint64)
-    h = np.full(mat.shape[0], FNV_OFFSET, dtype=np.uint64)
-    h = _fnv_absorb_u64(h, band_arr)
-    for rr in range(rows):
-        h = _fnv_absorb_u64(h, mat[:, rr])
+    band_arr = np.array(meta_band, dtype=np.int64)
     return (
         np.array(meta_doc, dtype=np.int64),
-        band_arr.astype(np.int64),
+        band_arr,
         np.array(meta_rank, dtype=np.int64),
-        h,
+        key_hash(band_arr, np.vstack(slices)),
     )
 
 
@@ -528,8 +540,6 @@ def simhash_combo_keys(
     concatenates the chosen block values (MSB = lowest block index), which
     fits a signed 64-bit long for any combo of <= 5 blocks of 64 bits.
     """
-    import itertools
-
     blocks = simhash_blocks(sim, widths)
     out = []
     for cid, idxs in enumerate(itertools.combinations(range(len(widths)), combo)):

@@ -9,7 +9,8 @@ centroids, store each vector in its nearest centroid's posting list, and
 answer a query by scanning only the lists of its n_probe nearest
 centroids, then re-ranking candidates by exact distance.
 
-Spark mapping (same shapes as dedup/mplsh.py):
+Spark mapping (dedup/mplsh.py's shapes; the bucket join is its
+`bucket_topk` over centroid-id keys):
   - centroid TRAINING runs single-process NumPy on a small deterministic
     sample (vec_id < sample_cap) collected to the driver — at any scale
     the training sample is bounded and tiny next to the corpus, which is
@@ -41,6 +42,8 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+
+from .mplsh import KEY_SCHEMA, bucket_topk
 
 
 @dataclass(frozen=True)
@@ -219,21 +222,14 @@ def ivf_topk(emb_df, cfg: IvfConfig, k: int = 5, query_filter=None):
     The training sample (vec_id < sample_cap) is collected to the driver
     — bounded, seed-deterministic, and sorted by vec_id so the sample
     matrix is independent of scan order. Everything after that is the
-    mplsh_topk plan shape: narrow Arrow projections to (id, cid), hot-list
-    cap before the join, distinct candidate pairs, JVM exact re-rank.
+    narrow Arrow projections to (vec_id, key) rows, the key being a
+    centroid id, and mplsh.bucket_topk: hot-list cap before the join,
+    distinct candidate pairs, JVM exact re-rank.
     """
     import pandas as pd
-    from pyspark.sql import Window, functions as F, types as T
 
     narrow = emb_df.select("vec_id", "embedding")
     C = train_from_df(narrow, cfg)
-
-    key_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType(), False),
-            T.StructField("cid", T.LongType(), False),
-        ]
-    )
 
     def query_fn(batches):
         for pdf in batches:
@@ -245,52 +241,15 @@ def ivf_topk(emb_df, cfg: IvfConfig, k: int = 5, query_filter=None):
             yield pd.DataFrame(
                 {
                     "vec_id": np.repeat(pdf["vec_id"].to_numpy(), n_p),
-                    "cid": probes.ravel(),
+                    "key": probes.ravel(),
                 }
             )
 
-    idx = assign_df(narrow, C)
     qsrc = narrow if query_filter is None else narrow.filter(query_filter)
-    qprobes = qsrc.mapInPandas(query_fn, key_schema).withColumnRenamed(
-        "vec_id", "query_id"
-    )
-    ok_lists = (
-        idx.groupBy("cid").count()
-        .filter(F.col("count") <= cfg.max_list)
-        .select("cid")
-    )
-    cand = (
-        qprobes.join(idx.join(ok_lists, "cid", "left_semi"), "cid")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", "vec_id")
-        .distinct()
-    )
-    ea = emb_df.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    eb = emb_df.select("vec_id", F.col("embedding").alias("ne"))
-    dist = F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                "qe",
-                "ne",
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy("dist_exact", "vec_id")
-    return (
-        cand.join(ea, "query_id")
-        .join(eb, "vec_id")
-        .select("query_id", "vec_id", dist.alias("dist_exact"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round("dist_exact", 5).alias("dist"),
-        )
+    return bucket_topk(
+        emb_df,
+        assign_df(narrow, C).withColumnRenamed("cid", "key"),
+        qsrc.mapInPandas(query_fn, KEY_SCHEMA),
+        cfg.max_list,
+        k,
     )

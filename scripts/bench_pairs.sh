@@ -3,14 +3,14 @@
 #
 #   scripts/bench_pairs.sh <parent-rev> <workload> <seed> [<seed> ...]
 #
-# Checks <parent-rev> out into a temporary git worktree, then for each seed
-# runs `python3 perfbench/run.py --trace 0` once in the worktree and once in
+# Exports <parent-rev> into a temporary directory (git archive), then for
+# each seed runs `python3 perfbench/run.py --trace 0` once there and once in
 # the working tree, flipping which side goes first on every seed so slow
 # drift of the host falls on both sides alike. Runs are sequential; each
 # takes about a minute. Prints, per end-to-end metric of BENCHMARK.json,
 # both sides' medians and quartiles and the number of seeds the change
-# won, then every run's correct/failed counts. The worktree and the run
-# logs are removed at exit.
+# won, then every run's correct/failed counts. The exported tree and the
+# run logs are removed at exit (mktemp honours TMPDIR).
 set -euo pipefail
 
 if [[ $# -lt 3 ]]; then
@@ -23,12 +23,9 @@ shift 2
 root=$(git rev-parse --show-toplevel)
 tmp=$(mktemp -d)
 parent=$tmp/parent
-cleanup() {
-    git -C "$root" worktree remove --force "$parent" 2>/dev/null || true
-    rm -rf "$tmp"
-}
-trap cleanup EXIT
-git -C "$root" worktree add --detach --quiet "$parent" "$rev"
+trap 'rm -rf "$tmp"' EXIT
+mkdir "$parent"
+git -C "$root" archive "$rev" | tar -x -C "$parent"
 seconds=$(python3 -c 'import json,sys; print(json.load(open(sys.argv[1]))["run_seconds"])' \
     "$root/BENCHMARK.json")
 

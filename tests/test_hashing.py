@@ -152,6 +152,20 @@ def test_probe_sets_no_probes_cases():
     assert H.probe_sets(np.array([1, 2], dtype=np.uint64), 1) == []
 
 
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.integers(0, 4), min_size=0, max_size=8))
+def test_probe_order_enumerates_every_subset_once(costs):
+    """Run to exhaustion, probe_order yields each nonempty subset of the
+    positions exactly once, totals never decrease, and equal totals come
+    out in tuple order — with tied and zero costs."""
+    z = sorted(costs)
+    sets = list(H.probe_order(z))
+    assert len(sets) == len(set(sets)) == 2 ** len(z) - 1
+    assert all(s == tuple(sorted(set(s))) for s in sets)
+    keys = [(sum(z[p] for p in s), s) for s in sets]
+    assert keys == sorted(keys)
+
+
 def test_probe_keys_match_band_hash_of_perturbed_sig():
     a, b = H.minhash_params(42, 128)
     sh = H.char_shingles(H.normalize("some document text for probing tests here"), 5)
