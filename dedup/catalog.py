@@ -22,9 +22,10 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 import time
 from dataclasses import dataclass
-from typing import Optional
+from typing import ClassVar, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -259,9 +260,8 @@ class Warehouse:
         df: DataFrame,
         table: str,
         partition_by: Optional[list[str]] = None,
-        mode: str = "overwrite",
     ) -> dict:
-        """Write a stage table then atomically commit its manifest.
+        """Overwrite a stage table then atomically commit its manifest.
 
         The parquet write itself is not atomic across files, but the
         manifest rename is; readers (`read`, `is_complete`) only trust
@@ -286,7 +286,7 @@ class Warehouse:
         out = self.path(table)
         t0 = time.monotonic()
         obs = Observation(f"rows_{table}_{_uuid.uuid4().hex[:8]}")
-        w = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(mode)
+        w = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(out)
@@ -363,6 +363,9 @@ class Warehouse:
 
     # -- delta registry (incremental runs; see dedup/incremental.py) --------
     DELTAS = "_DELTAS.json"
+    # serializes this process's registry read-modify-replaces: an
+    # increment's background commits register their deltas concurrently
+    _registry_lock: ClassVar[threading.Lock] = threading.Lock()
 
     def register_delta(self, table: str, delta_table: str) -> None:
         """Record a committed `<table>_delta_*` in the warehouse's delta
@@ -371,17 +374,18 @@ class Warehouse:
         the commit metadata, so a delta is visible to later increments iff
         it was registered after its manifest committed."""
         p = os.path.join(self.root, self.DELTAS)
-        reg: dict[str, list[str]] = {}
-        if os.path.exists(p):
-            with open(p) as f:
-                reg = json.load(f)
-        lst = reg.setdefault(table, [])
-        if delta_table not in lst:
-            lst.append(delta_table)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(reg, f, indent=1)
-        os.replace(tmp, p)
+        with self._registry_lock:
+            reg: dict[str, list[str]] = {}
+            if os.path.exists(p):
+                with open(p) as f:
+                    reg = json.load(f)
+            lst = reg.setdefault(table, [])
+            if delta_table not in lst:
+                lst.append(delta_table)
+            tmp = p + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump(reg, f, indent=1)
+            os.replace(tmp, p)
 
     def registered_deltas(self, table: str) -> list[str]:
         p = os.path.join(self.root, self.DELTAS)
@@ -409,16 +413,17 @@ class Warehouse:
         import shutil
 
         p = os.path.join(self.root, self.DELTAS)
-        if os.path.exists(p):
-            with open(p) as f:
-                reg = json.load(f)
-            lst = reg.get(table, [])
-            if delta_table in lst:
-                lst.remove(delta_table)
-                tmp = p + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(reg, f, indent=1)
-                os.replace(tmp, p)
+        with self._registry_lock:
+            if os.path.exists(p):
+                with open(p) as f:
+                    reg = json.load(f)
+                lst = reg.get(table, [])
+                if delta_table in lst:
+                    lst.remove(delta_table)
+                    tmp = p + ".tmp"
+                    with open(tmp, "w") as f:
+                        json.dump(reg, f, indent=1)
+                    os.replace(tmp, p)
         shutil.rmtree(os.path.join(self.root, delta_table), ignore_errors=True)
 
     # -- increment commit log -------------------------------------------------

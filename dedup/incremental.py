@@ -2,7 +2,11 @@
 without recomputing old-old work (the daily-crawl story at the 100 TB
 design point; SURVEY.md §2.9's incremental note made real).
 
-What is incremental vs recomputed:
+`run_incremental` runs the same stage composition as a fresh run
+(`pipeline.execute`) and passes it only data: how each table commits
+(`_COMMITS`) and the committed global state the batch folds into (the
+`_with_deltas` views of pages, signatures and buckets, plus the old
+clusters). What is incremental vs recomputed:
   - stage 1/2 run on the NEW batch only (the dominant per-doc cost).
   - candidate generation sees OLD + NEW bucket/signature state but emits
     only pairs touching >= 1 new url (stage3_candidates new_urls mode);
@@ -15,18 +19,21 @@ What is incremental vs recomputed:
     is tiny compared to re-clustering the full edge set, and yields the
     SAME partition a full union run would (star edges preserve old
     components exactly; tests/test_incremental.py asserts the equality).
+    A dup-heavy increment takes the same exact-dup contraction a fresh
+    run takes (pipeline._clusters).
 
-Append semantics: the delta tables (pages/signatures/buckets/
-verified_pairs `_delta_<id>`) commit under the same manifest protocol,
-are recorded in the warehouse's delta registry (catalog.register_delta —
-discovery never lists directories), and are folded into the global view
-read by SUBSEQUENT increments (`_with_deltas`), so increments chain;
-`clusters` and `canonical_pages` are global outputs replaced each
-increment via the atomic generation-pointer swap (catalog.replace), so a
-crash mid-rewrite can never lose the previous committed generation.
-(An Iceberg deployment appends the deltas as snapshots of the base
-tables instead of suffixed directories — same commit semantics, one
-writer seam in catalog.py.)
+Append semantics: the delta tables (`DELTA_TABLES` as `<table>_delta_
+<run_id>`) commit under the same manifest protocol, in the background
+like a fresh run's tables, and are recorded in the warehouse's delta
+registry after their manifest (catalog.register_delta — discovery never
+lists directories); they are folded into the global view read by
+SUBSEQUENT increments (`_with_deltas`), so increments chain. `clusters`
+and `canonical_pages` are global outputs replaced each increment via the
+atomic generation-pointer swap (catalog.replace), so a crash mid-rewrite
+can never lose the previous committed generation. `candidate_pairs` and
+`dropped_buckets` are not committed. (An Iceberg deployment appends the
+deltas as snapshots of the base tables instead of suffixed directories —
+same commit semantics, one writer seam in catalog.py.)
 
 Known, documented divergence from a full recompute: old-old pairs keep
 the verdicts of the base run even if the union corpus would have pushed
@@ -38,16 +45,31 @@ it.
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import stages
+from . import pipeline, stages
 from .catalog import Warehouse
-from .cc import LOCAL_CC_MAX_EDGES, connected_components
+from .cc import connected_components  # noqa: F401  perfbench/spans.py wraps this name
 from .config import DedupConfig
 
-BASE_TABLES = ("pages", "signatures", "buckets", "verified_pairs", "clusters")
+#: the tables an increment commits as `<table>_delta_<run_id>`, in order
+DELTA_TABLES = ("pages", "signatures", "buckets", "verified_pairs")
+#: the tables a completed base run has committed
+BASE_TABLES = (*DELTA_TABLES, "clusters")
+# how an increment commits each pipeline table (pipeline.execute): the
+# global clusters/canonical views are replaced whole; the stage-3 tables
+# are left out, so candidates are built only as verify's input and the
+# dropped-bucket report is never computed
+_COMMITS = {
+    **dict.fromkeys(DELTA_TABLES, "delta"),
+    "clusters": "replace",
+    "canonical_pages": "replace",
+}
 
 
 def _with_deltas(spark: SparkSession, wh: Warehouse, table: str) -> DataFrame:
@@ -98,19 +120,14 @@ def compact(
     leaves a mix of compacted and chained tables — each still exact.
     Returns {table: [folded delta names]}. Holds the single-writer lease
     (serial with increments/streaming, like every warehouse writer)."""
-    import uuid as _uuid
-
     wh = Warehouse(
         root=warehouse_root,
         config_hash=cfg.config_hash(),
-        run_id=run_id or f"compact{_uuid.uuid4().hex[:8]}",
+        run_id=run_id or f"compact{uuid.uuid4().hex[:8]}",
     )
-    import os
-    import shutil
-
     folded: dict[str, list[str]] = {}
     with wh.lease():
-        for table in ("pages", "signatures", "buckets", "verified_pairs"):
+        for table in DELTA_TABLES:
             # GC the superseded PLAIN base directory: once the pointer
             # references a generation, the base run's original table is
             # dead storage (readers resolve the pointer) — at 10^12 docs
@@ -175,8 +192,6 @@ def run_incremental(
     tables in the warehouse. Holds the single-writer lease for the
     duration (the pointer-swap/registry protocol is serial-writer by
     design; a second concurrent writer fails fast with LeaseHeldError)."""
-    import re
-
     run_id = run_id or uuid.uuid4().hex[:12]
     if not re.fullmatch(r"[0-9a-zA-Z]+", run_id):
         # the run_id names the delta tables; restricting its alphabet keeps
@@ -189,108 +204,40 @@ def run_incremental(
         root=warehouse_root, config_hash=cfg.config_hash(), run_id=run_id
     )
     with wh.lease():
-        return _run_incremental_locked(spark, new_pages, cfg, wh)
+        missing = [t for t in BASE_TABLES if not wh.is_complete(t)]
+        if missing:
+            raise ValueError(
+                f"incremental run needs a completed base run; missing {missing}"
+            )
+        # the global state before this increment: the views are built
+        # before its own deltas are registered
+        prior = {
+            t: _with_deltas(spark, wh, t) for t in ("pages", "signatures", "buckets")
+        }
+        prior["clusters"] = wh.read(spark, "clusters")  # always global (replaced)
 
-
-def _run_incremental_locked(
-    spark: SparkSession,
-    new_pages: DataFrame,
-    cfg: DedupConfig,
-    wh: Warehouse,
-) -> dict[str, DataFrame]:
-    missing = [t for t in BASE_TABLES if not wh.is_complete(t)]
-    if missing:
-        raise ValueError(
-            f"incremental run needs a completed base run; missing {missing}"
+        # guard: a url may appear in exactly one batch. Left-semi from the
+        # committed side with the (typically much smaller) new batch
+        # broadcast: the old url column streams through one pruned columnar
+        # scan and the limit(1) short-circuits — no shuffle of the
+        # committed corpus.
+        dup_urls = (
+            prior["pages"].select("url")
+            .join(F.broadcast(new_pages.select("url")), "url", "left_semi")
+            .limit(1)
         )
+        if dup_urls.count() > 0:
+            raise ValueError("new_pages contains urls already present in the base run")
 
-    old_pages = _with_deltas(spark, wh, "pages")
-    old_sigs = _with_deltas(spark, wh, "signatures")
-    old_buckets = _with_deltas(spark, wh, "buckets")
-    old_clusters = wh.read(spark, "clusters")  # always global (rewritten)
-
-    # guard: a url may appear in exactly one batch. Left-semi from the
-    # committed side with the (typically much smaller) new batch broadcast:
-    # the old url column streams through one pruned columnar scan and the
-    # limit(1) short-circuits — no shuffle of the committed corpus.
-    dup_urls = (
-        old_pages.select("url")
-        .join(F.broadcast(new_pages.select("url")), "url", "left_semi")
-        .limit(1)
-    )
-    if dup_urls.count() > 0:
-        raise ValueError("new_pages contains urls already present in the base run")
-
-    def commit_delta(table: str, df: DataFrame) -> DataFrame:
-        """Commit `df` as this increment's delta of `table`, register it
-        and read it back (pages keep the base's warc_day layout)."""
-        name = f"{table}_delta_{wh.run_id}"
-        df, by_day = stages.day_layout(df)
-        wh.write(df, name, partition_by=by_day)
-        wh.register_delta(table, name)
-        return wh.read(spark, name)
-
-    new_pages = commit_delta("pages", new_pages)
-    # fused stage 1+2 on the new batch (same shape as pipeline.run): one
-    # Arrow pass computes both deltas; buckets is a JVM explode of the
-    # cached fused relation
-    from pyspark import StorageLevel
-
-    # both caches are released on every way out: a failed delta write
-    # must not leave them pinned in a session that retries (streaming)
-    fused = stages.stage12_fused(new_pages, cfg).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        sig_new = commit_delta("signatures", stages.signatures_from_fused(fused))
-        buckets_new = commit_delta("buckets", stages.buckets_from_fused(fused))
-    finally:
-        fused.unpersist()
-
-    sig_all = old_sigs.unionByName(sig_new)
-    buckets_all = old_buckets.unionByName(buckets_new)
-    pages_all = old_pages.unionByName(new_pages)
-
-    cand = stages.stage3_candidates(
-        sig_all, buckets_all, cfg, new_urls=sig_new.select("url")
-    )
-    try:
-        verified_new = commit_delta(
-            "verified_pairs",
-            stages.stage4_verify(cand.candidates, sig_all, pages_all, cfg),
-        )
-    finally:
-        cand.entries.unpersist()
-
-    # old components enter as one star per cluster — their transitive
-    # closure, so CC input is |old urls in clusters| + |new dup pairs|
-    old_stars = old_clusters.filter(F.col("url") != F.col("cluster_id")).select(
-        F.col("cluster_id").alias("url_a"), F.col("url").alias("url_b")
-    )
-    edges = (
-        verified_new.filter("is_dup").select("url_a", "url_b").unionByName(old_stars)
-    )
-    clusters = connected_components(
-        edges, pages_all.select("url"), cfg, local_max_edges=LOCAL_CC_MAX_EDGES
-    )
-    # global outputs are REPLACED, not overwritten in place: a fresh
-    # generation directory commits first, then the pointer swaps atomically
-    # — a crash mid-rewrite leaves the previous committed generation intact
-    wh.replace(clusters, "clusters")
-    clusters = wh.read(spark, "clusters")
-    canonical, by_day = stages.day_layout(
-        stages.stage6_canonical(clusters, pages_all)
-    )
-    wh.replace(canonical, "canonical_pages", partition_by=by_day)
-
-    # last commit of the increment: mark it end-to-end complete so
-    # compact() may fold its deltas (a crash before this line leaves the
-    # attempt rollback-able and never compactable — by design)
-    wh.mark_increment_committed(wh.run_id)
-    return {
-        "signatures_delta": sig_new,
-        "buckets_delta": buckets_new,
-        "verified_pairs_delta": verified_new,
-        "clusters": clusters,
-        "canonical_pages": wh.read(spark, "canonical_pages"),
-    }
+        pipeline.execute(spark, wh, new_pages, cfg, _COMMITS, prior=prior)
+        # every commit has landed: mark the increment end-to-end complete
+        # so compact() may fold its deltas (a crash before this line leaves
+        # the attempt rollback-able and never compactable — by design)
+        wh.mark_increment_committed(run_id)
+        return {
+            "signatures_delta": wh.read(spark, f"signatures_delta_{run_id}"),
+            "buckets_delta": wh.read(spark, f"buckets_delta_{run_id}"),
+            "verified_pairs_delta": wh.read(spark, f"verified_pairs_delta_{run_id}"),
+            "clusters": wh.read(spark, "clusters"),
+            "canonical_pages": wh.read(spark, "canonical_pages"),
+        }

@@ -1,10 +1,14 @@
 """End-to-end dedup pipeline orchestration with checkpoint/resume and
 per-partition metrics (SURVEY.md §3.2; BASELINE.json:6).
 
-`run` composes the tables of `TABLES` once, in order, through one stage
-helper (`_Stages`). Each table's write + commit manifest is the resume
-point, the lineage cut, and where per-partition metrics are harvested
-(one parquet file per write task = one partition's lineage record).
+`execute` composes the tables of `TABLES` once, in order, through one
+stage helper (`_Stages`); `run` (a fresh or resumed run) and
+`incremental.run_incremental` (a batch folded into a committed run) both
+call it and differ only in data: how each table commits, and the
+committed global state, if any, that the run folds into. Each table's
+write + commit manifest is the resume point, the lineage cut, and where
+per-partition metrics are harvested (one parquet file per write task =
+one partition's lineage record).
 
 Pipelined commits: a stage's compute runs on the driver thread (persist +
 count where later stages reuse it); its write, commit and metrics harvest
@@ -13,7 +17,8 @@ relation, so a healthy run never serializes behind file IO + commit
 barriers — the serial fraction scaling is most sensitive to
 (docs/SCALE.md). The driver waits on writes only for `pages` (read
 back), for every write before `verified_pairs` once verify is
-materialized (so the stage-3 caches can go), and at the end.
+materialized (so the stage-3 caches can go), for a delta or a replaced
+table before a later stage reads it back, and at the end.
 
 Resume: `run(..., resume=True)` skips any table committed under the SAME
 config_hash; a crash mid-stage leaves no manifest, so the stage reruns
@@ -32,7 +37,7 @@ import uuid
 from dataclasses import dataclass, field
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import stages
 from .catalog import Warehouse
@@ -56,6 +61,7 @@ class RunResult:
     warehouse: Warehouse
     stages_run: list[str] = field(default_factory=list)
     stages_skipped: list[str] = field(default_factory=list)
+    metrics: list[dict] = field(default_factory=list)  # per-partition rows
 
     def df(self, spark: SparkSession, table: str) -> DataFrame:
         return self.warehouse.read(spark, table)
@@ -84,28 +90,6 @@ def _partition_metrics(path: str) -> list[dict]:
             }
         )
     return out
-
-
-def _clusters(
-    st: _Stages, verified: DataFrame, urls: DataFrame, cfg: DedupConfig
-) -> DataFrame:
-    """Stage 5 over the dup pairs of `verified`, with its size-based plan
-    choice: the exact-dup contraction costs two extra joins and a second
-    CC input prep, which only pays when verified pairs dwarf docs — the
-    dup-heavy regime it exists for (a replicated corpus runs ~32
-    pairs/doc; a lightly-duplicated one runs ~3). The contracted path's
-    sha map reads the committed signatures table, so the fused cache is
-    released before CC starts."""
-    dup = verified.filter("is_dup").select("url_a", "url_b")
-    n_docs = max(1, st.wh.manifest("pages")["rows"])
-    if st.counts["verified_pairs"] > 8 * n_docs:
-        sha = st.wh.read(st.spark, "signatures").select("url", "text_sha")
-        return connected_components_contracted(
-            dup, urls, sha, cfg, local_max_edges=LOCAL_CC_MAX_EDGES
-        )
-    return connected_components(
-        dup, urls, cfg, local_max_edges=LOCAL_CC_MAX_EDGES
-    )
 
 
 def run(
@@ -142,32 +126,67 @@ def run(
                 f"resume=False on a warehouse that already has a committed "
                 f"pages table ({wh.root}); use a fresh warehouse root"
             )
-        st = _Stages(spark, wh, resume, stop_after)
-        try:
-            _compose(st, pages, cfg)
-        except _Stop:
-            pass
-        finally:
-            # no commit outlives the run (or its lease), no cache either
-            for th in st.writes.values():
-                th.join()
-            st.release()
-        st.join()  # re-raises a background failure
+        res = execute(
+            spark, wh, pages, cfg, dict.fromkeys(TABLES, "write"),
+            resume=resume, stop_after=stop_after,
+        )
         # S4: this run's metrics also land as a Spark-written parquet
-        # table (one append per run, not per stage)
-        wh.write_metrics_table(spark, st.metrics)
-        return st.res
+        # table (one append per run, not per stage). Increments keep to
+        # the JSONL rows: the append was a ~1.1 s job in an ~9 s
+        # incremental_append call (perfbench, 4-core VM).
+        wh.write_metrics_table(spark, res.metrics)
+        return res
 
 
-def _compose(st: _Stages, pages: DataFrame, cfg: DedupConfig) -> None:
+def execute(
+    spark: SparkSession, wh: Warehouse, pages: DataFrame, cfg: DedupConfig,
+    commits: dict[str, str], prior: dict[str, DataFrame] | None = None,
+    resume: bool = False, stop_after: str | None = None,
+) -> RunResult:
+    """Compose stages 0-6 over `pages` into `wh`, whose lease the caller
+    holds; every commit has landed when this returns.
+
+    commits: how each `TABLES` name commits — "write" (under its own
+    name), "delta" (as `<table>_delta_<run_id>`, registered after its
+    manifest) or "replace" (a new generation behind the table's pointer);
+    a table it leaves out is not committed, so its build stays lazy and
+    runs only if a later build reads it. prior: the committed global
+    pages, signatures, buckets and clusters this run folds into (none
+    for a fresh run). Each commit appends its per-partition metrics rows
+    to the warehouse's stage_metrics.jsonl and to the result's
+    `metrics`."""
+    st = _Stages(spark, wh, commits, resume, stop_after)
+    try:
+        _compose(st, pages, cfg, prior or {})
+    except _Stop:
+        pass
+    finally:
+        # no commit outlives the run (or its lease), no cache either
+        for th in st.writes.values():
+            th.join()
+        st.release()
+    st.join()  # re-raises a background failure
+    return st.res
+
+
+def _compose(
+    st: _Stages, pages: DataFrame, cfg: DedupConfig, prior: dict[str, DataFrame]
+) -> None:
     """Stages 0-6, each table through `st`. Builds are lambdas, so a
-    skipped table costs nothing unless a later build reads it."""
+    skipped or uncommitted table costs nothing unless a later build reads
+    it. Stages 1+2 run on this run's pages; stage 3, verify and canonical
+    see `prior` ∪ this run."""
+
+    def over(table: str, df: DataFrame) -> DataFrame:
+        """`df` on top of the prior global view of `table`, if any."""
+        return prior[table].unionByName(df) if table in prior else df
+
     # stage 0: snapshot the input (the Iceberg table stand-in; byte-identity
     # of `text` is checked against THIS table by the invariant tests),
     # laid out by warc_day (stages.day_layout)
     st("pages", lambda: pages)
-    st.join("pages")
-    pages_t = st.wh.read(st.spark, "pages")
+    pages_t = st.read("pages")
+    pages_all = over("pages", pages_t)
 
     # stages 1+2: ONE Arrow pass (stages.stage12_fused) computes both
     # tables; each write is a cache-read + file IO. A resume with only one
@@ -180,10 +199,14 @@ def _compose(st: _Stages, pages: DataFrame, cfg: DedupConfig) -> None:
 
     # stage 3: candidates and the dropped-bucket report share the
     # persisted entries relation; nothing downstream reads
-    # dropped_buckets, so its write rides in the background too
+    # dropped_buckets, so its write rides in the background too. Folding
+    # into prior state, only pairs touching this run's urls are emitted.
     @functools.cache
     def cand() -> stages.CandidateOut:
-        out = stages.stage3_candidates(sigs(), buckets(), cfg)
+        out = stages.stage3_candidates(
+            over("signatures", sigs()), over("buckets", buckets()), cfg,
+            new_urls=sigs().select("url") if prior else None,
+        )
         st.cached["entries"] = out.entries  # persisted by stage 3
         return out
 
@@ -192,22 +215,53 @@ def _compose(st: _Stages, pages: DataFrame, cfg: DedupConfig) -> None:
 
     # stage 4: by the time verify's (long) compute finishes, every
     # upstream write has landed; the join re-raises any background
-    # failure and lets the stage-3 and fused caches go before CC
+    # failure, and once verify is materialized the stage-3 and fused
+    # caches go before CC
     verified = st(
         "verified_pairs",
-        lambda: stages.stage4_verify(candidates(), sigs(), pages_t, cfg),
+        lambda: stages.stage4_verify(
+            candidates(), over("signatures", sigs()), pages_all, cfg
+        ),
         cache=True,
     )
     st.join(*TABLES[: TABLES.index("verified_pairs")])
-    st.release("fused", "entries", "candidate_pairs")
 
-    # stage 5 (clusters), then stage 6 (canonical pick)
-    clusters = st(
-        "clusters",
-        lambda: _clusters(st, verified(), pages_t.select("url"), cfg),
-        cache=True,
-    )
-    st("canonical_pages", lambda: stages.stage6_canonical(clusters(), pages_t))
+    # stage 5: CC over this run's dup pairs plus, when folding into a
+    # committed run, its old clusters as one star per component — their
+    # transitive closure, so CC input is |old clustered urls| + |new dup
+    # pairs| and the partition equals a full run's over the union
+    # (tests/test_incremental.py)
+    def cluster() -> DataFrame:
+        edges = verified().filter("is_dup").select("url_a", "url_b")
+        st.release("fused", "entries", "candidate_pairs")
+        if "clusters" in prior:
+            old = prior["clusters"].filter(F.col("url") != F.col("cluster_id"))
+            edges = edges.unionByName(old.select(
+                F.col("cluster_id").alias("url_a"), F.col("url").alias("url_b")
+            ))
+        urls = pages_all.select("url")
+        # Size-based plan choice: the exact-dup contraction costs two extra
+        # joins and a second CC input prep, which only pays when verified
+        # pairs dwarf the docs CC labels (base pages plus every active
+        # pages delta, from the committed manifests) — the dup-heavy
+        # regime it exists for (a replicated corpus runs ~32 pairs/doc; a
+        # lightly-duplicated one runs ~3). Its sha map is the committed
+        # global signatures view (the fused cache is gone by now): an
+        # edge url missing from it would drop out of the inner join.
+        wh = st.wh
+        n_docs = sum(wh.manifest(t)["rows"] for t in ("pages", *wh.active_deltas("pages")))
+        if st.counts["verified_pairs"] > 8 * max(1, n_docs):
+            sha = over("signatures", st.read("signatures")).select("url", "text_sha")
+            return connected_components_contracted(
+                edges, urls, sha, cfg, local_max_edges=LOCAL_CC_MAX_EDGES
+            )
+        return connected_components(
+            edges, urls, cfg, local_max_edges=LOCAL_CC_MAX_EDGES
+        )
+
+    clusters = st("clusters", cluster, cache=True)
+    # stage 6: the canonical pick
+    st("canonical_pages", lambda: stages.stage6_canonical(clusters(), pages_all))
 
 
 class _Stop(Exception):
@@ -217,37 +271,62 @@ class _Stop(Exception):
 class _Stages:
     """One run's stage helper and the caches and commits it holds."""
 
-    def __init__(self, spark, wh: Warehouse, resume: bool, stop_after):
-        self.spark, self.wh = spark, wh
+    def __init__(self, spark, wh: Warehouse, commits, resume: bool, stop_after):
+        self.spark, self.wh, self.commits = spark, wh, commits
         self.resume, self.stop_after = resume, stop_after
         self.res = RunResult(warehouse=wh)
         self.counts: dict[str, int] = {}  # counted (or committed) rows
         self.cached: dict[str, DataFrame] = {}  # persisted, until release()
         self.writes: dict[str, threading.Thread] = {}
         self.errors: list[BaseException] = []
-        self.metrics: list[dict] = []
         self.lock = threading.Lock()
 
     def __call__(self, name: str, build, cache: bool = False):
         """Table `name` as a callable returning its DataFrame: the
-        committed table when resuming, else `build()` (persisted and
-        counted here when `cache`) with its commit started in the
-        background. Raises _Stop after the `stop_after` table."""
-        if self.resume and self.wh.is_complete(name):
+        committed table when resuming; `build` itself, called on first
+        use, when this run does not commit `name`; else `build()` with
+        its commit started in the background. A table written under its
+        own name is then reused in memory (persisted and counted here
+        when `cache`); a delta or a replaced table is read back once its
+        commit lands. A replacement's lineage may read the generation its
+        swap deletes (an increment's clusters are computed from the old
+        ones); a delta's consumers union it with the prior views' file
+        scans, and with the delta's side fed from memory instead, an
+        incremental_append call (perfbench, 4-core VM) ran 78 Spark jobs
+        rather than 57. Raises _Stop after the `stop_after` table."""
+        how = self.commits.get(name)
+        if how is None:
+            out = functools.cache(build)
+        elif self.resume and self.wh.is_complete(name):
             self.res.stages_skipped.append(name)
-            self.counts[name] = self.wh.manifest(name)["rows"]
-            out = functools.cache(lambda: self.wh.read(self.spark, name))
+            out = functools.cache(lambda: self.read(name))
         else:
             t0 = time.monotonic()
             df = build()
-            if cache:
+            if cache and how == "write":
                 df = self.cache(name, df)
             self._commit(name, df, int((time.monotonic() - t0) * 1000))
             self.res.stages_run.append(name)
-            out = lambda: df  # noqa: E731
+            if how == "write":
+                out = lambda: df  # noqa: E731
+            else:
+                out = functools.cache(lambda: self.read(name))
         if name == self.stop_after:
             raise _Stop
         return out
+
+    def table(self, name: str) -> str:
+        """The warehouse table this run commits `name` as."""
+        if self.commits.get(name) == "delta":
+            return f"{name}_delta_{self.wh.run_id}"
+        return name
+
+    def read(self, name: str) -> DataFrame:
+        """This run's committed `name`, read back once its commit lands."""
+        self.join(name)
+        table = self.table(name)
+        self.counts.setdefault(name, self.wh.manifest(table)["rows"])
+        return self.wh.read(self.spark, table)
 
     def cache(self, key: str, df: DataFrame) -> DataFrame:
         """Persist (spilling) and count `df`; release(key) unpersists it."""
@@ -273,18 +352,21 @@ class _Stages:
             raise self.errors[0]
 
     def _commit(self, name: str, df: DataFrame, compute_ms: int) -> None:
-        """Write `name` in a background thread, which then harvests its
+        """Commit `name` in a background thread, which then harvests its
         per-partition metrics (pyarrow footers; no Spark job). A row
         carries compute + write time and the cumulative session
         shuffle/IO at commit (docs/SCALE.md's shuffle budget, measured;
         per-stage deltas blur under pipelined commits, totals are exact)."""
         df, by_day = stages.day_layout(df)
-        wh = self.wh
+        wh, how, table = self.wh, self.commits[name], self.table(name)
 
         def write() -> None:
             try:
                 t0 = time.monotonic()
-                man = wh.write(df, name, partition_by=by_day)
+                commit = wh.replace if how == "replace" else wh.write
+                man = commit(df, table, partition_by=by_day)
+                if how == "delta":
+                    wh.register_delta(name, table)
                 wall = compute_ms + int((time.monotonic() - t0) * 1000)
                 shuf = {
                     f"cum_{k}": v for k, v in shuffle_totals(self.spark).items()
@@ -299,10 +381,10 @@ class _Stages:
                         **shuf,
                         **p,
                     }
-                    for p in _partition_metrics(wh.path(name))
+                    for p in _partition_metrics(wh.path(table))
                 ]
                 with self.lock:
-                    self.metrics.extend(rows)
+                    self.res.metrics.extend(rows)
                     wh.append_metrics(self.spark, rows)
             except BaseException as exc:  # re-raised by join()
                 self.errors.append(exc)

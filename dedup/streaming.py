@@ -51,9 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .catalog import Warehouse
 from .config import DedupConfig
-
-# delta tables one increment commits, in commit order (incremental.py)
-INCREMENT_DELTA_TABLES = ("pages", "signatures", "buckets", "verified_pairs")
+from .incremental import BASE_TABLES, DELTA_TABLES, compact, run_incremental
 
 
 def _marker_path(warehouse_root: str, batch_id: int) -> str:
@@ -84,7 +82,7 @@ def rollback_increment(wh: Warehouse, run_id: str) -> list[str]:
     are pointer-swapped whole, remain valid committed data, and the rerun
     replaces them with an identical partition (module docstring)."""
     rolled = []
-    for t in INCREMENT_DELTA_TABLES:
+    for t in DELTA_TABLES:
         name = f"{t}_delta_{run_id}"
         if name in wh.registered_deltas(t) or os.path.exists(
             os.path.join(wh.root, name)
@@ -129,7 +127,6 @@ def run_stream(
     delta into a fresh base generation (under this stream's lease,
     re-entrantly). The trigger reads the WAREHOUSE state, not a counter,
     so a compaction skipped by a crash simply fires after the next batch."""
-    from .incremental import compact, run_incremental
     from .pipeline import run as run_pipeline
     from .synth import pages_schema
 
@@ -159,8 +156,6 @@ def run_stream(
         # pipeline.run's stage-resume machinery skips committed stages and
         # finishes the rest (possibly a no-op), exactly as the module
         # docstring promises.
-        from .incremental import BASE_TABLES
-
         base_complete = all(wh.is_complete(t) for t in BASE_TABLES)
         pages_man = wh.manifest("pages")
         own_bootstrap = (

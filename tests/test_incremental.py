@@ -239,3 +239,119 @@ def test_incremental_requires_completed_base(spark, split_corpus, tmp_path_facto
     new_df = spark.createDataFrame(new_pd, schema=pages_schema())
     with pytest.raises(ValueError, match="completed base run"):
         run_incremental(spark, new_df, DEFAULT, wh)
+
+
+@pytest.fixture(scope="module")
+def dup_heavy(spark, corpus_smoke, tmp_path_factory):
+    """A base run over 40 docs of planted 4-doc groups, then an increment
+    of nine more copies of each (synth.replicate_corpus): the increment
+    verifies ~18 pairs per doc, past pipeline._clusters' contraction
+    threshold of 8 per doc CC labels. Records which CC the increment
+    ran, whether each call left the session's cache manager empty, and
+    a full run over base ∪ new as the reference."""
+    from dedup import pipeline
+    from dedup.synth import SynthCorpus, replicate_corpus
+
+    tc = corpus_smoke.truth_clusters
+    four = tc[tc.groupby("cluster_id")["url"].transform("size") == 4]
+    urls = sorted(four["url"])[:40]
+    pages = corpus_smoke.pages[corpus_smoke.pages["url"].isin(urls)]
+    sub = SynthCorpus(pages.sort_values("url", ignore_index=True), None, None)
+    copies = replicate_corpus(sub, 10)
+    base_pd, new_pd = copies[: len(pages)], copies[len(pages):]
+
+    wh = str(tmp_path_factory.mktemp("wh_dup_heavy"))
+    cache_empty = lambda: spark._jsparkSession.sharedState().cacheManager().isEmpty()  # noqa: E731
+    spark.catalog.clearCache()
+    run(spark, spark.createDataFrame(base_pd, schema=pages_schema()), DEFAULT, wh)
+    empty_after_run = cache_empty()
+
+    calls = []
+    real = pipeline.connected_components_contracted
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pipeline, "connected_components_contracted", spy)
+        inc = run_incremental(
+            spark, spark.createDataFrame(new_pd, schema=pages_schema()),
+            DEFAULT, wh, run_id="dup1",
+        )
+        empty_after_inc = cache_empty()
+        got = inc["clusters"].toPandas().sort_values("url", ignore_index=True)
+
+    full = run(
+        spark, spark.createDataFrame(copies, schema=pages_schema()), DEFAULT,
+        str(tmp_path_factory.mktemp("wh_dup_heavy_full")),
+    )
+    want = full.df(spark, "clusters").toPandas().sort_values("url", ignore_index=True)
+    return {
+        "wh": wh, "calls": calls, "got": got, "want": want,
+        "empty_after_run": empty_after_run, "empty_after_inc": empty_after_inc,
+    }
+
+
+def test_dup_heavy_increment_takes_contracted_cc(dup_heavy):
+    """A dup-heavy increment contracts exact duplicates before CC, as a
+    fresh run does, and still equals the full run over base ∪ new."""
+    assert len(dup_heavy["calls"]) == 1
+    got, want = dup_heavy["got"], dup_heavy["want"]
+    assert got["url"].tolist() == want["url"].tolist()
+    assert got["cluster_id"].tolist() == want["cluster_id"].tolist()
+    assert got["cluster_id"].nunique() < len(got)  # the copies did merge
+
+
+def test_run_and_increment_release_caches_and_record_metrics(dup_heavy):
+    """Neither a run nor an increment leaves a cached relation behind,
+    and an increment appends per-partition metrics rows under its run_id
+    for every table it commits, summing to each table's committed rows."""
+    from dedup.catalog import Warehouse
+
+    assert dup_heavy["empty_after_run"]
+    assert dup_heavy["empty_after_inc"]
+    wh = Warehouse(dup_heavy["wh"], DEFAULT.config_hash(), "dup1")
+    rows = [r for r in wh.read_metrics() if r["run_id"] == "dup1"]
+    deltas = ("pages", "signatures", "buckets", "verified_pairs")
+    replaced = ("clusters", "canonical_pages")
+    assert {r["stage"] for r in rows} == {*deltas, *replaced}
+    for t in (*deltas, *replaced):
+        name = f"{t}_delta_dup1" if t in deltas else t
+        assert sum(r["rows"] for r in rows if r["stage"] == t) == wh.manifest(name)["rows"]
+
+
+def test_concurrent_delta_registrations_lose_none(tmp_path):
+    """An increment's delta commits register on background threads, and
+    the delta registry is one read-modify-replace file: registrations
+    landing at once must not lose one another."""
+    import sys
+    import threading
+
+    from dedup.catalog import Warehouse
+
+    wh = Warehouse(str(tmp_path), "cfg", "r1")
+    errors = []
+
+    def register(t):
+        try:
+            for i in range(25):
+                wh.register_delta(t, f"{t}_delta_r{i}")
+        except OSError as exc:
+            errors.append(exc)
+
+    tables = [f"t{i}" for i in range(16)]
+    threads = [threading.Thread(target=register, args=(t,)) for t in tables]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    for t in tables:
+        assert wh.registered_deltas(t) == [f"{t}_delta_r{i}" for i in range(25)]
