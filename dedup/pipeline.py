@@ -126,16 +126,10 @@ def run(
                 f"resume=False on a warehouse that already has a committed "
                 f"pages table ({wh.root}); use a fresh warehouse root"
             )
-        res = execute(
+        return execute(
             spark, wh, pages, cfg, dict.fromkeys(TABLES, "write"),
             resume=resume, stop_after=stop_after,
         )
-        # S4: this run's metrics also land as a Spark-written parquet
-        # table (one append per run, not per stage). Increments keep to
-        # the JSONL rows: the append was a ~1.1 s job in an ~9 s
-        # incremental_append call (perfbench, 4-core VM).
-        wh.write_metrics_table(spark, res.metrics)
-        return res
 
 
 def execute(
@@ -154,7 +148,8 @@ def execute(
     pages, signatures, buckets and clusters this run folds into (none
     for a fresh run). Each commit appends its per-partition metrics rows
     to the warehouse's stage_metrics.jsonl and to the result's
-    `metrics`."""
+    `metrics`; once every commit has landed, the run's rows are appended
+    to the `stage_metrics` parquet table in one driver-written file."""
     st = _Stages(spark, wh, commits, resume, stop_after)
     try:
         _compose(st, pages, cfg, prior or {})
@@ -166,6 +161,7 @@ def execute(
             th.join()
         st.release()
     st.join()  # re-raises a background failure
+    wh.write_metrics_table(spark, st.res.metrics)
     return st.res
 
 

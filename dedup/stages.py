@@ -108,28 +108,32 @@ def _simhash_combo_entries(
     blocks - combo ⇒ at least one combo key equal. Returns
     (k1=combo_id, k2=packed_key, url, *carry) — `carry` names extra
     signature columns to ride along in the entries (so consumers that need
-    them avoid a join back to the corpus-sized signatures relation)."""
+    them avoid a join back to the corpus-sized signatures relation).
+
+    The keys are one SQL string (one py4j call) rather than a Column tree
+    built call by call: C(6,3) keys of three blocks cost ~400 py4j round
+    trips as Columns. Block i is the unsigned shift of the simhash by its
+    offset, masked to its width; a key packs its blocks MSB-first by
+    multiply-add, as hashing.simhash_combo_keys does on the unsigned value."""
     import itertools
 
     widths = cfg.simhash_block_widths
     offsets = [sum(widths[:i]) for i in range(len(widths))]
-
-    def _block(i: int):
-        return F.shiftrightunsigned(F.col("simhash"), offsets[i]).bitwiseAND(
-            F.lit((1 << widths[i]) - 1)
-        )
-
-    combo_structs = []
+    blocks = [
+        f"(shiftrightunsigned(simhash, {o}) & {(1 << w) - 1})"
+        for o, w in zip(offsets, widths)
+    ]
+    structs = []
     for cid, idxs in enumerate(
         itertools.combinations(range(cfg.pigeonhole_blocks), cfg.pigeonhole_combo)
     ):
-        key = F.lit(0).cast("long")
+        key = "CAST(0 AS BIGINT)"
         for i in idxs:
-            key = key * F.lit(1 << widths[i]) + _block(i)
-        combo_structs.append(F.struct(F.lit(cid).alias("k1"), key.alias("k2")))
+            key = f"({key}) * {1 << widths[i]} + {blocks[i]}"
+        structs.append(f"named_struct('k1', {cid}, 'k2', {key})")
     return signatures.select(
-        "url", *carry, F.explode(F.array(*combo_structs)).alias("b")
-    ).select(F.col("b.k1").alias("k1"), F.col("b.k2").alias("k2"), "url", *carry)
+        F.expr(f"inline(array({', '.join(structs)}))"), "url", *carry
+    )
 
 
 def _url_ids(urls: DataFrame) -> DataFrame:

@@ -273,12 +273,27 @@ def dup_heavy(spark, corpus_smoke, tmp_path_factory):
         calls.append(args)
         return real(*args, **kwargs)
 
+    # every Spark job run_incremental runs after its composition returns,
+    # that is, for its return dict of committed tables
+    group = "dup1-after-execute"
+    real_execute = pipeline.execute
+
+    def execute_then_group(*args, **kwargs):
+        res = real_execute(*args, **kwargs)
+        spark.sparkContext.setJobGroup(group, "run_incremental return dict")
+        return res
+
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(pipeline, "connected_components_contracted", spy)
-        inc = run_incremental(
-            spark, spark.createDataFrame(new_pd, schema=pages_schema()),
-            DEFAULT, wh, run_id="dup1",
-        )
+        mp.setattr(pipeline, "execute", execute_then_group)
+        try:
+            inc = run_incremental(
+                spark, spark.createDataFrame(new_pd, schema=pages_schema()),
+                DEFAULT, wh, run_id="dup1",
+            )
+        finally:
+            spark.sparkContext._jsc.clearJobGroup()
+        return_jobs = _group_jobs(spark, group)
         empty_after_inc = cache_empty()
         got = inc["clusters"].toPandas().sort_values("url", ignore_index=True)
 
@@ -290,7 +305,28 @@ def dup_heavy(spark, corpus_smoke, tmp_path_factory):
     return {
         "wh": wh, "calls": calls, "got": got, "want": want,
         "empty_after_run": empty_after_run, "empty_after_inc": empty_after_inc,
+        "return_jobs": return_jobs,
     }
+
+
+def _group_jobs(spark, group: str) -> list[int]:
+    """Ids of the Spark jobs run under job group `group`, once the
+    listener bus has delivered every event."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
+
+
+def _jobs_of(spark, fn) -> list[int]:
+    """Ids of the Spark jobs `fn()` runs on this thread."""
+    import uuid
+
+    group = f"jobs-of-{uuid.uuid4().hex}"
+    spark.sparkContext.setJobGroup(group, "jobs of one call")
+    try:
+        fn()
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    return _group_jobs(spark, group)
 
 
 def test_dup_heavy_increment_takes_contracted_cc(dup_heavy):
@@ -303,11 +339,14 @@ def test_dup_heavy_increment_takes_contracted_cc(dup_heavy):
     assert got["cluster_id"].nunique() < len(got)  # the copies did merge
 
 
-def test_run_and_increment_release_caches_and_record_metrics(dup_heavy):
+def test_run_and_increment_release_caches_and_record_metrics(spark, dup_heavy):
     """Neither a run nor an increment leaves a cached relation behind,
     and an increment appends per-partition metrics rows under its run_id
-    for every table it commits, summing to each table's committed rows."""
-    from dedup.catalog import Warehouse
+    for every table it commits, summing to each table's committed rows,
+    to the JSONL and to the stage_metrics table alike."""
+    import os
+
+    from dedup.catalog import METRICS_SCHEMA, Warehouse
 
     assert dup_heavy["empty_after_run"]
     assert dup_heavy["empty_after_inc"]
@@ -319,6 +358,79 @@ def test_run_and_increment_release_caches_and_record_metrics(dup_heavy):
     for t in (*deltas, *replaced):
         name = f"{t}_delta_dup1" if t in deltas else t
         assert sum(r["rows"] for r in rows if r["stage"] == t) == wh.manifest(name)["rows"]
+    cols = METRICS_SCHEMA.fieldNames()
+    table = spark.read.parquet(os.path.join(wh.root, wh.METRICS_TABLE))
+    got = [tuple(r) for r in table.filter("run_id = 'dup1'").select(*cols).collect()]
+    assert sorted(got) == sorted(tuple(r[c] for c in cols) for r in rows)
+
+
+def test_catalog_runs_no_spark_job_for_metadata(spark, dup_heavy, tmp_path):
+    """Reading a committed table (every table of a fresh run and of an
+    increment, partitioned, delta and pointer-versioned ones included),
+    run_incremental's return dict and the metrics-table append run no
+    Spark job: a read takes its schema from the manifest, and the schema
+    and rows equal an inferred read's. A manifest without `schema`
+    (written before it existed) still reads, through inference."""
+    import json
+    import os
+    import shutil
+
+    from dedup.catalog import MANIFEST, METRICS_SCHEMA, Warehouse
+    from dedup.incremental import DELTA_TABLES
+    from dedup.pipeline import TABLES
+
+    assert dup_heavy["return_jobs"] == []
+    wh = Warehouse(dup_heavy["wh"], DEFAULT.config_hash(), "dup1")
+    names = [*TABLES, *(f"{t}_delta_dup1" for t in DELTA_TABLES)]
+    reads = {}
+    assert _jobs_of(spark, lambda: reads.update((t, wh.read(spark, t)) for t in names)) == []
+
+    def rows(df):
+        return sorted(repr(r) for r in df.collect())
+
+    for t, df in reads.items():
+        inferred = spark.read.parquet(wh.path(t))
+        assert df.schema == inferred.schema, t
+        assert rows(df) == rows(inferred), t
+
+    # a pre-schema manifest: the same table, read through inference
+    old = Warehouse(str(tmp_path / "old"), wh.config_hash, "old")
+    shutil.copytree(wh.path("pages"), old.path("pages"))
+    with open(os.path.join(old.path("pages"), MANIFEST)) as f:
+        man = json.load(f)
+    del man["schema"]
+    with open(os.path.join(old.path("pages"), MANIFEST), "w") as f:
+        json.dump(man, f)
+    legacy = old.read(spark, "pages")
+    assert legacy.schema == reads["pages"].schema
+    assert rows(legacy) == rows(reads["pages"])
+
+    # non-nullable nested fields and a partition column that is not last
+    # read back as a parquet scan reports them
+    fresh = Warehouse(str(tmp_path / "fresh"), wh.config_hash, "fresh")
+    nested = spark.sql(
+        "SELECT id, array(id, id + 1) AS arr, map('k', id) AS m,"
+        " named_struct('a', id, 'b', array('x')) AS st,"
+        " date_add(DATE'2024-01-01', CAST(id % 3 AS INT)) AS warc_day,"
+        " CAST(id AS STRING) AS s FROM range(6)"
+    )
+    fresh.write(nested, "nested", partition_by=["warc_day"])
+    assert _jobs_of(spark, lambda: reads.update(nested=fresh.read(spark, "nested"))) == []
+    inferred = spark.read.parquet(fresh.path("nested"))
+    assert reads["nested"].schema == inferred.schema
+    assert rows(reads["nested"]) == rows(inferred)
+
+    # the driver-written metrics table reads like a Spark-written one
+    metrics = wh.read_metrics()
+    assert _jobs_of(spark, lambda: fresh.write_metrics_table(spark, metrics)) == []
+    got = spark.read.parquet(os.path.join(fresh.root, fresh.METRICS_TABLE))
+    spark.createDataFrame(
+        [{k: r.get(k) for k in METRICS_SCHEMA.fieldNames()} for r in metrics],
+        METRICS_SCHEMA,
+    ).write.parquet(str(tmp_path / "spark_metrics"))
+    want = spark.read.parquet(str(tmp_path / "spark_metrics"))
+    assert got.schema == want.schema
+    assert rows(got) == rows(want)
 
 
 def test_concurrent_delta_registrations_lose_none(tmp_path):

@@ -105,3 +105,29 @@ def test_outputs_ignore_id_order(spark, sig_buckets, corpus_smoke, monkeypatch):
         want.sort_values(cols, ignore_index=True)[cols],
         check_dtype=False,
     )
+
+
+def test_simhash_combo_entries_match_oracle_at_bit_edges(spark):
+    """The SQL-built combo keys equal hashing.simhash_combo_keys on the
+    unsigned simhash, including the values whose sign bit or top/bottom
+    blocks are all ones or all zeros (simhash is stored as a signed long).
+    A signed shift in place of the unsigned one gives the same keys: each
+    block is masked to its width after the shift, and no block reaches
+    past bit 63, so the sign-fill bits never survive the mask."""
+    import random
+
+    from dedup import hashing as H
+
+    rng = random.Random(11)
+    values = [0, -1, -(1 << 63), (1 << 63) - 1, 1, 1 << 62, -(1 << 62)]
+    values += [rng.randrange(-(1 << 63), 1 << 63) for _ in range(50)]
+    df = spark.createDataFrame(
+        [(f"u{i}", v) for i, v in enumerate(values)], "url string, simhash long"
+    )
+    got = {}
+    for r in stages._simhash_combo_entries(df, DEFAULT, carry=("simhash",)).collect():
+        got.setdefault(r["url"], set()).add((r["k1"], r["k2"]))
+    widths, combo = DEFAULT.simhash_block_widths, DEFAULT.pigeonhole_combo
+    for i, v in enumerate(values):
+        want = set(H.simhash_combo_keys(v & ((1 << 64) - 1), widths, combo))
+        assert got[f"u{i}"] == want, v
