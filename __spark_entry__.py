@@ -148,6 +148,13 @@ def _suffix_dup_spans_sampled(spark, sf_dir):
     return _suffix_dup_spans_over(_t(spark, sf_dir, "documents"), rate=4)
 
 
+def _host(url):
+    """The host of `url` (a Column): the text between the FIRST '://' and
+    the next '/', '' when there is no scheme — the pinned rule every
+    url query's DuckDB twin mirrors."""
+    return F.coalesce(F.get(F.split(F.get(F.split(url, "://"), 1), "/"), 0), F.lit(""))
+
+
 def _url_canonicalize(spark, sf_dir):
     """URL normalization + variant collapse — the crawl-side dedup tier
     that runs BEFORE any content hashing: strip the query string and
@@ -177,9 +184,7 @@ def _url_canonicalize(spark, sf_dir):
     base = F.substring_index(
         F.substring_index(F.col("url"), "#", 1), "?", 1
     )
-    host = F.coalesce(
-        F.get(F.split(F.get(F.split(base, "://"), 1), "/"), 0), F.lit("")
-    )
+    host = _host(base)
     labels = F.split(host, "\\.")
     domain = F.when(
         F.size(labels) >= 2, F.array_join(F.slice(labels, -2, 2), ".")
@@ -305,11 +310,7 @@ def _cluster_profile(spark, sf_dir):
 
     cache = ensure_cache(sf_dir, DEFAULT)
     pages = spark.read.parquet(f"{cache}/pages.parquet")
-    host = F.coalesce(
-        F.get(F.split(F.get(F.split(F.col("url"), "://"), 1), "/"), 0),
-        F.lit(""),
-    )
-    meta = pages.select("url", host.alias("host"), "lang", "warc_ts")
+    meta = pages.select("url", _host(F.col("url")).alias("host"), "lang", "warc_ts")
     clusters = _pipeline_tables(spark, sf_dir).df(spark, "clusters")
     return (
         clusters.join(meta, "url")
@@ -2326,16 +2327,11 @@ def _cross_dup_domains(spark, sf_dir):
     one hash-partitioned agg with map-side partials keyed by the host
     pair — output is domains^2-bounded, effectively tiny."""
     out = _pipeline_tables(spark, sf_dir)
-
-    def host(c):
-        return F.coalesce(
-            F.get(F.split(F.get(F.split(F.col(c), "://"), 1), "/"), 0),
-            F.lit(""),
-        )
-
     dups = out.df(spark, "verified_pairs").where(F.col("is_dup"))
     hosts = dups.select(
-        host("url_a").alias("ha"), host("url_b").alias("hb"), "sha_equal"
+        _host(F.col("url_a")).alias("ha"),
+        _host(F.col("url_b")).alias("hb"),
+        "sha_equal",
     )
     return (
         hosts.select(
@@ -2379,10 +2375,7 @@ def _url_blocklist_filter(spark, sf_dir):
     base = F.substring_index(
         F.substring_index(F.col("url"), "#", 1), "?", 1
     )
-    host = F.coalesce(
-        F.get(F.split(F.get(F.split(base, "://"), 1), "/"), 0), F.lit("")
-    )
-    tagged = pages.select(host.alias("host"))
+    tagged = pages.select(_host(base).alias("host"))
     blocklist = (
         tagged.select("host")
         .distinct()

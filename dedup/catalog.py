@@ -17,20 +17,57 @@ Commit semantics: a table is visible iff its commit marker exists; a
 partial write (crash mid-stage) leaves no marker and is overwritten on
 resume — snapshot-commit behavior restated for a filesystem, which is
 what makes the kill/resume test (tests/test_resume.py) meaningful.
+
+No other module knows the warehouse's files; they all go through
+`Warehouse`. Under the root:
+  - `<table>/` with its `_MANIFEST.json`: a base run's tables;
+  - `<table>_delta_<run_id>/`: an increment's deltas (`delta`), listed
+    in `_DELTAS.json` once committed;
+  - `<table>__gen_*/` behind `<table>.POINTER.json` (`dir`, `run_id`,
+    `includes`): tables rewritten by `replace`;
+  - `_INCREMENTS.json`: the increments that committed end to end;
+  - `_LEASE.json`: the single-writer lease;
+  - `_STREAM_BATCH_<id>.done`: the streaming micro-batches that finished;
+  - `stage_metrics/`: per-partition metrics rows, one parquet file per
+    commit.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import shutil
 import threading
 import time
+import uuid
 from dataclasses import dataclass
 from typing import ClassVar, Optional
 
-from pyspark.sql import DataFrame, SparkSession, types as T
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 MANIFEST = "_MANIFEST.json"
+
+
+def _load(path: str, default):
+    """The JSON document at `path`, or `default` when there is none."""
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return default
+
+
+def _commit(path: str, obj) -> None:
+    """Write `obj` as JSON to `path` atomically: a reader sees the old
+    document or the new one, never a partial file."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1)
+    os.replace(tmp, path)
 
 
 class LeaseHeldError(RuntimeError):
@@ -60,16 +97,9 @@ class Warehouse:
     def _pointer_path(self, table: str) -> str:
         return os.path.join(self.root, f"{table}.POINTER.json")
 
-    def _read_pointer(self, table: str) -> Optional[str]:
-        p = self._read_pointer_meta(table)
-        return None if p is None else p["dir"]
-
-    def _read_pointer_meta(self, table: str) -> Optional[dict]:
-        p = self._pointer_path(table)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+    def _read_pointer(self, table: str, key: str = "dir"):
+        """Field `key` of `table`'s pointer file; None without a pointer."""
+        return _load(self._pointer_path(table), {}).get(key)
 
     # -- single-writer lease --------------------------------------------------
     # The pointer-swap / delta-registry protocol assumes SERIAL writers
@@ -143,11 +173,9 @@ class Warehouse:
             its own lease with the same link() step. A fresh lease that
             slipped in between read and rename is restored and the loop
             re-evaluates, so a live writer is never displaced."""
-        import uuid as _uuid
-
         os.makedirs(self.root, exist_ok=True)
         path = self._lease_path()
-        token = _uuid.uuid4().hex
+        token = uuid.uuid4().hex
         stage = path + f".stage.{token}"
         with open(stage, "w") as f:
             f.write(json.dumps(
@@ -222,39 +250,25 @@ class Warehouse:
         except (FileNotFoundError, json.JSONDecodeError, OSError):
             pass
 
+    @contextlib.contextmanager
     def lease(self):
-        """Context manager: `with wh.lease(): ...` — re-entrant holder of
-        the single-writer lease."""
-        import contextlib
-
-        @contextlib.contextmanager
-        def _cm():
-            owned = self.acquire_lease()
-            try:
-                yield
-            finally:
-                if owned:
-                    self.release_lease()
-
-        return _cm()
+        """`with wh.lease(): ...` — re-entrant holder of the single-writer
+        lease."""
+        owned = self.acquire_lease()
+        try:
+            yield
+        finally:
+            if owned:
+                self.release_lease()
 
     # -- commit protocol ----------------------------------------------------
     def is_complete(self, table: str) -> bool:
-        m = self._read_manifest(table)
+        m = self.manifest(table)
         return m is not None and m.get("config_hash") == self.config_hash
 
     def manifest(self, table: str) -> Optional[dict]:
-        """Committed manifest of `table` (None if absent) — public accessor
-        for callers that need commit metadata such as the writing run_id
-        (dedup/streaming.py's bootstrap-replay detection)."""
-        return self._read_manifest(table)
-
-    def _read_manifest(self, table: str) -> Optional[dict]:
-        p = os.path.join(self.path(table), MANIFEST)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+        """Committed manifest of `table` (None if absent)."""
+        return _load(os.path.join(self.path(table), MANIFEST), None)
 
     def write(
         self,
@@ -275,10 +289,6 @@ class Warehouse:
         table's read `schema` (`_read_schema`), so `read` never runs a
         Spark job to infer it from a parquet footer.
         """
-        import uuid as _uuid
-
-        from pyspark.sql import Observation, functions as F
-
         if self._read_pointer(table) is not None:
             # a versioned table must be rewritten through replace(): an
             # in-place overwrite of the current generation is exactly the
@@ -288,7 +298,7 @@ class Warehouse:
             )
         out = self.path(table)
         t0 = time.monotonic()
-        obs = Observation(f"rows_{table}_{_uuid.uuid4().hex[:8]}")
+        obs = Observation(f"rows_{table}_{uuid.uuid4().hex[:8]}")
         w = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -304,10 +314,7 @@ class Warehouse:
             "wall_ms": wall_ms,
             "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        tmp = os.path.join(out, MANIFEST + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=1)
-        os.replace(tmp, os.path.join(out, MANIFEST))
+        _commit(os.path.join(out, MANIFEST), manifest)
         return manifest
 
     def replace(
@@ -330,9 +337,6 @@ class Warehouse:
         is then the single source of truth; keeping the plain dir would
         double storage for no reader benefit). A base snapshot that must
         outlive compaction belongs in an external backup, not here."""
-        import shutil
-        import uuid as _uuid
-
         # The generation name must be unique PER ATTEMPT, not per run_id:
         # a crashed increment is replayed under the same run_id
         # (streaming keys it by batch_id), and if the crashed attempt had
@@ -341,21 +345,17 @@ class Warehouse:
         # lineage still reads it (the new clusters are computed FROM the
         # old ones). Unique names make the rewrite read-safe; superseded
         # and orphaned generations are GC'd only after the swap.
-        gen = f"{table}__gen_{self.run_id}_{_uuid.uuid4().hex[:6]}"
+        gen = f"{table}__gen_{self.run_id}_{uuid.uuid4().hex[:6]}"
         manifest = self.write(df, gen, partition_by=partition_by)
-        tmp = self._pointer_path(table) + ".tmp"
-        with open(tmp, "w") as f:
-            # `includes`: delta tables FOLDED INTO this generation
-            # (compaction). Riding the pointer file makes fold + skip one
-            # atomic commit: active_deltas() subtracts this list, so a
-            # crash after the swap but before the registry GC can never
-            # double-count a folded delta (dedup/incremental.py::compact).
-            json.dump(
-                {"dir": gen, "run_id": self.run_id,
-                 "includes": sorted(includes or [])},
-                f,
-            )
-        os.replace(tmp, self._pointer_path(table))
+        # `includes`: delta tables FOLDED INTO this generation
+        # (compaction). Riding the pointer file makes fold + skip one
+        # atomic commit: active_deltas() subtracts this list, so a crash
+        # after the swap but before the registry GC can never
+        # double-count a folded delta (dedup/incremental.py::compact).
+        _commit(
+            self._pointer_path(table),
+            {"dir": gen, "run_id": self.run_id, "includes": sorted(includes or [])},
+        )
         # GC the superseded generation plus any orphans left by crashed
         # attempts (safe under the increment protocol's single-writer,
         # serial-increments discipline: nothing can be reading them once
@@ -371,6 +371,11 @@ class Warehouse:
     # increment's background commits register their deltas concurrently
     _registry_lock: ClassVar[threading.Lock] = threading.Lock()
 
+    def delta(self, table: str, run_id: Optional[str] = None) -> str:
+        """The name increment `run_id` (default: this warehouse's run_id)
+        commits its delta of `table` under."""
+        return f"{table}_delta_{run_id or self.run_id}"
+
     def register_delta(self, table: str, delta_table: str) -> None:
         """Record a committed `<table>_delta_*` in the warehouse's delta
         registry (atomic read-modify-replace). Discovery of prior deltas
@@ -379,24 +384,14 @@ class Warehouse:
         it was registered after its manifest committed."""
         p = os.path.join(self.root, self.DELTAS)
         with self._registry_lock:
-            reg: dict[str, list[str]] = {}
-            if os.path.exists(p):
-                with open(p) as f:
-                    reg = json.load(f)
+            reg = _load(p, {})
             lst = reg.setdefault(table, [])
             if delta_table not in lst:
                 lst.append(delta_table)
-            tmp = p + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(reg, f, indent=1)
-            os.replace(tmp, p)
+            _commit(p, reg)
 
     def registered_deltas(self, table: str) -> list[str]:
-        p = os.path.join(self.root, self.DELTAS)
-        if not os.path.exists(p):
-            return []
-        with open(p) as f:
-            return list(json.load(f).get(table, []))
+        return list(_load(os.path.join(self.root, self.DELTAS), {}).get(table, []))
 
     def active_deltas(self, table: str) -> list[str]:
         """Registered deltas NOT already folded into the table's current
@@ -404,31 +399,36 @@ class Warehouse:
         must union on top of the base read. This is the read-side half of
         compaction's atomicity: the pointer swap publishes the folded
         generation AND retires its source deltas in one os.replace."""
-        folded = set((self._read_pointer_meta(table) or {}).get("includes", []))
+        folded = set(self._read_pointer(table, "includes") or [])
         return [d for d in self.registered_deltas(table) if d not in folded]
 
-    def unregister_delta(self, table: str, delta_table: str) -> None:
+    def unregister_delta(self, table: str, delta_table: str) -> bool:
         """Remove a delta from the registry AND delete its directory — the
         rollback half of the delta protocol (dedup/streaming.py rolls back
         a crashed micro-batch attempt before replaying it). The registry
         entry is removed first so a crash mid-rollback leaves the delta
         invisible (an unregistered directory is never read), then the
-        directory itself is deleted."""
-        import shutil
-
+        directory itself is deleted. Returns whether there was either to
+        remove."""
         p = os.path.join(self.root, self.DELTAS)
         with self._registry_lock:
-            if os.path.exists(p):
-                with open(p) as f:
-                    reg = json.load(f)
-                lst = reg.get(table, [])
-                if delta_table in lst:
-                    lst.remove(delta_table)
-                    tmp = p + ".tmp"
-                    with open(tmp, "w") as f:
-                        json.dump(reg, f, indent=1)
-                    os.replace(tmp, p)
-        shutil.rmtree(os.path.join(self.root, delta_table), ignore_errors=True)
+            reg = _load(p, {})
+            found = delta_table in reg.get(table, [])
+            if found:
+                reg[table].remove(delta_table)
+                _commit(p, reg)
+        path = os.path.join(self.root, delta_table)
+        found = found or os.path.exists(path)
+        shutil.rmtree(path, ignore_errors=True)
+        return found
+
+    def retire_plain(self, table: str) -> None:
+        """Delete `table`'s plain base directory once its pointer names a
+        generation: readers resolve the pointer, so the base run's
+        original directory is dead storage. Idempotent; a table without
+        a pointer keeps its directory."""
+        if self._read_pointer(table) is not None:
+            shutil.rmtree(os.path.join(self.root, table), ignore_errors=True)
 
     # -- increment commit log -------------------------------------------------
     INCREMENTS = "_INCREMENTS.json"
@@ -439,23 +439,27 @@ class Warehouse:
         log: a crashed attempt's partial deltas must stay rollback-able
         (dedup/streaming.py replays them), never baked into the base."""
         p = os.path.join(self.root, self.INCREMENTS)
-        done: list[str] = []
-        if os.path.exists(p):
-            with open(p) as f:
-                done = json.load(f)
+        done = _load(p, [])
         if run_id not in done:
             done.append(run_id)
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(done, f, indent=1)
-        os.replace(tmp, p)
+        _commit(p, done)
 
     def committed_increments(self) -> list[str]:
-        p = os.path.join(self.root, self.INCREMENTS)
-        if not os.path.exists(p):
-            return []
-        with open(p) as f:
-            return list(json.load(f))
+        return list(_load(os.path.join(self.root, self.INCREMENTS), []))
+
+    # -- streaming micro-batch markers (dedup/streaming.py) -----------------
+    def _batch_marker(self, batch_id: int) -> str:
+        return os.path.join(self.root, f"_STREAM_BATCH_{batch_id}.done")
+
+    def batch_done(self, batch_id: int) -> bool:
+        """Whether streaming micro-batch `batch_id` was fully processed."""
+        return os.path.exists(self._batch_marker(batch_id))
+
+    def mark_batch_done(self, batch_id: int) -> None:
+        # an EMPTY first micro-batch is marked before any stage has
+        # created the warehouse root
+        os.makedirs(self.root, exist_ok=True)
+        _commit(self._batch_marker(batch_id), "done")
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         """The committed `table`, scanned with the schema its manifest
@@ -467,48 +471,45 @@ class Warehouse:
                 f"table {table!r} has no committed manifest for config "
                 f"{self.config_hash} under {self.root}"
             )
-        schema = self._read_manifest(table).get("schema")
+        schema = self.manifest(table).get("schema")
         reader = spark.read
         if schema is not None:
             reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
         return reader.parquet(self.path(table))
 
-    def append_metrics(self, spark: SparkSession, rows: list[dict]) -> None:
-        """Append per-stage / per-partition metrics rows (S4). Plain JSONL —
-        metrics are driver-side tiny; the *data* path never touches this."""
-        os.makedirs(self.root, exist_ok=True)
-        p = os.path.join(self.root, "stage_metrics.jsonl")
-        with open(p, "a") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-
-    def read_metrics(self) -> list[dict]:
-        p = os.path.join(self.root, "stage_metrics.jsonl")
-        if not os.path.exists(p):
-            return []
-        with open(p) as f:
-            return [json.loads(line) for line in f if line.strip()]
-
-    # -- metrics as a queryable Spark table (S4 spec) -----------------------
+    # -- per-partition metrics: the `stage_metrics` table (S4) --------------
     METRICS_TABLE = "stage_metrics"
 
+    def partition_metrics(self, table: str) -> list[dict]:
+        """Per-file (= per write-task partition) rows/bytes of the
+        committed `table` from parquet footers — the per-partition lineage
+        record (S4/U5)."""
+        path = self.path(table)
+        files = sorted(
+            os.path.join(dp, fn)
+            for dp, _d, fns in os.walk(path)
+            for fn in fns
+            if fn.endswith(".parquet")
+        )
+        return [
+            {
+                "partition_id": i,
+                "file": os.path.relpath(f, path),
+                "rows": pq.ParquetFile(f).metadata.num_rows,
+                "bytes": os.path.getsize(f),
+            }
+            for i, f in enumerate(files)
+        ]
+
     def write_metrics_table(self, spark: SparkSession, rows: list[dict]) -> None:
-        """Append a run's per-partition metrics rows to the `stage_metrics`
-        parquet table — the S4 shape (executors on a cluster cannot see
-        the driver's JSONL; downstream jobs query this table with
-        `spark.read.parquet`). One file per call (a run or an increment),
-        written by the driver with pyarrow, like the manifests and the
-        JSONL beside it: no Spark job. The file lands under a dot-prefixed
-        name Spark's reader skips and is committed by os.replace, so a
-        crash never leaves a partial file visible."""
+        """Append per-partition metrics rows to the `stage_metrics` parquet
+        table, which downstream jobs query with `spark.read.parquet`. One
+        file per call (a pipeline commit appends its table's rows), written
+        by the driver with pyarrow: no Spark job. The file lands under a
+        dot-prefixed name Spark's reader skips and is committed by
+        os.replace, so a crash never leaves a partial file visible."""
         if not rows:
             return
-        import uuid as _uuid
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
         names = METRICS_SCHEMA.fieldNames()
         table = pa.Table.from_pylist(
             [{k: r.get(k) for k in names} for r in rows],
@@ -516,10 +517,18 @@ class Warehouse:
         )
         out = os.path.join(self.root, self.METRICS_TABLE)
         os.makedirs(out, exist_ok=True)
-        name = f"part-{_uuid.uuid4().hex}.parquet"
+        name = f"part-{uuid.uuid4().hex}.parquet"
         tmp = os.path.join(out, f".{name}.tmp")
         pq.write_table(table, tmp)
         os.replace(tmp, os.path.join(out, name))
+
+    def read_metrics(self) -> list[dict]:
+        """Every row of the `stage_metrics` table as a dict, read by the
+        driver (no Spark job); [] before the first commit."""
+        out = os.path.join(self.root, self.METRICS_TABLE)
+        if not os.path.isdir(out):
+            return []
+        return pq.read_table(out, schema=to_arrow_schema(METRICS_SCHEMA)).to_pylist()
 
 
 #: the `stage_metrics` table's columns

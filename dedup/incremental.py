@@ -20,7 +20,7 @@ clusters). What is incremental vs recomputed:
     SAME partition a full union run would (star edges preserve old
     components exactly; tests/test_incremental.py asserts the equality).
     A dup-heavy increment takes the same exact-dup contraction a fresh
-    run takes (pipeline._clusters).
+    run takes (the `cluster` build in pipeline._compose).
 
 Append semantics: the delta tables (`DELTA_TABLES` as `<table>_delta_
 <run_id>`) commit under the same manifest protocol, in the background
@@ -45,9 +45,7 @@ it.
 
 from __future__ import annotations
 
-import os
 import re
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -127,39 +125,28 @@ def compact(
     )
     folded: dict[str, list[str]] = {}
     with wh.lease():
+        done = wh.committed_increments()
         for table in DELTA_TABLES:
-            # GC the superseded PLAIN base directory: once the pointer
-            # references a generation, the base run's original table is
-            # dead storage (readers resolve the pointer) — at 10^12 docs
-            # leaving the old pages snapshot behind doubles the footprint.
-            # Idempotent, so a crash here just re-runs next compact.
-            if wh._read_pointer(table) is not None:
-                plain = os.path.join(wh.root, table)
-                if os.path.isdir(plain):
-                    shutil.rmtree(plain, ignore_errors=True)
+            # GC the superseded PLAIN base directory: at 10^12 docs leaving
+            # the old pages snapshot behind doubles the footprint. A crash
+            # here just re-runs it next compact.
+            wh.retire_plain(table)
             # finish any crashed prior compaction's GC FIRST: a delta both
-            # registered and included was already folded into the live
-            # generation — retire it before this compaction swaps in a new
-            # pointer whose `includes` would no longer list it (leaving it
-            # registered past that swap would double-count it).
-            included = set(
-                (wh._read_pointer_meta(table) or {}).get("includes", [])
-            )
+            # registered and folded (so not active) was already folded into
+            # the live generation — retire it before this compaction swaps
+            # in a new pointer whose `includes` would no longer list it
+            # (leaving it registered past that swap would double-count it).
+            active = wh.active_deltas(table)
             for d in wh.registered_deltas(table):
-                if d in included:
+                if d not in active:
                     wh.unregister_delta(table, d)
             # fold ONLY deltas of increments that committed end-to-end
             # (catalog increment log): a crashed attempt's partial deltas
             # must stay visible to rollback_increment for the replay —
             # folding them would bake partial state into the base and make
             # the rerun's url-overlap guard reject its own batch
-            done = set(wh.committed_increments())
-            deltas = [
-                d
-                for d in wh.active_deltas(table)
-                if wh.is_complete(d)
-                and d.removeprefix(f"{table}_delta_") in done
-            ]
+            committed = {wh.delta(table, r) for r in done}
+            deltas = [d for d in active if d in committed and wh.is_complete(d)]
             if not deltas:
                 continue
             view = wh.read(spark, table)
@@ -172,9 +159,7 @@ def compact(
             # this fold created the table's first generation? the plain
             # base directory is superseded as of the swap — GC it now
             # (the loop-top GC covers a crash landing in between)
-            plain = os.path.join(wh.root, table)
-            if os.path.isdir(plain):
-                shutil.rmtree(plain, ignore_errors=True)
+            wh.retire_plain(table)
             folded[table] = deltas
     return folded
 
@@ -235,9 +220,9 @@ def run_incremental(
         # the attempt rollback-able and never compactable — by design)
         wh.mark_increment_committed(run_id)
         return {
-            "signatures_delta": wh.read(spark, f"signatures_delta_{run_id}"),
-            "buckets_delta": wh.read(spark, f"buckets_delta_{run_id}"),
-            "verified_pairs_delta": wh.read(spark, f"verified_pairs_delta_{run_id}"),
+            "signatures_delta": wh.read(spark, wh.delta("signatures")),
+            "buckets_delta": wh.read(spark, wh.delta("buckets")),
+            "verified_pairs_delta": wh.read(spark, wh.delta("verified_pairs")),
             "clusters": wh.read(spark, "clusters"),
             "canonical_pages": wh.read(spark, "canonical_pages"),
         }

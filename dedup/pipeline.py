@@ -8,10 +8,11 @@ call it and differ only in data: how each table commits, and the
 committed global state, if any, that the run folds into. Each table's
 write + commit manifest is the resume point, the lineage cut, and where
 per-partition metrics are harvested (one parquet file per write task =
-one partition's lineage record).
+one partition's lineage record), appended to the warehouse's
+`stage_metrics` table as the commit lands.
 
 Pipelined commits: a stage's compute runs on the driver thread (persist +
-count where later stages reuse it); its write, commit and metrics harvest
+count where later stages reuse it); its write, commit and metrics append
 run in a background thread while the next stage computes from the cached
 relation, so a healthy run never serializes behind file IO + commit
 barriers — the serial fraction scaling is most sensitive to
@@ -30,7 +31,6 @@ same composition (tests/test_resume.py: byte-identical final tables).
 from __future__ import annotations
 
 import functools
-import os
 import threading
 import time
 import uuid
@@ -47,7 +47,6 @@ from .cc import (
     connected_components_contracted,
 )
 from .config import DedupConfig
-from .spark_metrics import shuffle_totals
 
 #: the pipeline's tables in commit order; also the valid `stop_after` names
 TABLES = (
@@ -61,35 +60,9 @@ class RunResult:
     warehouse: Warehouse
     stages_run: list[str] = field(default_factory=list)
     stages_skipped: list[str] = field(default_factory=list)
-    metrics: list[dict] = field(default_factory=list)  # per-partition rows
 
     def df(self, spark: SparkSession, table: str) -> DataFrame:
         return self.warehouse.read(spark, table)
-
-
-def _partition_metrics(path: str) -> list[dict]:
-    """Per-file (= per write-task partition) rows/bytes from parquet
-    footers — the per-partition lineage record (S4/U5)."""
-    import pyarrow.parquet as pq
-
-    out = []
-    files = sorted(
-        os.path.join(dp, fn)
-        for dp, _d, fns in os.walk(path)
-        for fn in fns
-        if fn.endswith(".parquet")
-    )
-    for i, f in enumerate(files):
-        md = pq.ParquetFile(f).metadata
-        out.append(
-            {
-                "partition_id": i,
-                "file": os.path.relpath(f, path),
-                "rows": md.num_rows,
-                "bytes": os.path.getsize(f),
-            }
-        )
-    return out
 
 
 def run(
@@ -146,10 +119,9 @@ def execute(
     a table it leaves out is not committed, so its build stays lazy and
     runs only if a later build reads it. prior: the committed global
     pages, signatures, buckets and clusters this run folds into (none
-    for a fresh run). Each commit appends its per-partition metrics rows
-    to the warehouse's stage_metrics.jsonl and to the result's
-    `metrics`; once every commit has landed, the run's rows are appended
-    to the `stage_metrics` parquet table in one driver-written file."""
+    for a fresh run). Each commit appends its table's per-partition
+    metrics rows to the warehouse's `stage_metrics` table, so the rows
+    of every table committed before a failure survive it."""
     st = _Stages(spark, wh, commits, resume, stop_after)
     try:
         _compose(st, pages, cfg, prior or {})
@@ -161,7 +133,6 @@ def execute(
             th.join()
         st.release()
     st.join()  # re-raises a background failure
-    wh.write_metrics_table(spark, st.res.metrics)
     return st.res
 
 
@@ -275,7 +246,6 @@ class _Stages:
         self.cached: dict[str, DataFrame] = {}  # persisted, until release()
         self.writes: dict[str, threading.Thread] = {}
         self.errors: list[BaseException] = []
-        self.lock = threading.Lock()
 
     def __call__(self, name: str, build, cache: bool = False):
         """Table `name` as a callable returning its DataFrame: the
@@ -313,9 +283,7 @@ class _Stages:
 
     def table(self, name: str) -> str:
         """The warehouse table this run commits `name` as."""
-        if self.commits.get(name) == "delta":
-            return f"{name}_delta_{self.wh.run_id}"
-        return name
+        return self.wh.delta(name) if self.commits.get(name) == "delta" else name
 
     def read(self, name: str) -> DataFrame:
         """This run's committed `name`, read back once its commit lands."""
@@ -348,11 +316,9 @@ class _Stages:
             raise self.errors[0]
 
     def _commit(self, name: str, df: DataFrame, compute_ms: int) -> None:
-        """Commit `name` in a background thread, which then harvests its
-        per-partition metrics (pyarrow footers; no Spark job). A row
-        carries compute + write time and the cumulative session
-        shuffle/IO at commit (docs/SCALE.md's shuffle budget, measured;
-        per-stage deltas blur under pipelined commits, totals are exact)."""
+        """Commit `name` in a background thread, which then appends its
+        per-partition metrics rows (pyarrow footers; no Spark job) to the
+        `stage_metrics` table. A row carries compute + write time."""
         df, by_day = stages.day_layout(df)
         wh, how, table = self.wh, self.commits[name], self.table(name)
 
@@ -364,9 +330,6 @@ class _Stages:
                 if how == "delta":
                     wh.register_delta(name, table)
                 wall = compute_ms + int((time.monotonic() - t0) * 1000)
-                shuf = {
-                    f"cum_{k}": v for k, v in shuffle_totals(self.spark).items()
-                }
                 rows = [
                     {
                         "run_id": wh.run_id,
@@ -374,14 +337,11 @@ class _Stages:
                         "wall_ms": wall,
                         "config_hash": wh.config_hash,
                         "ts": man["written_at"],
-                        **shuf,
                         **p,
                     }
-                    for p in _partition_metrics(wh.path(table))
+                    for p in wh.partition_metrics(table)
                 ]
-                with self.lock:
-                    self.res.metrics.extend(rows)
-                    wh.append_metrics(self.spark, rows)
+                wh.write_metrics_table(self.spark, rows)
             except BaseException as exc:  # re-raised by join()
                 self.errors.append(exc)
 

@@ -4,11 +4,12 @@ docs/SCALE.md prices the pipeline's shuffle volume analytically; this
 module measures it. The AppStatusStore is populated whether or not the
 UI server runs (we set spark.ui.enabled=false), so the totals are
 available in tests, benches, and production alike. Used by
-pipeline.run's stage commits (cumulative snapshot per stage row in
-stage_metrics.jsonl) and jobs/run_dedup.py (totals in the summary JSON
-line, so every bench/scaling log row carries the measured shuffle volume
-— at two parallelism levels the volumes must match, which is the
-evidence that the legs did identical work and only the host varied).
+jobs/run_dedup.py (session totals in the summary JSON line, so every
+bench/scaling log row carries the measured shuffle volume — at two
+parallelism levels the volumes must match, which is the evidence that
+the legs did identical work and only the host varied) and by perfbench's
+`shuffle_write_mb`. It walks every stage the session has retained, so
+it is read once per run, not per stage commit.
 """
 
 from __future__ import annotations

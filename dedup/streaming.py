@@ -17,8 +17,8 @@ micro-batch whose epoch did not commit to the checkpoint, so `fold` is
 idempotent over batch_id:
 
   - a fully-processed batch writes an atomic `_STREAM_BATCH_<id>.done`
-    marker in the warehouse root (os.replace); a replay that sees the
-    marker skips the batch entirely.
+    marker in the warehouse root (Warehouse.mark_batch_done); a replay
+    that sees the marker skips the batch entirely.
   - a replay of a CRASHED attempt first rolls back that attempt's partial
     delta state (`rollback_increment`: unregister + delete every
     `<table>_delta_s<id>`), then re-runs. The rerun is value-identical:
@@ -44,7 +44,6 @@ bootstrap replays through pipeline.run's own stage-resume machinery
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,22 +51,6 @@ from pyspark.sql import DataFrame, SparkSession
 from .catalog import Warehouse
 from .config import DedupConfig
 from .incremental import BASE_TABLES, DELTA_TABLES, compact, run_incremental
-
-
-def _marker_path(warehouse_root: str, batch_id: int) -> str:
-    return os.path.join(warehouse_root, f"_STREAM_BATCH_{batch_id}.done")
-
-
-def _mark_done(warehouse_root: str, batch_id: int) -> None:
-    # an EMPTY first micro-batch writes its marker before any stage has
-    # created the warehouse root (Warehouse is a plain dataclass and does
-    # no makedirs) — create it here so the marker write cannot fail
-    os.makedirs(warehouse_root, exist_ok=True)
-    p = _marker_path(warehouse_root, batch_id)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        f.write("done\n")
-    os.replace(tmp, p)
 
 
 def rollback_increment(wh: Warehouse, run_id: str) -> list[str]:
@@ -83,11 +66,8 @@ def rollback_increment(wh: Warehouse, run_id: str) -> list[str]:
     replaces them with an identical partition (module docstring)."""
     rolled = []
     for t in DELTA_TABLES:
-        name = f"{t}_delta_{run_id}"
-        if name in wh.registered_deltas(t) or os.path.exists(
-            os.path.join(wh.root, name)
-        ):
-            wh.unregister_delta(t, name)
+        name = wh.delta(t, run_id)
+        if wh.unregister_delta(t, name):
             rolled.append(name)
     return rolled
 
@@ -133,15 +113,15 @@ def run_stream(
     result = StreamResult()
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(_marker_path(warehouse_root, batch_id)):
-            result.skipped.append(batch_id)
-            return
         run_id = f"s{batch_id}"
         wh = Warehouse(
             root=warehouse_root, config_hash=cfg.config_hash(), run_id=run_id
         )
+        if wh.batch_done(batch_id):
+            result.skipped.append(batch_id)
+            return
         if batch_df.isEmpty():
-            _mark_done(warehouse_root, batch_id)
+            wh.mark_batch_done(batch_id)
             result.processed.append(batch_id)
             return
         # Bootstrap detection must survive a crashed bootstrap's replay:
@@ -170,7 +150,7 @@ def run_stream(
             run_incremental(
                 spark, batch_df, cfg, warehouse_root, run_id=run_id
             )
-        _mark_done(warehouse_root, batch_id)
+        wh.mark_batch_done(batch_id)
         result.processed.append(batch_id)
         if (
             compact_every is not None

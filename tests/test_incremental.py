@@ -343,7 +343,7 @@ def test_run_and_increment_release_caches_and_record_metrics(spark, dup_heavy):
     """Neither a run nor an increment leaves a cached relation behind,
     and an increment appends per-partition metrics rows under its run_id
     for every table it commits, summing to each table's committed rows,
-    to the JSONL and to the stage_metrics table alike."""
+    in the stage_metrics table as read_metrics and Spark read it."""
     import os
 
     from dedup.catalog import METRICS_SCHEMA, Warehouse
@@ -467,3 +467,38 @@ def test_concurrent_delta_registrations_lose_none(tmp_path):
     assert errors == []
     for t in tables:
         assert wh.registered_deltas(t) == [f"{t}_delta_r{i}" for i in range(25)]
+
+
+def test_concurrent_metrics_appends_lose_none(tmp_path):
+    """Commits append their metrics rows to the stage_metrics table from
+    background threads at once: every appended row must read back."""
+    import sys
+    import threading
+
+    from dedup.catalog import Warehouse
+
+    wh = Warehouse(str(tmp_path), "cfg", "r1")
+    errors = []
+
+    def append(t):
+        try:
+            for i in range(10):
+                wh.write_metrics_table(None, [{"stage": t, "partition_id": i, "rows": i}])
+        except OSError as exc:
+            errors.append(exc)
+
+    tables = [f"t{i}" for i in range(16)]
+    threads = [threading.Thread(target=append, args=(t,)) for t in tables]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    got = sorted((r["stage"], r["partition_id"], r["rows"]) for r in wh.read_metrics())
+    assert got == sorted((t, i, i) for t in tables for i in range(10))

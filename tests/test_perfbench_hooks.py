@@ -37,6 +37,22 @@ def test_traced_catalog_methods_exist():
         assert callable(getattr(Warehouse, attr, None)), f"Warehouse.{attr}"
 
 
+def test_catalog_call_shapes():
+    """perfbench builds a Warehouse positionally and reads the table of a
+    write or replace call as its third positional argument (`args[2]`,
+    counting self)."""
+    import inspect
+
+    from dedup.catalog import Warehouse
+
+    def params(fn):
+        return list(inspect.signature(fn).parameters)[1:]  # after self
+
+    assert params(Warehouse.__init__) == ["root", "config_hash", "run_id"]
+    assert params(Warehouse.write) == ["df", "table", "partition_by"]
+    assert params(Warehouse.replace) == ["df", "table", "partition_by", "includes"]
+
+
 def test_tracer_installs_and_uninstalls(spark):
     """The whole `install()` step, as a traced run makes it, then undone."""
     from dedup import stages

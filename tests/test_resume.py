@@ -121,3 +121,40 @@ def test_metrics_have_per_partition_rows(three_runs):
     assert {"signatures", "buckets", "clusters"} <= stages
     for m in rows:
         assert m["rows"] >= 0 and m["bytes"] > 0 and "partition_id" in m
+
+
+def test_metrics_survive_a_failed_run(spark, corpus_smoke, tmp_path, monkeypatch):
+    """Each commit appends its own per-partition metrics rows, so a run
+    that fails in stage 4 leaves in the stage_metrics table the rows of
+    exactly the tables it committed before the failure, each summing to
+    its manifest's rows."""
+    from pyspark.sql import functions as F
+
+    from dedup import stages
+    from dedup.catalog import Warehouse
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("stage 4 failed")
+
+    monkeypatch.setattr(stages, "stage4_verify", fail)
+    root = str(tmp_path / "wh")
+    with pytest.raises(RuntimeError, match="stage 4 failed"):
+        pipeline.run(spark, _pages_df(spark, corpus_smoke), DEFAULT, root)
+    committed = pipeline.TABLES[: pipeline.TABLES.index("verified_pairs")]
+    assert committed == ("pages", "signatures", "buckets", "candidate_pairs", "dropped_buckets")
+    table = spark.read.parquet(os.path.join(root, Warehouse.METRICS_TABLE))
+    got = {
+        r["stage"]: r
+        for r in table.groupBy("stage")
+        .agg(
+            F.sum("rows").alias("rows"),
+            F.count(F.lit(1)).alias("n"),
+            F.countDistinct("partition_id").alias("ids"),
+        )
+        .collect()
+    }
+    assert set(got) == set(committed)
+    wh = Warehouse(root, DEFAULT.config_hash(), "check")
+    for t in committed:
+        assert got[t]["rows"] == wh.manifest(t)["rows"], t
+        assert got[t]["n"] == got[t]["ids"] == len(wh.partition_metrics(t)), t
