@@ -35,7 +35,7 @@ def main() -> None:
     from dedup.config import DEFAULT
     from dedup.pipeline import run
     from dedup.session import build_session
-    from dedup.synth import load_pages_spark
+    from dedup.synth import snapshot_pages
     import __spark_entry__ as contract
 
     sf = float(os.path.basename(args.sf_dir.rstrip("/")).replace("sf", "") or 0)
@@ -61,28 +61,15 @@ def main() -> None:
     timings: dict[str, float] = {}
     wh_root = tempfile.mkdtemp(prefix="dedup_bench_wh_")
     try:
-        # untimed prep: synthesize + snapshot the input corpus (byte-scaled
-        # layout), mirroring jobs/run_dedup.py — the production input is a
-        # table that already exists; synthesis is not dedup throughput
+        # untimed prep: synthesize + snapshot the input corpus
+        # (synth.snapshot_pages, as jobs/run_dedup.py does) — the production
+        # input is a table that already exists; synthesis is not dedup
+        # throughput
         from dedup.catalog import Warehouse
-
-        from dedup.synth import corpus_nbytes, make_corpus, snapshot_partitions
 
         t0 = time.monotonic()
         wh0 = Warehouse(wh_root, DEFAULT.config_hash(), "bench")
-        corpus = make_corpus(args.sf_dir)
-        pages_in = load_pages_spark(
-            spark, args.sf_dir, replicate=args.replicate, corpus=corpus
-        )
-        from pyspark.sql import functions as F
-
-        n_parts = snapshot_partitions(corpus_nbytes(corpus) * args.replicate)
-        pages_in = pages_in.withColumn("warc_day", F.to_date("warc_ts"))
-        wh0.write(
-            pages_in.repartitionByRange(n_parts, "warc_day", "url"),
-            "pages",
-            partition_by=["warc_day"],
-        )
+        snapshot_pages(spark, wh0, args.sf_dir, replicate=args.replicate)
         pages = wh0.read(spark, "pages")
         n_docs = pages.count()
         timings["synth_and_load"] = round(time.monotonic() - t0, 2)

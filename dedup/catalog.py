@@ -333,7 +333,7 @@ class Warehouse:
         generation is deleted after the swap. Retention contract: the base
         run's PLAIN directory (no `__gen_` suffix) is kept by replace()
         itself, but it is NOT permanent — `incremental.compact()` retires
-        it once a compacted generation pointer covers it (the pointer file
+        it once a generation pointer covers it (the pointer file
         is then the single source of truth; keeping the plain dir would
         double storage for no reader benefit). A base snapshot that must
         outlive compaction belongs in an external backup, not here."""

@@ -57,6 +57,8 @@ from .config import DedupConfig
 
 #: the tables an increment commits as `<table>_delta_<run_id>`, in order
 DELTA_TABLES = ("pages", "signatures", "buckets", "verified_pairs")
+#: the global tables an increment replaces whole (catalog.replace)
+REPLACED_TABLES = ("clusters", "canonical_pages")
 #: the tables a completed base run has committed
 BASE_TABLES = (*DELTA_TABLES, "clusters")
 # how an increment commits each pipeline table (pipeline.execute): the
@@ -65,8 +67,7 @@ BASE_TABLES = (*DELTA_TABLES, "clusters")
 # dropped-bucket report is never computed
 _COMMITS = {
     **dict.fromkeys(DELTA_TABLES, "delta"),
-    "clusters": "replace",
-    "canonical_pages": "replace",
+    **dict.fromkeys(REPLACED_TABLES, "replace"),
 }
 
 
@@ -161,6 +162,11 @@ def compact(
             # (the loop-top GC covers a crash landing in between)
             wh.retire_plain(table)
             folded[table] = deltas
+        # the replaced globals never get deltas, so the loop above never
+        # reaches them; an increment's swap already superseded their
+        # plain base directories
+        for table in REPLACED_TABLES:
+            wh.retire_plain(table)
     return folded
 
 

@@ -11,15 +11,18 @@ per-partition metrics are harvested (one parquet file per write task =
 one partition's lineage record), appended to the warehouse's
 `stage_metrics` table as the commit lands.
 
-Pipelined commits: a stage's compute runs on the driver thread (persist +
-count where later stages reuse it); its write, commit and metrics append
-run in a background thread while the next stage computes from the cached
-relation, so a healthy run never serializes behind file IO + commit
-barriers — the serial fraction scaling is most sensitive to
-(docs/SCALE.md). The driver waits on writes only for `pages` (read
-back), for every write before `verified_pairs` once verify is
-materialized (so the stage-3 caches can go), for a delta or a replaced
-table before a later stage reads it back, and at the end.
+Pipelined commits: every committed table is consumed one way. Its write,
+commit and metrics append run in a background thread, and a later stage
+reads the committed table back, which first joins that commit; so a
+stage's Spark compute runs inside its own write job instead of in a
+separate persist + count. Only two relations are persisted: the
+fused stage-1/2 relation both of its tables are written from, and stage
+3's entries, which candidate_pairs and dropped_buckets share. Commits
+still overlap where no stage reads the other's output: the signatures
+and buckets writes, the candidate_pairs and dropped_buckets writes, and
+canonical_pages with the metrics appends. The driver waits for a table
+before a later stage reads it back, for every write before
+`verified_pairs` before the stage-3 and fused caches go, and at the end.
 
 Resume: `run(..., resume=True)` skips any table committed under the SAME
 config_hash; a crash mid-stage leaves no manifest, so the stage reruns
@@ -151,8 +154,7 @@ def _compose(
     # stage 0: snapshot the input (the Iceberg table stand-in; byte-identity
     # of `text` is checked against THIS table by the invariant tests),
     # laid out by warc_day (stages.day_layout)
-    st("pages", lambda: pages)
-    pages_t = st.read("pages")
+    pages_t = st("pages", lambda: pages)()
     pages_all = over("pages", pages_t)
 
     # stages 1+2: ONE Arrow pass (stages.stage12_fused) computes both
@@ -165,9 +167,9 @@ def _compose(
     buckets = st("buckets", lambda: stages.buckets_from_fused(fused()))
 
     # stage 3: candidates and the dropped-bucket report share the
-    # persisted entries relation; nothing downstream reads
-    # dropped_buckets, so its write rides in the background too. Folding
-    # into prior state, only pairs touching this run's urls are emitted.
+    # persisted entries relation, and their two writes run side by side.
+    # Folding into prior state, only pairs touching this run's urls are
+    # emitted.
     @functools.cache
     def cand() -> stages.CandidateOut:
         out = stages.stage3_candidates(
@@ -177,19 +179,18 @@ def _compose(
         st.cached["entries"] = out.entries  # persisted by stage 3
         return out
 
-    candidates = st("candidate_pairs", lambda: cand().candidates, cache=True)
+    candidates = st("candidate_pairs", lambda: cand().candidates)
     st("dropped_buckets", lambda: cand().dropped_buckets)
 
-    # stage 4: by the time verify's (long) compute finishes, every
-    # upstream write has landed; the join re-raises any background
-    # failure, and once verify is materialized the stage-3 and fused
-    # caches go before CC
+    # stage 4: verify reads the committed candidates (joining their
+    # commit, which re-raises a failure before verify is built); the join
+    # below waits for dropped_buckets too, and once verify has landed the
+    # stage-3 and fused caches go before CC
     verified = st(
         "verified_pairs",
         lambda: stages.stage4_verify(
             candidates(), over("signatures", sigs()), pages_all, cfg
         ),
-        cache=True,
     )
     st.join(*TABLES[: TABLES.index("verified_pairs")])
 
@@ -200,7 +201,7 @@ def _compose(
     # (tests/test_incremental.py)
     def cluster() -> DataFrame:
         edges = verified().filter("is_dup").select("url_a", "url_b")
-        st.release("fused", "entries", "candidate_pairs")
+        st.release("fused", "entries")
         if "clusters" in prior:
             old = prior["clusters"].filter(F.col("url") != F.col("cluster_id"))
             edges = edges.unionByName(old.select(
@@ -213,12 +214,13 @@ def _compose(
         # pages delta, from the committed manifests) — the dup-heavy
         # regime it exists for (a replicated corpus runs ~32 pairs/doc; a
         # lightly-duplicated one runs ~3). Its sha map is the committed
-        # global signatures view (the fused cache is gone by now): an
-        # edge url missing from it would drop out of the inner join.
+        # global signatures view: an edge url missing from it would drop
+        # out of the inner join.
         wh = st.wh
         n_docs = sum(wh.manifest(t)["rows"] for t in ("pages", *wh.active_deltas("pages")))
-        if st.counts["verified_pairs"] > 8 * max(1, n_docs):
-            sha = over("signatures", st.read("signatures")).select("url", "text_sha")
+        n_pairs = wh.manifest(st.table("verified_pairs"))["rows"]
+        if n_pairs > 8 * max(1, n_docs):
+            sha = over("signatures", sigs()).select("url", "text_sha")
             return connected_components_contracted(
                 edges, urls, sha, cfg, local_max_edges=LOCAL_CC_MAX_EDGES
             )
@@ -226,7 +228,7 @@ def _compose(
             edges, urls, cfg, local_max_edges=LOCAL_CC_MAX_EDGES
         )
 
-    clusters = st("clusters", cluster, cache=True)
+    clusters = st("clusters", cluster)
     # stage 6: the canonical pick
     st("canonical_pages", lambda: stages.stage6_canonical(clusters(), pages_all))
 
@@ -242,41 +244,32 @@ class _Stages:
         self.spark, self.wh, self.commits = spark, wh, commits
         self.resume, self.stop_after = resume, stop_after
         self.res = RunResult(warehouse=wh)
-        self.counts: dict[str, int] = {}  # counted (or committed) rows
         self.cached: dict[str, DataFrame] = {}  # persisted, until release()
         self.writes: dict[str, threading.Thread] = {}
         self.errors: list[BaseException] = []
 
-    def __call__(self, name: str, build, cache: bool = False):
-        """Table `name` as a callable returning its DataFrame: the
-        committed table when resuming; `build` itself, called on first
-        use, when this run does not commit `name`; else `build()` with
-        its commit started in the background. A table written under its
-        own name is then reused in memory (persisted and counted here
-        when `cache`); a delta or a replaced table is read back once its
-        commit lands. A replacement's lineage may read the generation its
-        swap deletes (an increment's clusters are computed from the old
-        ones); a delta's consumers union it with the prior views' file
-        scans, and with the delta's side fed from memory instead, an
-        incremental_append call (perfbench, 4-core VM) ran 78 Spark jobs
-        rather than 57. Raises _Stop after the `stop_after` table."""
+    def __call__(self, name: str, build):
+        """Table `name` as a callable returning its DataFrame: `build`
+        itself, called on first use, when this run does not commit
+        `name`; else a read of the committed table, which joins its
+        commit. A committed table is skipped when resuming, else `build()`
+        is committed in the background, so its compute runs inside the
+        write job. (Feeding later stages from memory instead ran more
+        Spark jobs on traced perfbench calls: 42 rather than 36 on
+        fresh_light, 67 rather than 43 on incremental_append.) Raises
+        _Stop after the `stop_after` table."""
         how = self.commits.get(name)
         if how is None:
             out = functools.cache(build)
-        elif self.resume and self.wh.is_complete(name):
-            self.res.stages_skipped.append(name)
-            out = functools.cache(lambda: self.read(name))
         else:
-            t0 = time.monotonic()
-            df = build()
-            if cache and how == "write":
-                df = self.cache(name, df)
-            self._commit(name, df, int((time.monotonic() - t0) * 1000))
-            self.res.stages_run.append(name)
-            if how == "write":
-                out = lambda: df  # noqa: E731
+            if self.resume and self.wh.is_complete(name):
+                self.res.stages_skipped.append(name)
             else:
-                out = functools.cache(lambda: self.read(name))
+                t0 = time.monotonic()
+                df = build()
+                self._commit(name, df, int((time.monotonic() - t0) * 1000))
+                self.res.stages_run.append(name)
+            out = functools.cache(lambda: self.read(name))
         if name == self.stop_after:
             raise _Stop
         return out
@@ -288,14 +281,12 @@ class _Stages:
     def read(self, name: str) -> DataFrame:
         """This run's committed `name`, read back once its commit lands."""
         self.join(name)
-        table = self.table(name)
-        self.counts.setdefault(name, self.wh.manifest(table)["rows"])
-        return self.wh.read(self.spark, table)
+        return self.wh.read(self.spark, self.table(name))
 
     def cache(self, key: str, df: DataFrame) -> DataFrame:
         """Persist (spilling) and count `df`; release(key) unpersists it."""
         df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        self.counts[key] = df.count()
+        df.count()
         self.cached[key] = df
         return df
 
@@ -318,7 +309,8 @@ class _Stages:
     def _commit(self, name: str, df: DataFrame, compute_ms: int) -> None:
         """Commit `name` in a background thread, which then appends its
         per-partition metrics rows (pyarrow footers; no Spark job) to the
-        `stage_metrics` table. A row carries compute + write time."""
+        `stage_metrics` table. A row's `wall_ms` is the build's driver
+        time plus the write, which runs the table's compute."""
         df, by_day = stages.day_layout(df)
         wh, how, table = self.wh, self.commits[name], self.table(name)
 

@@ -263,6 +263,30 @@ def snapshot_partitions(
 
 
 # --- Spark-side loading (imported lazily so oracle/tests stay JVM-free) ----
+def snapshot_pages(spark, wh, sf_dir: str, replicate: int = 1,
+                   target_file_bytes: int = 8 << 20) -> None:
+    """Synthesize the corpus of `sf_dir` and commit it as warehouse `wh`'s
+    `pages` table: the input snapshot a run reads (the production input
+    is an Iceberg table that already exists). The layout scales with
+    input bytes (snapshot_partitions), is partitioned by warc_day (the
+    days(warc_ts) stand-in), and a range repartition on (warc_day, url)
+    keeps one writer task per range so the day split does not multiply
+    the file count."""
+    from pyspark.sql import functions as F
+
+    corpus = make_corpus(sf_dir)
+    pages = load_pages_spark(spark, sf_dir, replicate=replicate, corpus=corpus)
+    n_parts = snapshot_partitions(
+        corpus_nbytes(corpus) * replicate, target_file_bytes=target_file_bytes
+    )
+    pages = pages.withColumn("warc_day", F.to_date("warc_ts"))
+    wh.write(
+        pages.repartitionByRange(n_parts, "warc_day", "url"),
+        "pages",
+        partition_by=["warc_day"],
+    )
+
+
 def pages_schema():
     from pyspark.sql import types as T
 

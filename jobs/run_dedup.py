@@ -41,7 +41,7 @@ def main() -> None:
     from dedup import config as C
     from dedup.pipeline import run
     from dedup.session import build_session
-    from dedup.synth import load_pages_spark
+    from dedup.synth import snapshot_pages
     from pyspark.sql import functions as F
 
     cfg = C.DEFAULT if args.config == "default" else C.BANDING16
@@ -59,27 +59,9 @@ def main() -> None:
 
         wh = Warehouse(args.warehouse, cfg.config_hash(), args.resume_run_id or "prep")
         if not wh.is_complete("pages"):
-            from dedup.synth import corpus_nbytes, make_corpus, snapshot_partitions
-
-            corpus = make_corpus(args.input)  # synthesized once, reused below
-            pages = load_pages_spark(
-                spark, args.input, replicate=args.replicate, corpus=corpus
-            )
-            # Snapshot layout scales with input BYTES (target file size),
-            # not a fixed file count, and stays independent of which
-            # cluster size wrote it (reproducible layout). Partitioned by
-            # warc_day (the days(warc_ts) stand-in); the range
-            # repartition keeps one writer task per (day, url) range so
-            # day partitioning doesn't multiply the file count.
-            n_parts = snapshot_partitions(
-                corpus_nbytes(corpus) * args.replicate,
+            snapshot_pages(
+                spark, wh, args.input, replicate=args.replicate,
                 target_file_bytes=args.target_file_mb << 20,
-            )
-            pages = pages.withColumn("warc_day", F.to_date("warc_ts"))
-            wh.write(
-                pages.repartitionByRange(n_parts, "warc_day", "url"),
-                "pages",
-                partition_by=["warc_day"],
             )
         pages = wh.read(spark, "pages")
         n_docs = pages.count()

@@ -8,9 +8,13 @@
 # the working tree, flipping which side goes first on every seed so slow
 # drift of the host falls on both sides alike. Runs are sequential; each
 # takes about a minute. Prints, per end-to-end metric of BENCHMARK.json,
-# both sides' medians and quartiles and the number of seeds the change
-# won, then every run's correct/failed counts. The exported tree and the
-# run logs are removed at exit (mktemp honours TMPDIR).
+# both sides' medians and quartiles, the number of seeds the change won,
+# whether the two medians differ by more than the parent's IQR, and
+# whether the change's median is within the metric's `bound` of the
+# parent's median (the no-regression rule: change <= parent * (1 + bound)
+# when lower is better), then every run's correct/failed counts. The
+# exported tree and the run logs are removed at exit (mktemp honours
+# TMPDIR).
 set -euo pipefail
 
 if [[ $# -lt 3 ]]; then
@@ -80,7 +84,7 @@ def quartiles(xs):
 
 
 print(f"{'metric':<18}{'parent median [q1, q3]':>30}{'change median [q1, q3]':>30}"
-      f"{'change wins':>13}{'|d median| > parent IQR':>25}")
+      f"{'change wins':>13}{'|d median| > parent IQR':>25}{'within bound':>16}")
 for m in metrics:
     name, lower = m["name"], m["better"] == "lower"
     pairs = [(value("parent", s, name), value("change", s, name)) for s in seeds]
@@ -92,9 +96,12 @@ for m in metrics:
     cq = quartiles([c for _, c in pairs])
     wins = sum((c < p) if lower else (c > p) for p, c in pairs)
     clear = abs(cq[1] - pq[1]) > pq[2] - pq[0]
+    bound = m["bound"]
+    ok = cq[1] <= pq[1] * (1 + bound) if lower else cq[1] >= pq[1] * (1 - bound)
     print(f"{name:<18}{pq[1]:>12.3f} [{pq[0]:.3f}, {pq[2]:.3f}]"
           f"{cq[1]:>12.3f} [{cq[0]:.3f}, {cq[2]:.3f}]"
-          f"{f'{wins}/{len(pairs)}':>13}{str(clear):>25}")
+          f"{f'{wins}/{len(pairs)}':>13}{str(clear):>25}"
+          f"{f'{ok} ({bound:.0%})':>16}")
 
 print()
 print(f"{'seed':<8}{'side':<8}{'correct':>8}{'failed':>8}")

@@ -23,7 +23,7 @@ import pytest
 
 from dedup.catalog import LeaseHeldError, Warehouse
 from dedup.config import DEFAULT
-from dedup.incremental import _with_deltas, compact, run_incremental
+from dedup.incremental import REPLACED_TABLES, _with_deltas, compact, run_incremental
 from dedup.pipeline import run
 from dedup.synth import pages_schema
 
@@ -75,6 +75,12 @@ def full_clusters(spark, corpus_smoke, tmp_path_factory):
     )
 
 
+def _rows(spark, root, table):
+    """A table's rows as pandas, sorted by url (one row per url)."""
+    df = _wh(root).read(spark, table).toPandas()
+    return df[sorted(df.columns)].sort_values("url", ignore_index=True)
+
+
 @pytest.fixture(scope="module")
 def compacted_env(spark, splits, tmp_path_factory):
     """base + increment A, views snapshotted, then compacted."""
@@ -86,6 +92,7 @@ def compacted_env(spark, splits, tmp_path_factory):
         DEFAULT, wh_root, run_id="incA",
     )
     before = _views(spark, wh_root)
+    before.update({t: _rows(spark, wh_root, t) for t in REPLACED_TABLES})
     folded = compact(spark, DEFAULT, wh_root)
     return wh_root, before, folded
 
@@ -104,6 +111,17 @@ def test_compaction_folds_all_committed_deltas(compacted_env):
         # the old pages snapshot would otherwise double the footprint)
         assert not os.path.isdir(os.path.join(wh_root, t))
         assert wh._read_pointer(t) is not None
+
+
+def test_compaction_retires_replaced_plain_dirs(spark, compacted_env):
+    """clusters and canonical_pages never get deltas, but the increment's
+    pointer swap superseded the base run's plain directories: compact()
+    deletes them, and both tables still read back the same rows."""
+    wh_root, before, _ = compacted_env
+    for t in REPLACED_TABLES:
+        assert _wh(wh_root)._read_pointer(t) is not None
+        assert not os.path.isdir(os.path.join(wh_root, t))
+        pd.testing.assert_frame_equal(before[t], _rows(spark, wh_root, t))
 
 
 def test_compaction_preserves_global_views(spark, compacted_env):

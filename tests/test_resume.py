@@ -158,3 +158,35 @@ def test_metrics_survive_a_failed_run(spark, corpus_smoke, tmp_path, monkeypatch
     for t in committed:
         assert got[t]["rows"] == wh.manifest(t)["rows"], t
         assert got[t]["n"] == got[t]["ids"] == len(wh.partition_metrics(t)), t
+
+
+def test_failed_commit_stops_run_at_first_reader(
+    spark, corpus_smoke, tmp_path, monkeypatch
+):
+    """Later stages read a committed table back, joining its commit first:
+    a failed candidate_pairs write surfaces before verify is built, and
+    the run leaves no cached relation behind."""
+    from dedup import stages
+    from dedup.catalog import Warehouse
+
+    real_write = Warehouse.write
+
+    def failing_write(self, df, name, *args, **kwargs):
+        if name == "candidate_pairs":
+            raise OSError(f"forged write failure: {name}")
+        return real_write(self, df, name, *args, **kwargs)
+
+    calls = []
+    real_verify = stages.stage4_verify
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real_verify(*args, **kwargs)
+
+    monkeypatch.setattr(Warehouse, "write", failing_write)
+    monkeypatch.setattr(stages, "stage4_verify", spy)
+    spark.catalog.clearCache()
+    with pytest.raises(OSError, match="forged"):
+        pipeline.run(spark, _pages_df(spark, corpus_smoke), DEFAULT, str(tmp_path / "wh"))
+    assert calls == []
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
