@@ -8,7 +8,7 @@ ONE JSON line:
 
     {"metric": "dedup_e2e_sec", "value": N, "unit": "sec",
      "queries": {...per-query sec...}, "sf": 0.1, "docs": D,
-     "docs_per_sec": R}
+     "docs_per_sec": R, "codegen_classes": C, ...}
 
 Usage: python bench.py  [--replicate N] [--sf-dir DIR] [--cpus N]
 """
@@ -35,6 +35,7 @@ def main() -> None:
     from dedup.config import DEFAULT
     from dedup.pipeline import run
     from dedup.session import build_session
+    from dedup.spark_metrics import codegen_classes
     from dedup.synth import snapshot_pages
     import __spark_entry__ as contract
 
@@ -74,9 +75,11 @@ def main() -> None:
         n_docs = pages.count()
         timings["synth_and_load"] = round(time.monotonic() - t0, 2)
 
+        codegen0 = codegen_classes(spark)
         t0 = time.monotonic()
         run(spark, pages, DEFAULT, wh_root, run_id="bench-timed", resume=True)
         e2e = time.monotonic() - t0
+        codegen = codegen_classes(spark) - codegen0
         timings["dedup_e2e"] = round(e2e, 2)
 
         # per-stage walls from the pipeline's own metrics — only rows from
@@ -117,6 +120,8 @@ def main() -> None:
                     "sf": sf,
                     "docs": n_docs,
                     "docs_per_sec": round(n_docs / e2e, 1),
+                    # generated classes the timed run compiled
+                    "codegen_classes": codegen,
                     "cpus": int(args.cpus),
                     "replicate": args.replicate,
                     "host_canary": canary,

@@ -1,8 +1,9 @@
 """SparkSession builder with the scale-conscious defaults the pipeline
 assumes (SURVEY.md §4): AQE on (skew-join split + partition coalescing),
 Arrow everywhere (the UDF surface is 100% pandas/Arrow, BASELINE.json:15),
-bounded Arrow batches, and shuffle partitions sized to the local core count
-(on a real cluster: ~2-3x total executor cores; set via --conf).
+bounded Arrow batches, shuffle partitions sized to the local core count
+(on a real cluster: ~2-3x total executor cores; set via --conf), and a
+codegen cache that holds every class a dedup call compiles.
 """
 
 from __future__ import annotations
@@ -75,6 +76,17 @@ def build_session(
         # keep AQE from coalescing CPU-bearing shuffle stages below core
         # count: target smaller post-shuffle partitions on small corpora
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
+        # Room for every generated class the pipeline compiles. Spark
+        # keeps compiled codegen classes in an LRU of this many entries
+        # (default 100), but one dedup call needs more: ~145 on
+        # perfbench's fresh_light and ~195 on incremental_append (seed
+        # 7), so at 100 every call evicted and recompiled all of them.
+        # 1000 is over 3x the largest working set measured: 175 distinct
+        # classes over a fresh_light session (a warm-up plus four calls)
+        # and 281 over a base run plus three increments. A static conf:
+        # the first session built in a JVM fixes it.
+        # dedup.spark_metrics.codegen_classes counts compiles.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # Shuffle/spill scratch on tmpfs when available: this host's /tmp
         # is disk-backed; RAM is 128 GiB and shuffle state for the bench

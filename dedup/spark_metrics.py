@@ -1,4 +1,5 @@
-"""Measured shuffle/IO accounting from Spark's AppStatusStore.
+"""Measured shuffle/IO accounting from Spark's AppStatusStore, and the
+JVM's count of compiled generated classes.
 
 docs/SCALE.md prices the pipeline's shuffle volume analytically; this
 module measures it. The AppStatusStore is populated whether or not the
@@ -49,3 +50,16 @@ def shuffle_totals(spark: SparkSession) -> dict:
         }
     except Exception:
         return {}
+
+
+def codegen_classes(spark: SparkSession) -> int:
+    """Generated classes the JVM has compiled so far: the sample count of
+    Spark's codegen compile-time histogram, which gets one sample per
+    compile (a codegen cache miss) and none per cache hit. Read it
+    before and after a call to count that call's compiles; a warm call
+    in a session built by dedup.session compiles few. Runs no Spark job.
+    In local mode the driver and executors share the JVM, so this counts
+    both; on a cluster it counts the driver's compiles only."""
+    jvm = spark.sparkContext._jvm
+    metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -235,8 +235,12 @@ def make_fused_fn(cfg: DedupConfig):
 # ---------------------------------------------------------------------------
 def make_substr_fn(cfg: DedupConfig):
     """mapInPandas fn: (url_a, url_b, text_a, text_b) -> substr_ok.
-    Runs only on winnow-sourced pairs the cheap rules left undecided
-    (stage 4), so the O(len_a + len_b) check touches few rows."""
+    Runs on every winnow-sourced candidate pair (stage 4), including
+    pairs the cheap rules already decided: stages.stage4_verify derives
+    its input from the candidates, not from the scored pairs, so the
+    join subtree is not evaluated twice, and masks the result with
+    ~cheap_dup afterwards. The O(len_a + len_b) check therefore runs on
+    a superset of the undecided pairs."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

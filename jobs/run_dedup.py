@@ -7,7 +7,8 @@
 
 On a cluster, spark-submit supplies the master; locally --parallelism N
 runs local[N]. Prints a one-line JSON summary (docs, wall seconds,
-docs/sec, cluster stats) to stdout — the bench harness parses it.
+docs/sec, cluster stats, classes compiled, shuffle volume) to stdout —
+the bench harness parses it.
 """
 
 from __future__ import annotations
@@ -41,6 +42,7 @@ def main() -> None:
     from dedup import config as C
     from dedup.pipeline import run
     from dedup.session import build_session
+    from dedup.spark_metrics import codegen_classes, shuffle_totals
     from dedup.synth import snapshot_pages
     from pyspark.sql import functions as F
 
@@ -66,6 +68,7 @@ def main() -> None:
         pages = wh.read(spark, "pages")
         n_docs = pages.count()
 
+        codegen0 = codegen_classes(spark)
         t0 = time.monotonic()
         res = run(
             spark,
@@ -85,6 +88,9 @@ def main() -> None:
             "stages_skipped": res.stages_skipped,
             "config": args.config,
             "run_id": res.warehouse.run_id,
+            # generated classes the run compiled (a JVM's first dedup
+            # call compiles its whole working set, ~150-300)
+            "codegen_classes": codegen_classes(spark) - codegen0,
         }
         if args.stop_after is None:
             cl = res.df(spark, "clusters")
@@ -98,8 +104,6 @@ def main() -> None:
         # measured shuffle volume for the whole session (input prep + run):
         # at two parallelism levels these must match — the evidence that
         # scaling legs did identical work and only the host varied
-        from dedup.spark_metrics import shuffle_totals
-
         for k, v in shuffle_totals(spark).items():
             summary[k.replace("_bytes", "_mb")] = round(v / 1e6, 1)
         print(json.dumps(summary))
