@@ -26,6 +26,21 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _oracle_cache(sf_dir: str) -> str:
+    """Materialize the NumPy oracle's reference tables for `sf_dir` (the
+    DuckDB twins of pipeline and reference-backed queries read them) and
+    return their directory."""
+    from dedup.config import DEFAULT
+    from dedup.contract_oracle import ensure_cache
+
+    return ensure_cache(sf_dir, DEFAULT)
+
+
+def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The synthesized pages corpus of `sf_dir`, from the oracle cache."""
+    return spark.read.parquet(f"{_oracle_cache(sf_dir)}/pages.parquet")
+
+
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full dedup of the synthesized pages corpus at sf0.001 ->
     clusters(url, cluster_id). Driver checks rows > 0 + stable schema."""
@@ -155,6 +170,21 @@ def _host(url):
     return F.coalesce(F.get(F.split(F.get(F.split(url, "://"), 1), "/"), 0), F.lit(""))
 
 
+def _host_sql(url: str) -> str:
+    """DuckDB twin of `_host` (split_part returns '' past the last part)."""
+    return f"split_part(split_part({url}, '://', 2), '/', 1)"
+
+
+def _url_base():
+    """The `url` column with its fragment ('#...') and query ('?...')
+    stripped — the canonical form every url rollup keys on."""
+    return F.substring_index(F.substring_index(F.col("url"), "#", 1), "?", 1)
+
+
+#: DuckDB twin of `_url_base`.
+_URL_BASE_SQL = "split_part(split_part(url, '#', 1), '?', 1)"
+
+
 def _url_canonicalize(spark, sf_dir):
     """URL normalization + variant collapse — the crawl-side dedup tier
     that runs BEFORE any content hashing: strip the query string and
@@ -168,11 +198,7 @@ def _url_canonicalize(spark, sf_dir):
     at 100 TB this is a single scan + one shuffle keyed by canonical
     URL, and the canonical key is what every downstream per-URL stage
     joins on."""
-    from dedup.config import DEFAULT
-    from dedup.contract_oracle import ensure_cache
-
-    cache = ensure_cache(sf_dir, DEFAULT)
-    pages = spark.read.parquet(f"{cache}/pages.parquet")
+    pages = _pages(spark, sf_dir)
     # Every extraction is anchored the same way in both engines (the
     # DuckDB twin mirrors each rule): scheme split on the FIRST '://'
     # (missing scheme -> ''), and a registrable domain that clamps to the
@@ -181,9 +207,7 @@ def _url_canonicalize(spark, sf_dir):
     # pinned here rather than left to engine defaults (which differ:
     # substring_index takes the LAST '://', and Spark's negative slice
     # returns empty where DuckDB's clamps).
-    base = F.substring_index(
-        F.substring_index(F.col("url"), "#", 1), "?", 1
-    )
+    base = _url_base()
     host = _host(base)
     labels = F.split(host, "\\.")
     domain = F.when(
@@ -253,20 +277,8 @@ def _bigram_lm_score(spark, sf_dir):
     is 1-wide, AQE skew split covers hot function words), then ONE
     doc-keyed rollup. Identical pattern to unigram_rarity one order up,
     sharing its 100 TB argument."""
-    d = _t(spark, sf_dir, "documents")
-    w = F.split("text", " ")
-    bg = (
-        d.where(F.size(F.split("text", " ")) >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(w) - F.lit(1)),
-                    lambda i: F.array_join(F.slice(w, i, F.lit(2)), " "),
-                )
-            ).alias("bigram"),
-        )
-        .withColumn("w1", F.split("bigram", " ").getItem(0))
+    bg = _word_window(_t(spark, sf_dir, "documents"), 2, "bigram").withColumn(
+        "w1", F.split("bigram", " ").getItem(0)
     )
     c2 = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("c2"))
     c1 = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
@@ -305,12 +317,9 @@ def _cluster_profile(spark, sf_dir):
     the two countDistincts plan as Expand + two-phase partials, so a
     mega-cluster's members dedup map-side per partition before the
     cluster key concentrates them."""
-    from dedup.config import DEFAULT
-    from dedup.contract_oracle import ensure_cache
-
-    cache = ensure_cache(sf_dir, DEFAULT)
-    pages = spark.read.parquet(f"{cache}/pages.parquet")
-    meta = pages.select("url", _host(F.col("url")).alias("host"), "lang", "warc_ts")
+    meta = _pages(spark, sf_dir).select(
+        "url", _host(F.col("url")).alias("host"), "lang", "warc_ts"
+    )
     clusters = _pipeline_tables(spark, sf_dir).df(spark, "clusters")
     return (
         clusters.join(meta, "url")
@@ -363,22 +372,11 @@ def _line_dedup_reconstruct(spark, sf_dir):  # CCNet/RefinedWeb line-level dedup
     the tiny common set -> per-doc ordered reassembly (array_sort over
     collected (pos, chunk) structs, JVM-side) — no windows, no skew (chunk
     keys are near-unique by construction, the common set is broadcast)."""
-    K, MIN_DOCS = 8, 3
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("w")
-    )
-    n_chunks = F.ceil(F.size("w") / K).cast("int")
-    chunk_arr = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.array_join(F.slice("w", i * K + 1, F.lit(K)), " "),
-    )
-    c = d.select(
-        "doc_id", F.posexplode(chunk_arr).alias("chunk_no", "chunk")
-    )
+    c = _chunk_rows(_t(spark, sf_dir, "documents"))
     common = (
         c.groupBy("chunk")
         .agg(F.countDistinct("doc_id").alias("nd"))
-        .filter(F.col("nd") >= MIN_DOCS)
+        .filter(F.col("nd") >= 3)
         .select("chunk")
     )
     # mark common chunks with a broadcast left join, then ONE aggregation
@@ -388,29 +386,49 @@ def _line_dedup_reconstruct(spark, sf_dir):  # CCNet/RefinedWeb line-level dedup
     flagged = c.join(
         F.broadcast(common.withColumn("is_common", F.lit(1))), "chunk", "left"
     )
-    kept_sorted = F.filter(
-        F.array_sort(F.collect_list(F.struct("chunk_no", "chunk", "is_common"))),
-        lambda s: s["is_common"].isNull(),
-    )
     return flagged.groupBy("doc_id").agg(
-        F.array_join(
-            F.transform(kept_sorted, lambda s: s["chunk"]), " "
-        ).alias("clean_text"),
+        _kept_text(F.col("is_common").isNull()).alias("clean_text"),
         F.sum(
             F.when(F.col("is_common").isNotNull(), 1).otherwise(0)
         ).alias("n_removed"),
     )
 
 
-def _intradoc_dedup_over(d: DataFrame, k: int = 8) -> DataFrame:
+def _chunk_array():
+    """The non-overlapping 8-word chunks of `text`, in order (the last
+    one holds the remainder) — the fixture's single-line documents'
+    stand-in for line splitting."""
+    w = F.split("text", " ")
+    return F.transform(
+        F.sequence(F.lit(0), F.ceil(F.size(w) / 8).cast("int") - 1),
+        lambda i: F.array_join(F.slice(w, i * 8 + 1, F.lit(8)), " "),
+    )
+
+
+def _chunk_rows(d: DataFrame) -> DataFrame:
+    """(doc_id, chunk_no, chunk) rows of `_chunk_array`, chunk_no from 0."""
+    return d.select(
+        "doc_id", F.posexplode(_chunk_array()).alias("chunk_no", "chunk")
+    )
+
+
+def _kept_text(keep):
+    """Aggregate over one doc's `_chunk_rows`: the chunks where `keep`
+    holds, reassembled in chunk_no order ('' when none is kept) — an
+    array_sort over collected structs, JVM-side."""
+    kept = F.filter(
+        F.array_sort(
+            F.collect_list(F.struct("chunk_no", "chunk", keep.alias("keep")))
+        ),
+        lambda s: s["keep"],
+    )
+    return F.array_join(F.transform(kept, lambda s: s["chunk"]), " ")
+
+
+def _intradoc_dedup_over(d: DataFrame) -> DataFrame:
     """Transform body of `intradoc_dedup` over any (doc_id, text) frame
     (separable so tests can feed planted self-repeating docs)."""
-    w = F.split("text", " ")
-    n_chunks = F.ceil(F.size(w) / k).cast("int")
-    chunk_arr = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.array_join(F.slice(w, i * k + 1, F.lit(k)), " "),
-    )
+    chunk_arr = _chunk_array()
     kept = F.array_distinct(chunk_arr)
     return d.select(
         "doc_id",
@@ -456,17 +474,7 @@ def _dsir_importance(spark, sf_dir):
     broadcast), a left join fills ratio = 1024 DIV (1+c) for bigrams the
     target never saw, one bigram-keyed join back onto the corpus stream
     (AQE skew split on hot function-word bigrams), ONE doc-keyed rollup."""
-    d = _t(spark, sf_dir, "documents")
-    w = F.split("text", " ")
-    bg = d.where(F.size(F.split("text", " ")) >= 2).select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size(w) - F.lit(1)),
-                lambda i: F.array_join(F.slice(w, i, F.lit(2)), " "),
-            )
-        ).alias("bigram"),
-    )
+    bg = _word_window(_t(spark, sf_dir, "documents"), 2, "bigram")
     tgt = (
         bg.where(F.col("doc_id") % 7 == 0)
         .groupBy("bigram")
@@ -794,47 +802,16 @@ def _planes(shape):
     return np.floor(rng.standard_normal(shape) * 1024).astype(np.int64)
 
 
-def _codes_jvm(e, planes, with_q: bool):
-    """(vec_id[, q], c0..c{T-1}) as pure JVM expressions: q is the
-    fixed-point vector floor(embedding * 2^20), c{t} packs the sign bits
-    of q against planes[t] (planes: (T, B, 64)) — one aggregate(zip_with)
-    fold per (table, bit) with the plane constants inlined as literal
-    arrays. Exact, but the expression tree carries T*B*64 literal nodes,
-    costs seconds of driver-side construction + analysis, and gets
-    recomputed by every consumer. Kept ONLY as the independent reference
-    the Arrow kernel is parity-gated against (tests/test_ann.py)."""
-    qvec = F.transform(
-        "embedding", lambda x: F.floor(x.cast("double") * F.lit(float(_ANN_Q)))
-    )
-
-    def idot(a_col, b_col):
-        return F.aggregate(
-            F.zip_with(a_col, b_col, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
-    coded_cols = []
-    for t, table in enumerate(planes):
-        code = F.lit(0).cast("long")
-        for i, plane in enumerate(table):
-            lits = F.array(*[F.lit(int(v)) for v in plane])
-            code = code + F.when(
-                idot(F.col("q"), lits) > 0, F.lit(1 << i)
-            ).otherwise(0)
-        coded_cols.append(code.alias(f"c{t}"))
-    keep = ["vec_id", "q"] if with_q else ["vec_id"]
-    return e.select("vec_id", qvec.alias("q")).select(*keep, *coded_cols)
-
-
 def _codes_arrow(e, planes, with_q: bool):
-    """_codes_jvm's columns in ONE vectorized Arrow pass: quantize the
-    batch to int64 fixed point, one integer matmul against all T*B
-    planes, pack sign bits per table. Bit-identical to _codes_jvm (and
-    to the DuckDB twins) because every step is exact: float->double
-    widening, one float64 multiply + floor (IEEE, same result in NumPy
-    and the JVM), then pure int64 arithmetic (|dot| < 2^46 — no overflow
-    on either side). Parity is gated by tests/test_ann.py.
+    """(vec_id[, q], c0..c{T-1}) in ONE vectorized Arrow pass: q is the
+    fixed-point vector floor(embedding * 2^20), c{t} packs the sign bits
+    of q's integer dots with planes[t] (planes: (T, B, 64)) — one
+    integer matmul against all T*B planes per batch. Bit-identical to
+    the DuckDB twins' `_code_sql` codes because every step is exact:
+    float->double widening, one float64 multiply + floor (IEEE, same
+    result in NumPy and DuckDB), then pure int64 arithmetic (|dot| <
+    2^46 — no overflow on either side). Parity with `_code_sql` is gated
+    per vector by tests/test_ann.py.
 
     This is the scale shape the north rule mandates (vectorized Arrow, no
     per-row Python): per 10k-row batch the work is one (10k x 64) @
@@ -873,10 +850,6 @@ def _codes_arrow(e, planes, with_q: bool):
     return e.select("vec_id", "embedding").mapInPandas(gen, schema)
 
 
-def _cos_codes_jvm(e):
-    return _codes_jvm(e, _planes((_COS_L, _COS_B, 64)), with_q=False)
-
-
 def _cos_codes_arrow(e):
     """cosine_near_dup's (vec_id, c0..c{_COS_L-1}) codes."""
     return _codes_arrow(e, _planes((_COS_L, _COS_B, 64)), with_q=False)
@@ -888,9 +861,9 @@ def _cosine_near_dup(spark, sf_dir):  # embedding near-dup tier (exact verify)
     would be vacuously empty). Candidates come from the multi-table
     hyperplane-LSH rule above (integer fixed-point codes — exactly
     mirrored by the DuckDB twin, computed in one vectorized Arrow matmul;
-    JVM-fold parity gated in tests/test_ann.py); the exact cosine runs on
-    candidate pairs only, with the same float expression and rounding as
-    before."""
+    parity with the twin's `_code_sql` gated in tests/test_ann.py); the
+    exact cosine runs on candidate pairs only, with the same float
+    expression and rounding as before."""
     e = _t(spark, sf_dir, "embeddings")
     # checkpoint: the home and probe sides below both read coded — one
     # materialization instead of running the Arrow kernel twice (same fix
@@ -977,8 +950,9 @@ def _ann_hyperplane(spark, sf_dir, n_bits: int = 4):
     cap — codes holding > _ANN_MAX_BUCKET home vectors are dropped from
     candidate generation (count -> filter -> semi-join, the stage-3
     pattern), so one dense code can never go quadratic. All arithmetic is
-    JVM-side integer expressions over fixed-point vectors (floor(x*2^20)),
-    which makes the DuckDB twin exact: both engines compute identical
+    integer over fixed-point vectors (floor(x*2^20); codes from the Arrow
+    kernel, the rank key JVM-side), which makes the DuckDB twin exact:
+    both engines compute identical
     codes, identical candidate sets, and identical integer rank keys.
 
     n_bits=4 suits this fixture's diffuse embeddings (true top-5 neighbors
@@ -991,11 +965,6 @@ def _ann_hyperplane(spark, sf_dir, n_bits: int = 4):
     return _ann_hyperplane_over(_t(spark, sf_dir, "embeddings"), n_bits)
 
 
-def _ann_codes_jvm(e, n_bits: int):
-    coded = _codes_jvm(e, _ann_planes(n_bits)[None], with_q=True)
-    return coded.withColumnRenamed("c0", "code")
-
-
 def _ann_codes_arrow(e, n_bits: int):
     """ann_hyperplane's (vec_id, q, code): one table of n_bits planes, plus
     the fixed-point vector q the exact re-rank consumes."""
@@ -1006,8 +975,7 @@ def _ann_codes_arrow(e, n_bits: int):
 def _ann_hyperplane_over(e, n_bits: int):
     """The ann_hyperplane plan over any embeddings DataFrame
     (vec_id, embedding) — n_bits parameterizes the code width. Codes come
-    from the vectorized Arrow matmul kernel (JVM fold kept as the parity
-    reference)."""
+    from the vectorized Arrow matmul kernel."""
     # checkpoint: FOUR subtrees consume coded (hot-code census, the
     # semi-join back onto it, and the a/b sides of the bucket join) —
     # without this the Arrow matmul kernel re-runs once per consumer
@@ -1092,26 +1060,38 @@ def _token_stats(spark, sf_dir):
     )
 
 
-def _word_grams(d: DataFrame, n: int = 8) -> DataFrame:
-    """(doc_id, gram) rows: every n-word gram of `text` (space-joined),
-    built entirely JVM-side (split/sequence/slice/array_join/explode stay
-    inside whole-stage codegen — no Arrow round-trip for a string kernel).
-    Docs shorter than n words contribute nothing. The size filter comes
-    BEFORE sequence() because Spark's sequence(1, k) with k < 1 would
-    generate a descending range instead of an empty one."""
+def _word_window(
+    d: DataFrame, n: int, name: str, distinct: bool = False
+) -> DataFrame:
+    """(doc_id, <name>) rows: every sliding n-word window of `text`
+    (space-joined), built entirely JVM-side (split/sequence/slice/
+    array_join/explode stay inside whole-stage codegen — no Arrow
+    round-trip for a string kernel). Docs shorter than n words contribute
+    nothing. The size filter comes BEFORE sequence() because Spark's
+    sequence(1, k) with k < 1 would generate a descending range instead
+    of an empty one. `distinct` dedups each doc's windows before the
+    explode (`_word_grams_distinct`)."""
     w = F.split("text", " ")
-    return (
-        d.where(F.size(F.split("text", " ")) >= n)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(w) - F.lit(n - 1)),
-                    lambda i: F.array_join(F.slice(w, i, F.lit(n)), " "),
-                )
-            ).alias("gram"),
-        )
+    grams = F.transform(
+        F.sequence(F.lit(1), F.size(w) - F.lit(n - 1)),
+        lambda i: F.array_join(F.slice(w, i, F.lit(n)), " "),
     )
+    if distinct:
+        grams = F.array_distinct(grams)
+    return d.where(F.size(w) >= n).select("doc_id", F.explode(grams).alias(name))
+
+
+def _word_grams_distinct(d: DataFrame) -> DataFrame:
+    """DISTINCT (doc_id, gram) word-8-gram rows with ZERO shuffle: a
+    (doc_id, gram) duplicate can only come from a repeat within one
+    document, and every gram of a document is generated from that
+    document's single input row — so `array_distinct` on the per-doc
+    gram array BEFORE the explode dedups entirely map-side, where a
+    `.distinct()` after the explode would shuffle the whole (pairs-sized)
+    relation. The consumers' DuckDB twins state the shuffled form
+    (SELECT DISTINCT doc_id, gram, or a DISTINCT aggregate) over
+    `_grams_sql(8)`, and tests/test_contract.py gates the equality."""
+    return _word_window(d, 8, "gram", distinct=True)
 
 
 def _ngram_decontam(spark, sf_dir):
@@ -1126,8 +1106,7 @@ def _ngram_decontam(spark, sf_dir):
     distinct eval grams broadcast and the corpus-side gram stream is
     filtered map-side — one shuffle for the final per-doc countDistinct,
     none for the join."""
-    d = _t(spark, sf_dir, "documents")
-    grams = _word_grams(d)
+    grams = _word_grams_distinct(_t(spark, sf_dir, "documents"))
     eval_grams = grams.where(F.col("doc_id") % 7 == 0).select("gram").distinct()
     return (
         grams.where(F.col("doc_id") % 7 != 0)
@@ -1144,28 +1123,33 @@ def _boilerplate_ngrams(spark, sf_dir):
     partial-aggregates map-side, so a gram repeated within one doc costs
     one row per map task; the hot-gram skew ceiling is the distinct doc
     count, which the HAVING bounds the output by."""
-    d = _t(spark, sf_dir, "documents")
     return (
-        _word_grams(d)
+        _word_grams_distinct(_t(spark, sf_dir, "documents"))
         .groupBy("gram")
         .agg(F.countDistinct("doc_id").alias("doc_freq"))
         .where(F.col("doc_freq") >= 3)
     )
 
 
-def _hash_weight_sql(col: str, salt: str) -> str:
-    """Deterministic per-(token, class) model weight in [-32768, 32767]:
-    four md5 hex nibbles of `col || '|salt'` assembled into a 16-bit
-    integer, centered. The SAME SQL text evaluates in Spark and DuckDB
-    (md5 lowercase hex, instr 1-based in both), so classifier scores are
-    integer-exact across engines — the same trick `_bloom_pos_sql` uses
-    for filter positions."""
+def _md5_int_sql(s: str, off: int) -> str:
+    """The 16-bit integer value of four hex nibbles of md5(`s`) starting
+    at 1-based offset `off`, written in the SQL dialect subset BOTH
+    engines parse and evaluate identically (md5 -> lowercase hex in Spark
+    and DuckDB; instr and substr are 1-based in both). The same text
+    feeds Spark (F.expr) and the DuckDB twins, so Bloom/CMS positions and
+    classifier weights are integer-exact across engines."""
     nibbles = " + ".join(
-        f"(instr('0123456789abcdef', substr(md5({col} || '|{salt}'), {1 + j}, 1)) - 1)"
+        f"(instr('0123456789abcdef', substr(md5({s}), {off + j}, 1)) - 1)"
         f" * {16 ** (3 - j)}"
         for j in range(4)
     )
-    return f"(({nibbles}) - 32768)"
+    return f"({nibbles})"
+
+
+def _hash_weight_sql(col: str, salt: str) -> str:
+    """Deterministic per-(token, class) model weight in [-32768, 32767]:
+    `_md5_int_sql` of `col || '|salt'`, centered."""
+    return "(" + _md5_int_sql(f"{col} || '|{salt}'", 1) + " - 32768)"
 
 
 def _classifier_quality_score(spark, sf_dir):
@@ -1203,29 +1187,6 @@ def _classifier_quality_score(spark, sf_dir):
         F.when(F.col("score_hq") >= F.col("score_lq"), F.lit("hq"))
         .otherwise(F.lit("lq"))
         .alias("label"),
-    )
-
-
-def _word_grams_distinct(d: DataFrame, n: int = 8) -> DataFrame:
-    """DISTINCT (doc_id, gram) rows with ZERO shuffle: a (doc_id, gram)
-    duplicate can only come from a repeat within one document, and every
-    gram of a document is generated from that document's single input
-    row — so `array_distinct` on the per-doc gram array BEFORE the
-    explode dedups entirely map-side, where `_word_grams(d).distinct()`
-    would shuffle the whole (pairs-sized) relation. Equality with the
-    shuffled form is exactly that observation; the consumers' DuckDB
-    twins all state the shuffled form (SELECT DISTINCT doc_id, gram)."""
-    w = F.split("text", " ")
-    return d.where(F.size(F.split("text", " ")) >= n).select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.size(w) - F.lit(n - 1)),
-                    lambda i: F.array_join(F.slice(w, i, F.lit(n)), " "),
-                )
-            )
-        ).alias("gram"),
     )
 
 
@@ -1273,7 +1234,7 @@ def _cms_heavy_grams(spark, sf_dir):
     `boilerplate_ngrams`, the same move `bloom_decontam` makes for
     `ngram_decontam`: instead of shuffling every distinct gram to count
     its document frequency exactly, two 65536-slot CMS rows (positions =
-    md5 nibbles, the shared `_bloom_pos_sql` text) count distinct
+    md5 nibbles, the shared `_md5_int_sql` text) count distinct
     (gram, doc) pairs per slot; a gram's estimate min(row1, row2) can
     only OVERcount (collisions add, never subtract), so the flagged set
     {est >= 3} supersets the exact boilerplate set by construction (the
@@ -1288,14 +1249,9 @@ def _cms_heavy_grams(spark, sf_dir):
     by the flagged set (heavy hitters — tiny by definition). The gram
     relation is persisted once for its three consumers (two row builds
     + the flagging scan)."""
-    d = _t(spark, sf_dir, "documents")
     pg = (
-        _word_grams_distinct(d)
-        .select(
-            "gram",
-            F.expr(_bloom_pos_sql(1)).cast("long").alias("p1"),
-            F.expr(_bloom_pos_sql(5)).cast("long").alias("p2"),
-        )
+        _gram_positions(_t(spark, sf_dir, "documents"))
+        .select("gram", "p1", "p2")
         .localCheckpoint(eager=False)
     )
     c1 = pg.groupBy("p1").agg(F.count(F.lit(1)).alias("c1"))
@@ -1311,6 +1267,12 @@ def _cms_heavy_grams(spark, sf_dir):
     )
 
 
+def _knuth_sql(mod: int) -> str:
+    """Knuth multiplicative hash of doc_id, modulo `mod` — the same SQL
+    text in Spark (F.expr) and the DuckDB twins, integer-exact in both."""
+    return f"(((doc_id % 1048573) * 2654435761) % {mod})"
+
+
 def _stratified_hash_sample(spark, sf_dir):
     """Deterministic stratified sampling — reproducible train/held-out
     splits without a random() that would break resume/parity: a Knuth
@@ -1320,7 +1282,7 @@ def _stratified_hash_sample(spark, sf_dir):
     arithmetic, identical in Spark and DuckDB; a pure map-side filter —
     zero shuffles at any scale."""
     d = _t(spark, sf_dir, "documents")
-    h = ((F.col("doc_id") % F.lit(1048573)) * F.lit(2654435761)) % F.lit(1048576)
+    h = F.expr(_knuth_sql(1048576))
     thr = F.when(F.col("lang") == "en", F.lit(131072)).otherwise(F.lit(524288))
     return d.where(h < thr).select("doc_id", "lang")
 
@@ -1388,8 +1350,7 @@ def _shard_assign(spark, sf_dir):
     at 100 TB the same expression feeds repartition(shard) so each shard
     writes as one task without a sort."""
     d = _t(spark, sf_dir, "documents")
-    shard = ((F.col("doc_id") % F.lit(1048573)) * F.lit(2654435761)) % F.lit(16)
-    return d.groupBy(shard.cast("long").alias("shard")).agg(
+    return d.groupBy(F.expr(_knuth_sql(16)).cast("long").alias("shard")).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("long").alias("total_chars"),
     )
@@ -1432,12 +1393,9 @@ def _pack_chunks_over(d, n_shards: int):
     token sum as a window WITHIN each shard (ROWS frame over the unique
     doc_id order — no global sort, no driver state). All arithmetic is
     integer (`div`), exact in both engines."""
-    shard = ((F.col("doc_id") % F.lit(1048573)) * F.lit(2654435761)) % F.lit(
-        int(n_shards)
-    )
     base = d.select(
         "doc_id",
-        shard.cast("long").alias("shard"),
+        F.expr(_knuth_sql(int(n_shards))).cast("long").alias("shard"),
         F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
     )
     w = (
@@ -1477,11 +1435,10 @@ def _token_budget_mix(spark, sf_dir):
 def _mix_base(d: DataFrame) -> DataFrame:
     """(doc_id, source, h, n_tokens) — the admission-order key and token
     count the mixture sampler runs on."""
-    h = ((F.col("doc_id") % F.lit(1048573)) * F.lit(2654435761)) % F.lit(1048576)
     return d.select(
         "doc_id",
         "source",
-        h.cast("long").alias("h"),
+        F.expr(_knuth_sql(1048576)).cast("long").alias("h"),
         F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
     )
 
@@ -1563,20 +1520,6 @@ def _token_budget_mix_over(
     return out.where(F.col("toks_before") < budget)
 
 
-# Bloom bit positions shared by _bloom_decontam and its DuckDB twin: the
-# value of four hex nibbles of md5(gram) starting at 1-based offset
-# `off`, written in the SQL dialect subset BOTH engines parse and
-# evaluate identically (md5 -> lowercase hex in Spark and DuckDB; instr
-# is 1-based in both; substr(str, pos, len) ditto).
-def _bloom_pos_sql(off: int) -> str:
-    nibbles = " + ".join(
-        f"(instr('0123456789abcdef', substr(md5(gram), {off + j}, 1)) - 1)"
-        f" * {16 ** (3 - j)}"
-        for j in range(4)
-    )
-    return f"({nibbles})"
-
-
 def _bloom_decontam(spark, sf_dir):
     """Bloom-filter benchmark decontamination — the scale-path variant
     of `ngram_decontam`: instead of broadcasting the full eval gram set
@@ -1593,15 +1536,30 @@ def _bloom_decontam(spark, sf_dir):
     eval-set size — two broadcast left-semi probes filter the corpus
     gram stream map-side; the only shuffle is the final per-doc
     countDistinct. Bit positions are pure integer arithmetic over md5
-    hex, bit-identical in Spark and DuckDB (same `_bloom_pos_sql` text
+    hex, bit-identical in Spark and DuckDB (same `_md5_int_sql` text
     feeds both engines)."""
-    d = _t(spark, sf_dir, "documents")
-    g = _word_grams(d).select(
+    hits, _ = _bloom_flagged(_t(spark, sf_dir, "documents"))
+    return hits.groupBy("doc_id").agg(
+        F.countDistinct("gram").alias("n_bloom_hits")
+    )
+
+
+def _gram_positions(d: DataFrame) -> DataFrame:
+    """(doc_id, gram, p1, p2): `_word_grams_distinct` with the gram's two
+    65536-slot Bloom/CMS positions (`_md5_int_sql` at offsets 1 and 5)."""
+    return _word_grams_distinct(d).select(
         "doc_id",
         "gram",
-        F.expr(_bloom_pos_sql(1)).cast("long").alias("p1"),
-        F.expr(_bloom_pos_sql(5)).cast("long").alias("p2"),
+        F.expr(_md5_int_sql("gram", 1)).cast("long").alias("p1"),
+        F.expr(_md5_int_sql("gram", 5)).cast("long").alias("p2"),
     )
+
+
+def _bloom_flagged(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(flagged, ev): the training docs' `_gram_positions` rows whose two
+    positions are both set in the Bloom filter of the eval split
+    (doc_id % 7 == 0), and the eval split's own rows."""
+    g = _gram_positions(d)
     ev = g.where(F.col("doc_id") % 7 == 0)
     # checkpoint: the bits relation is probed by TWO broadcast left-semi
     # joins below, and the self-union aliasing defeated Spark's exchange
@@ -1621,9 +1579,7 @@ def _bloom_decontam(spark, sf_dir):
     hits = hits.join(
         F.broadcast(bits), hits["p2"] == bits["b"], "left_semi"
     )
-    return hits.groupBy("doc_id").agg(
-        F.countDistinct("gram").alias("n_bloom_hits")
-    )
+    return hits, ev
 
 
 def _decontam_bloom_exact(spark, sf_dir):
@@ -1642,32 +1598,13 @@ def _decontam_bloom_exact(spark, sf_dir):
     subset (Bloom-false-positive-rate x corpus grams, not all corpus
     grams), so its shuffle is hits-sized; the Bloom stage's cost model is
     bloom_decontam's (one corpus scan, constant-size broadcast)."""
-    d = _t(spark, sf_dir, "documents")
-    g = _word_grams(d).select(
-        "doc_id",
-        "gram",
-        F.expr(_bloom_pos_sql(1)).cast("long").alias("p1"),
-        F.expr(_bloom_pos_sql(5)).cast("long").alias("p2"),
-    )
-    ev = g.where(F.col("doc_id") % 7 == 0)
-    bits = (
-        ev.select(F.col("p1").alias("b"))
-        .union(ev.select(F.col("p2").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    train = g.where(F.col("doc_id") % 7 != 0)
-    flagged = train.join(
-        F.broadcast(bits), train["p1"] == bits["b"], "left_semi"
-    )
-    flagged = flagged.join(
-        F.broadcast(bits), flagged["p2"] == bits["b"], "left_semi"
-    ).select("doc_id", "gram")
+    flagged, ev = _bloom_flagged(_t(spark, sf_dir, "documents"))
     # exact re-check on the flagged subset only: join back to the true
     # eval gram set (shuffle sized by the hit subset, not the corpus)
     eval_grams = ev.select("gram").distinct()
     return (
-        flagged.join(eval_grams, "gram")
+        flagged.select("doc_id", "gram")
+        .join(eval_grams, "gram")
         .groupBy("doc_id")
         .agg(F.countDistinct("gram").alias("shared_grams"))
     )
@@ -1741,6 +1678,17 @@ def _vocab_topk(spark, sf_dir):
     )
 
 
+def _bpe_word_counts(d: DataFrame, min_len: int) -> DataFrame:
+    """(word, n): the BPE word-frequency dictionary of `text` — ASCII
+    lowercase words of at least `min_len` chars with their counts."""
+    return (
+        d.select(F.explode(F.split("text", " ")).alias("word"))
+        .filter(F.col("word").rlike("^[a-z]+$") & (F.length("word") >= min_len))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+
+
 def _bpe_merge_over(d: DataFrame) -> DataFrame:
     """One BPE merge round (Sennrich et al. 2016's trainer inner loop —
     the step tokenizer training repeats to a vocab budget) over any
@@ -1758,12 +1706,7 @@ def _bpe_merge_over(d: DataFrame) -> DataFrame:
     and the winning pair broadcast back as a one-row dimension. ASCII
     lowercase words only, mirrored exactly in the twin (cross-engine
     grapheme splitting is not pinned for multi-byte text)."""
-    wc = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word").rlike("^[a-z]+$"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    wc = _bpe_word_counts(d, 1)
     # Spark's sequence(1, 0) is DESCENDING, so length-1 words must be
     # filtered before the pair explode, not after
     pairs = (
@@ -1828,12 +1771,7 @@ def _bpe_train_over(spark, d: DataFrame, n_merges: int) -> DataFrame:
     symbols can never be merged across symbol boundaries the way a
     string replace() would; localCheckpoint each round cuts the iterative
     lineage exactly like the CC loop."""
-    wc = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word").rlike("^[a-z]+$") & (F.length("word") >= 2))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+    wc = _bpe_word_counts(d, 2)
     vocab = wc.select("n", F.split("word", "").alias("syms")).localCheckpoint()
     merges = []
     for step in range(1, n_merges + 1):
@@ -1908,12 +1846,8 @@ def _bpe_encode_over(spark, d: DataFrame, n_merges: int) -> DataFrame:
     tokenization and the single-process reference encoder is gated in
     tests + the DuckDB twin."""
     merges = _bpe_train_over(spark, d, n_merges).collect()
-    vocab = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word").rlike("^[a-z]+$") & (F.length("word") >= 2))
-        .select("word")
-        .distinct()
-        .select("word", F.split("word", "").alias("syms"))
+    vocab = _bpe_word_counts(d, 2).select(
+        "word", F.split("word", "").alias("syms")
     )
     for m in merges:
         vocab = _bpe_apply_merge(vocab, m["left"], m["right"])
@@ -1928,10 +1862,9 @@ def _bpe_encode(spark, sf_dir):
     """BPE encode contract query — twinned against the materialized
     single-process reference encoder (dedup/contract_oracle.py), which
     replays the same merge table over the same word dictionary."""
-    from dedup.config import DEFAULT
-    from dedup.contract_oracle import BPE_TRAIN_MERGES, ensure_cache
+    from dedup.contract_oracle import BPE_TRAIN_MERGES
 
-    ensure_cache(sf_dir, DEFAULT)  # materialize the twin's reference table
+    _oracle_cache(sf_dir)  # materialize the twin's reference table
     return _bpe_encode_over(
         spark, _t(spark, sf_dir, "documents"), BPE_TRAIN_MERGES
     )
@@ -1941,10 +1874,9 @@ def _bpe_train(spark, sf_dir):
     """Multi-round BPE training contract query (the full trainer above
     bpe_merge_step); twinned against the materialized single-process
     reference trainer's merge table."""
-    from dedup.config import DEFAULT
-    from dedup.contract_oracle import BPE_TRAIN_MERGES, ensure_cache
+    from dedup.contract_oracle import BPE_TRAIN_MERGES
 
-    ensure_cache(sf_dir, DEFAULT)  # materialize the twin's reference table
+    _oracle_cache(sf_dir)  # materialize the twin's reference table
     return _bpe_train_over(
         spark, _t(spark, sf_dir, "documents"), BPE_TRAIN_MERGES
     )
@@ -2052,11 +1984,7 @@ def _html_stats(spark, sf_dir):
     """Multimodal binary-column stats over the synthesized pages corpus:
     byte length + magic-prefix detection on the opaque `html` payload,
     all JVM expressions (binary length is byte length)."""
-    from dedup.config import DEFAULT
-    from dedup.contract_oracle import ensure_cache
-
-    cache = ensure_cache(sf_dir, DEFAULT)
-    pages = spark.read.parquet(f"{cache}/pages.parquet")
+    pages = _pages(spark, sf_dir)
     is_html = F.substring(F.col("html").cast("string"), 1, 6) == "<html>"
     return pages.groupBy("lang").agg(
         F.count("*").alias("n"),
@@ -2074,13 +2002,9 @@ def _modality_features(spark, sf_dir):
     materialized row-wise NumPy reference (dedup/contract_oracle.py
     `modality_features` — features_one run single-process); exact-parity
     gate also in tests/test_modality.py."""
-    from dedup.config import DEFAULT
-    from dedup.contract_oracle import ensure_cache
     from dedup.modality import modality_features
 
-    cache = ensure_cache(sf_dir, DEFAULT)
-    pages = spark.read.parquet(f"{cache}/pages.parquet")
-    return modality_features(pages)
+    return modality_features(_pages(spark, sf_dir))
 
 
 def _modality_thumbnail(spark, sf_dir):
@@ -2089,13 +2013,9 @@ def _modality_thumbnail(spark, sf_dir):
     dims, deterministic fake thumbnail fingerprint (dedup/modality.py
     thumbnail_one). Arrow mapInPandas 1:1; twin SELECTs the materialized
     single-process reference."""
-    from dedup.config import DEFAULT
-    from dedup.contract_oracle import ensure_cache
     from dedup.modality import modality_thumbnail
 
-    cache = ensure_cache(sf_dir, DEFAULT)
-    pages = spark.read.parquet(f"{cache}/pages.parquet")
-    return modality_thumbnail(pages)
+    return modality_thumbnail(_pages(spark, sf_dir))
 
 
 def _frame_sample(spark, sf_dir):
@@ -2103,13 +2023,9 @@ def _frame_sample(spark, sf_dir):
     pseudo-frame of the fake container probe, one row per sampled frame —
     the 1->N Arrow expansion a video decode UDF emits (dedup/modality.py
     frame_sample_rows). Twin SELECTs the materialized reference."""
-    from dedup.config import DEFAULT
-    from dedup.contract_oracle import ensure_cache
     from dedup.modality import modality_frame_sample
 
-    cache = ensure_cache(sf_dir, DEFAULT)
-    pages = spark.read.parquet(f"{cache}/pages.parquet")
-    return modality_frame_sample(pages)
+    return modality_frame_sample(_pages(spark, sf_dir))
 
 
 def _mplsh_knn(spark, sf_dir):
@@ -2122,11 +2038,9 @@ def _mplsh_knn(spark, sf_dir):
     buckets candidate gen, no Spark, no joins); additionally gated by
     tests/test_mplsh.py (exact candidate parity + recall >= 0.9 @ T=16
     vs brute force)."""
-    from dedup.config import DEFAULT
-    from dedup.contract_oracle import ensure_cache
     from dedup.mplsh import MplshConfig, mplsh_topk
 
-    ensure_cache(sf_dir, DEFAULT)  # materialize the twin's reference table
+    _oracle_cache(sf_dir)  # materialize the twin's reference table
     e = _t(spark, sf_dir, "embeddings")
     return mplsh_topk(e, MplshConfig(), k=5, query_filter=F.col("vec_id") < 5)
 
@@ -2142,11 +2056,9 @@ def _ivf_knn(spark, sf_dir):
     (contract_oracle `ivf_topk`); additionally gated by tests/test_ivf.py
     (exact Spark-vs-reference parity + recall >= 0.9 at <= 2% candidate
     fraction in the planted-cluster scale configuration)."""
-    from dedup.config import DEFAULT
-    from dedup.contract_oracle import ensure_cache
     from dedup.ivf import IvfConfig, ivf_topk
 
-    ensure_cache(sf_dir, DEFAULT)  # materialize the twin's reference table
+    _oracle_cache(sf_dir)  # materialize the twin's reference table
     e = _t(spark, sf_dir, "embeddings")
     return ivf_topk(e, IvfConfig(), k=5, query_filter=F.col("vec_id") < 5)
 
@@ -2160,11 +2072,9 @@ def _semdedup_keep(spark, sf_dir):
     DuckDB twin SELECTs the materialized single-process NumPy reference
     (contract_oracle `semdedup`); exact Spark-vs-reference parity also
     gated in tests/test_semdedup.py."""
-    from dedup.config import DEFAULT
-    from dedup.contract_oracle import ensure_cache
     from dedup.semdedup import SemDedupConfig, semdedup_keep
 
-    ensure_cache(sf_dir, DEFAULT)  # materialize the twin's reference table
+    _oracle_cache(sf_dir)  # materialize the twin's reference table
     return semdedup_keep(_t(spark, sf_dir, "embeddings"), SemDedupConfig())
 
 
@@ -2219,10 +2129,7 @@ def _pipeline_tables(spark, sf_dir):
     driver calls each dedup_* query separately; every one reads the
     tables the single run committed, so no stage is recomputed and no
     relation stays cached between queries."""
-    from dedup.config import DEFAULT
-    from dedup.contract_oracle import ensure_cache
-
-    ensure_cache(sf_dir, DEFAULT)
+    _oracle_cache(sf_dir)
     return _pipeline_run(spark, sf_dir)
 
 
@@ -2367,15 +2274,7 @@ def _url_blocklist_filter(spark, sf_dir):
     pinned rules (strip ?/# first, host = first-'://' split) — pure JVM
     string expressions inside whole-stage codegen, twin-identical in
     DuckDB."""
-    from dedup.config import DEFAULT
-    from dedup.contract_oracle import ensure_cache
-
-    cache = ensure_cache(sf_dir, DEFAULT)
-    pages = spark.read.parquet(f"{cache}/pages.parquet")
-    base = F.substring_index(
-        F.substring_index(F.col("url"), "#", 1), "?", 1
-    )
-    tagged = pages.select(_host(base).alias("host"))
+    tagged = _pages(spark, sf_dir).select(_host(_url_base()).alias("host"))
     blocklist = (
         tagged.select("host")
         .distinct()
@@ -2402,16 +2301,7 @@ def _chunk_keep_first_dedup(spark, sf_dir):
     gram-keyed shape as `ngram_novelty`, AQE splits any hot boilerplate
     chunk) -> one doc-keyed reassembly agg. Two shuffles + one join at
     any corpus size; nothing is driver-side."""
-    K = 8
-    d = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.split("text", " ").alias("w")
-    )
-    n_chunks = F.ceil(F.size("w") / K).cast("int")
-    chunk_arr = F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.array_join(F.slice("w", i * K + 1, F.lit(K)), " "),
-    )
-    c = d.select("doc_id", F.posexplode(chunk_arr).alias("chunk_no", "chunk"))
+    c = _chunk_rows(_t(spark, sf_dir, "documents"))
     first = c.groupBy("chunk").agg(
         F.min(F.struct("doc_id", "chunk_no")).alias("first")
     )
@@ -2420,18 +2310,12 @@ def _chunk_keep_first_dedup(spark, sf_dir):
         (F.col("first.doc_id") == F.col("doc_id"))
         & (F.col("first.chunk_no") == F.col("chunk_no")),
     )
-    kept_sorted = F.filter(
-        F.array_sort(F.collect_list(F.struct("chunk_no", "chunk", "keep"))),
-        lambda s: s["keep"],
-    )
     return flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_chunks"),
         F.sum(F.when(F.col("keep"), 0).otherwise(1))
         .cast("long")
         .alias("n_removed"),
-        F.array_join(
-            F.transform(kept_sorted, lambda s: s["chunk"]), " "
-        ).alias("clean_text"),
+        _kept_text(F.col("keep")).alias("clean_text"),
     )
 
 
@@ -2819,6 +2703,32 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     }
 
 
+#: DuckDB: each document's word list `w` (string_split, like F.split).
+_WORDS_CTE = "words AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents)"
+
+
+def _grams_sql(n: int, name: str = "gram") -> str:
+    """DuckDB twin of `_word_window(d, n, name)`: the `words` CTE and a
+    `grams` CTE of (doc_id, <name>) sliding n-word windows, docs shorter
+    than n words contributing none. Append further CTEs after a comma."""
+    return f"""{_WORDS_CTE}, grams AS (
+              SELECT doc_id,
+                     array_to_string(list_slice(w, i, i + {n - 1}), ' ') AS {name}
+              FROM words, UNNEST(range(1, len(w) - {n - 2})) AS t(i)
+              WHERE len(w) >= {n}
+            )"""
+
+
+#: DuckDB twin of `_chunk_rows`: the `words` CTE and a `chunks` CTE of
+#: (doc_id, chunk_no, chunk) non-overlapping 8-word chunks, chunk_no from 0.
+_CHUNKS_SQL = f"""{_WORDS_CTE}, chunks AS (
+              SELECT doc_id, i AS chunk_no,
+                     array_to_string(list_slice(w, i * 8 + 1, i * 8 + 8), ' ')
+                       AS chunk
+              FROM words, UNNEST(range(0, (len(w) + 7) // 8)) AS t(i)
+            )"""
+
+
 def _suffix_twin_sql(rate: int) -> str:
     """DuckDB twin of `_suffix_dup_spans_over(rate)`: identical windowed
     suffix construction, the same md5 keep-list for rate>1 (md5 hex is
@@ -2828,14 +2738,12 @@ def _suffix_twin_sql(rate: int) -> str:
         keep = ", ".join(f"'{c}'" for c in _suffix_keep_chars(rate))
         sample = f" AND substring(md5(suffix), 1, 1) IN ({keep})"
     return f"""
-        WITH d AS (
-          SELECT doc_id, string_split(text, ' ') AS w FROM documents
-        ), suf AS (
+        WITH {_WORDS_CTE}, suf AS (
           SELECT DISTINCT doc_id,
                  substr(
                    array_to_string(list_slice(w, i, i + 49), ' '), 1, 40
                  ) AS suffix
-          FROM d, UNNEST(range(1, len(w) + 1)) AS t(i)
+          FROM words, UNNEST(range(1, len(w) + 1)) AS t(i)
         ), suf40 AS (
           SELECT doc_id, suffix FROM suf
           WHERE length(suffix) >= 40{sample}
@@ -2853,10 +2761,19 @@ def _suffix_twin_sql(rate: int) -> str:
     """
 
 
+#: DuckDB twin of the fixed-point vectors: (vec_id, q), q = the list
+#: floor(embedding * 2^20) as BIGINTs — `_codes_arrow`'s quantization.
+_QVEC_SQL = f"""SELECT vec_id,
+                 list_transform(CAST(embedding AS DOUBLE[]),
+                                x -> CAST(floor(x * {float(_ANN_Q)}) AS BIGINT)) AS q
+          FROM embeddings"""
+
+
 def _code_sql(table) -> str:
     """DuckDB twin of one table's code column (table: (B, 64) planes):
     bit i is set when the integer dot of the fixed-point list `q` with
-    plane i is positive — _codes_jvm's fold as a SQL expression."""
+    plane i is positive — the SQL statement of `_codes_arrow`'s sign
+    bits, computed independently of the Arrow kernel."""
     return " + ".join(
         f"(CASE WHEN list_sum(list_transform(list_zip(q, {plane.tolist()}), "
         f"x -> x[1]*x[2])) > 0 THEN {1 << i} ELSE 0 END)"
@@ -2873,12 +2790,7 @@ def _ann_twin_sql(n_bits: int = 4) -> str:
         ["code"] + [f"xor(code, {1 << i})" for i in range(n_bits)]
     )
     return f"""
-        WITH e AS (
-          SELECT vec_id,
-                 list_transform(CAST(embedding AS DOUBLE[]),
-                                x -> CAST(floor(x * {float(_ANN_Q)}) AS BIGINT)) AS q
-          FROM embeddings
-        ),
+        WITH e AS ({_QVEC_SQL}),
         coded0 AS (
           SELECT vec_id, q,
                  {code_expr} AS code
@@ -2934,12 +2846,7 @@ def _cos_twin_sql() -> str:
         ]
     probe_sel = "\n              UNION ALL ".join(probe_parts)
     return f"""
-        WITH e AS (
-          SELECT vec_id,
-                 list_transform(CAST(embedding AS DOUBLE[]),
-                                x -> CAST(floor(x * {float(_ANN_Q)}) AS BIGINT)) AS q
-          FROM embeddings
-        ),
+        WITH e AS ({_QVEC_SQL}),
         coded AS (
           SELECT vec_id,
                  {code_cols}
@@ -3154,6 +3061,15 @@ def oracle_sql() -> dict[str, str]:
     # scripts/check_contract.py now passes at sf0.001 AND sf0.01).
     from dedup.contract_oracle import CURRENT as _cache01
 
+    ngram_decontam = f"""
+            WITH {_grams_sql(8)}, eval_grams AS (
+              SELECT DISTINCT gram FROM grams WHERE doc_id % 7 = 0
+            )
+            SELECT g.doc_id, COUNT(DISTINCT g.gram) AS shared_grams
+            FROM grams g JOIN eval_grams e USING (gram)
+            WHERE g.doc_id % 7 <> 0
+            GROUP BY g.doc_id
+        """
     return {**_dedup_twin_sql(_cache01),
         # non-SQL-expressible kernels (probe heap / blob entropy): the twin
         # SELECTs the materialized single-process NumPy reference output
@@ -3193,61 +3109,22 @@ def oracle_sql() -> dict[str, str]:
         # the composed Bloom -> exact pipeline returns EXACTLY the exact
         # decontam answer (Bloom has no false negatives), so its twin IS
         # the exact-decontam SQL
-        "decontam_bloom_exact": """
-            WITH words AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), grams AS (
-              SELECT doc_id, array_to_string(list_slice(w, i, i + 7), ' ') AS gram
-              FROM words, UNNEST(range(1, len(w) - 6)) AS t(i)
-              WHERE len(w) >= 8
-            ), eval_grams AS (
-              SELECT DISTINCT gram FROM grams WHERE doc_id % 7 = 0
-            )
-            SELECT g.doc_id, COUNT(DISTINCT g.gram) AS shared_grams
-            FROM grams g JOIN eval_grams e USING (gram)
-            WHERE g.doc_id % 7 <> 0
-            GROUP BY g.doc_id
-        """,
+        "decontam_bloom_exact": ngram_decontam,
         "ann_hyperplane": _ann_twin_sql(),
         "langid_score": _langid_twin_sql(),
-        "ngram_decontam": """
-            WITH words AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), grams AS (
-              SELECT doc_id, array_to_string(list_slice(w, i, i + 7), ' ') AS gram
-              FROM words, UNNEST(range(1, len(w) - 6)) AS t(i)
-              WHERE len(w) >= 8
-            ), eval_grams AS (
-              SELECT DISTINCT gram FROM grams WHERE doc_id % 7 = 0
-            )
-            SELECT g.doc_id, COUNT(DISTINCT g.gram) AS shared_grams
-            FROM grams g JOIN eval_grams e USING (gram)
-            WHERE g.doc_id % 7 <> 0
-            GROUP BY g.doc_id
-        """,
-        "boilerplate_ngrams": """
-            WITH words AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), grams AS (
-              SELECT doc_id, array_to_string(list_slice(w, i, i + 7), ' ') AS gram
-              FROM words, UNNEST(range(1, len(w) - 6)) AS t(i)
-              WHERE len(w) >= 8
-            )
+        "ngram_decontam": ngram_decontam,
+        "boilerplate_ngrams": f"""
+            WITH {_grams_sql(8)}
             SELECT gram, COUNT(DISTINCT doc_id) AS doc_freq
             FROM grams GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= 3
         """,
         # V20: same gram construction as ngram_decontam, LEFT join so
         # zero-overlap docs appear; integer // matches Spark's div
-        "decontam_overlap_frac": """
-            WITH words AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), grams AS (
-              SELECT DISTINCT doc_id,
-                     array_to_string(list_slice(w, i, i + 7), ' ') AS gram
-              FROM words, UNNEST(range(1, len(w) - 6)) AS t(i)
-              WHERE len(w) >= 8
+        "decontam_overlap_frac": f"""
+            WITH {_grams_sql(8)}, pg AS (
+              SELECT DISTINCT doc_id, gram FROM grams
             ), eval_grams AS (
-              SELECT DISTINCT gram FROM grams WHERE doc_id % 7 = 0
+              SELECT DISTINCT gram FROM pg WHERE doc_id % 7 = 0
             )
             SELECT g.doc_id,
                    count(*) AS n_grams,
@@ -3255,19 +3132,16 @@ def oracle_sql() -> dict[str, str]:
                         AS BIGINT) AS shared_grams,
                    (100 * CAST(sum(CASE WHEN e.gram IS NOT NULL THEN 1 ELSE 0
                         END) AS BIGINT)) // count(*) AS overlap_pct
-            FROM grams g LEFT JOIN eval_grams e ON g.gram = e.gram
+            FROM pg g LEFT JOIN eval_grams e ON g.gram = e.gram
             WHERE g.doc_id % 7 <> 0
             GROUP BY g.doc_id
         """,
         # V18: same pinned url->host rules as url_canonicalize's twin;
         # the blocklist rule (first md5 nibble in {0,1}) is engine-shared
         "url_blocklist_filter": f"""
-            WITH p AS (
-              SELECT split_part(split_part(url, '#', 1), '?', 1) AS base
+            WITH h AS (
+              SELECT {_host_sql(_URL_BASE_SQL)} AS host
               FROM read_parquet('{_cache01}/pages.parquet')
-            ), h AS (
-              SELECT split_part(split_part(base, '://', 2), '/', 1) AS host
-              FROM p
             )
             SELECT host, count(*) AS n_pages FROM h
             WHERE substr(md5(host), 1, 1) NOT IN ('0', '1')
@@ -3276,22 +3150,13 @@ def oracle_sql() -> dict[str, str]:
         # V19: the twin states keep-first as an explicit global window
         # (row_number over (chunk) ordered by doc_id, chunk_no) — matching
         # Spark's min(struct) + join-back proves the two are equivalent
-        "chunk_keep_first_dedup": """
-            WITH d AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), c AS (
-              SELECT doc_id, i - 1 AS chunk_no,
-                     array_to_string(
-                       list_slice(w, (i - 1) * 8 + 1, (i - 1) * 8 + 8), ' '
-                     ) AS chunk
-              FROM d, UNNEST(range(1, CAST(ceil(len(w) / 8.0) AS BIGINT) + 1))
-                   AS t(i)
-            ), ranked AS (
+        "chunk_keep_first_dedup": f"""
+            WITH {_CHUNKS_SQL}, ranked AS (
               SELECT doc_id, chunk_no, chunk,
                      row_number() OVER (
                        PARTITION BY chunk ORDER BY doc_id, chunk_no
                      ) AS rn
-              FROM c
+              FROM chunks
             )
             SELECT doc_id,
                    count(*) AS n_chunks,
@@ -3405,9 +3270,9 @@ def oracle_sql() -> dict[str, str]:
                    (100 * count(*)) // CAST(sum(cnt) AS BIGINT) AS ttr_pct
             FROM per_word GROUP BY doc_id
         """,
-        "stratified_hash_sample": """
+        "stratified_hash_sample": f"""
             SELECT doc_id, lang FROM documents
-            WHERE ((doc_id % 1048573) * 2654435761) % 1048576
+            WHERE {_knuth_sql(1048576)}
                   < CASE WHEN lang = 'en' THEN 131072 ELSE 524288 END
         """,
         # same _hash_weight_sql text as the Spark side — md5/substr/instr
@@ -3433,14 +3298,8 @@ def oracle_sql() -> dict[str, str]:
                        AS label
             FROM agg
         """,
-        "ngram_novelty": """
-            WITH words AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), grams AS (
-              SELECT doc_id, array_to_string(list_slice(w, i, i + 7), ' ') AS gram
-              FROM words, UNNEST(range(1, len(w) - 6)) AS t(i)
-              WHERE len(w) >= 8
-            ), pg AS (
+        "ngram_novelty": f"""
+            WITH {_grams_sql(8)}, pg AS (
               SELECT DISTINCT doc_id, gram FROM grams
             ), fst AS (
               SELECT gram, MIN(doc_id) AS first_doc FROM pg GROUP BY gram
@@ -3455,19 +3314,13 @@ def oracle_sql() -> dict[str, str]:
                    (100 * n_novel) // n_grams AS novelty_pct
             FROM agg
         """,
-        # same _bloom_pos_sql positions as the Spark side; COUNT(*) per
+        # same _md5_int_sql positions as the Spark side; COUNT(*) per
         # slot over the distinct (gram, doc) relation = the CMS row
         "cms_heavy_grams": f"""
-            WITH words AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), grams AS (
-              SELECT doc_id, array_to_string(list_slice(w, i, i + 7), ' ') AS gram
-              FROM words, UNNEST(range(1, len(w) - 6)) AS t(i)
-              WHERE len(w) >= 8
-            ), pg AS (
+            WITH {_grams_sql(8)}, pg AS (
               SELECT DISTINCT doc_id, gram,
-                     {_bloom_pos_sql(1)} AS p1,
-                     {_bloom_pos_sql(5)} AS p2
+                     {_md5_int_sql("gram", 1)} AS p1,
+                     {_md5_int_sql("gram", 5)} AS p2
               FROM grams
             ), c1 AS (
               SELECT p1, COUNT(*) AS n1 FROM pg GROUP BY p1
@@ -3483,20 +3336,11 @@ def oracle_sql() -> dict[str, str]:
         # the twin states first-occurrence keeping EXPLICITLY (row_number
         # over (doc, chunk) by position), so matching it proves Spark's
         # array_distinct preserved first-occurrence order
-        "intradoc_dedup": """
-            WITH words AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), chunks AS (
-              SELECT doc_id, i AS seq,
-                     array_to_string(
-                       list_slice(w, i * 8 + 1, i * 8 + 8), ' ') AS chunk
-              FROM words,
-                   UNNEST(range(0, CAST(ceil(len(w) / 8.0) AS BIGINT)))
-                     AS t(i)
-            ), firsts AS (
-              SELECT doc_id, chunk, seq,
+        "intradoc_dedup": f"""
+            WITH {_CHUNKS_SQL}, firsts AS (
+              SELECT doc_id, chunk, chunk_no,
                      row_number() OVER (PARTITION BY doc_id, chunk
-                                        ORDER BY seq) AS rn
+                                        ORDER BY chunk_no) AS rn
               FROM chunks
             )
             SELECT doc_id,
@@ -3504,22 +3348,15 @@ def oracle_sql() -> dict[str, str]:
                    CAST(SUM(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT)
                        AS n_removed,
                    COALESCE(string_agg(CASE WHEN rn = 1 THEN chunk END,
-                                       ' ' ORDER BY seq), '') AS clean_text
+                                       ' ' ORDER BY chunk_no), '') AS clean_text
             FROM firsts GROUP BY doc_id
         """,
-        "dsir_importance": """
-            WITH words AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), bg AS (
-              SELECT doc_id,
-                     array_to_string(list_slice(w, i, i + 1), ' ') AS bigram
-              FROM words, UNNEST(range(1, len(w))) AS t(i)
-              WHERE len(w) >= 2
-            ), tgt AS (
-              SELECT bigram, COUNT(*) AS t_cnt FROM bg
+        "dsir_importance": f"""
+            WITH {_grams_sql(2, "bigram")}, tgt AS (
+              SELECT bigram, COUNT(*) AS t_cnt FROM grams
               WHERE doc_id % 7 = 0 GROUP BY bigram
             ), cor AS (
-              SELECT bigram, COUNT(*) AS c_cnt FROM bg
+              SELECT bigram, COUNT(*) AS c_cnt FROM grams
               WHERE doc_id % 7 <> 0 GROUP BY bigram
             ), ratio AS (
               SELECT bigram,
@@ -3531,21 +3368,14 @@ def oracle_sql() -> dict[str, str]:
                    CAST(COUNT(*) AS BIGINT) AS n_feats,
                    CAST(SUM(ratio) AS BIGINT) AS weight_sum,
                    CAST(SUM(ratio) AS BIGINT) // COUNT(*) AS weight_mean
-            FROM bg JOIN ratio USING (bigram)
+            FROM grams JOIN ratio USING (bigram)
             WHERE doc_id % 7 <> 0
             GROUP BY doc_id
         """,
-        "bigram_lm_score": """
-            WITH words AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), bg AS (
-              SELECT doc_id,
-                     array_to_string(list_slice(w, i, i + 1), ' ') AS bigram
-              FROM words, UNNEST(range(1, len(w))) AS t(i)
-              WHERE len(w) >= 2
-            ), b AS (
+        "bigram_lm_score": f"""
+            WITH {_grams_sql(2, "bigram")}, b AS (
               SELECT doc_id, bigram, string_split(bigram, ' ')[1] AS w1
-              FROM bg
+              FROM grams
             ), c2 AS (
               SELECT bigram, COUNT(*) AS c2 FROM b GROUP BY bigram
             ), c1 AS (
@@ -3562,9 +3392,7 @@ def oracle_sql() -> dict[str, str]:
         """,
         "cluster_profile": f"""
             WITH m AS (
-              SELECT url,
-                     split_part(split_part(url, '://', 2), '/', 1) AS host,
-                     lang, warc_ts
+              SELECT url, {_host_sql("url")} AS host, lang, warc_ts
               FROM read_parquet('{_cache01}/pages.parquet')
             )
             SELECT cluster_id,
@@ -3582,8 +3410,7 @@ def oracle_sql() -> dict[str, str]:
               FROM read_parquet('{_cache01}/verified.parquet')
               WHERE is_dup
             ), h AS (
-              SELECT split_part(split_part(url_a, '://', 2), '/', 1) AS ha,
-                     split_part(split_part(url_b, '://', 2), '/', 1) AS hb,
+              SELECT {_host_sql("url_a")} AS ha, {_host_sql("url_b")} AS hb,
                      sha_equal
               FROM d
             )
@@ -3593,19 +3420,13 @@ def oracle_sql() -> dict[str, str]:
                        AS n_exact
             FROM h GROUP BY 1, 2
         """,
-        # same _bloom_pos_sql text as the Spark side — md5/substr/instr
+        # same _md5_int_sql text as the Spark side — md5/substr/instr
         # evaluate identically in both engines (lowercase hex, 1-based)
         "bloom_decontam": f"""
-            WITH words AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), grams AS (
-              SELECT doc_id, array_to_string(list_slice(w, i, i + 7), ' ') AS gram
-              FROM words, UNNEST(range(1, len(w) - 6)) AS t(i)
-              WHERE len(w) >= 8
-            ), pos AS (
+            WITH {_grams_sql(8)}, pos AS (
               SELECT doc_id, gram,
-                     {_bloom_pos_sql(1)} AS p1,
-                     {_bloom_pos_sql(5)} AS p2
+                     {_md5_int_sql("gram", 1)} AS p1,
+                     {_md5_int_sql("gram", 5)} AS p2
               FROM grams
             ), bits AS (
               SELECT DISTINCT p1 AS b FROM pos WHERE doc_id % 7 = 0
@@ -3619,11 +3440,9 @@ def oracle_sql() -> dict[str, str]:
               AND p2 IN (SELECT b FROM bits)
             GROUP BY doc_id
         """,
-        "pack_chunks": """
+        "pack_chunks": f"""
             WITH base AS (
-              SELECT doc_id,
-                     CAST(((doc_id % 1048573) * 2654435761) % 16 AS BIGINT)
-                       AS shard,
+              SELECT doc_id, CAST({_knuth_sql(16)} AS BIGINT) AS shard,
                      CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
               FROM documents
             ), pref AS (
@@ -3639,11 +3458,9 @@ def oracle_sql() -> dict[str, str]:
                    (start_tok + n_tokens - 1) // 2048 AS last_chunk
             FROM pref
         """,
-        "token_budget_mix": """
+        "token_budget_mix": f"""
             WITH base AS (
-              SELECT doc_id, source,
-                     CAST(((doc_id % 1048573) * 2654435761) % 1048576
-                          AS BIGINT) AS h,
+              SELECT doc_id, source, CAST({_knuth_sql(1048576)} AS BIGINT) AS h,
                      CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
               FROM documents
             ), pref AS (
@@ -3657,10 +3474,8 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id, source, n_tokens, toks_before
             FROM pref WHERE toks_before < 1280
         """,
-        "repetition_stats": """
-            WITH words AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), counts AS (
+        "repetition_stats": f"""
+            WITH {_WORDS_CTE}, counts AS (
               SELECT doc_id, word, COUNT(*) AS c
               FROM words, UNNEST(w) AS t(word) GROUP BY doc_id, word
             ), agg AS (
@@ -3674,8 +3489,8 @@ def oracle_sql() -> dict[str, str]:
                    ROUND(CAST(top_c AS DOUBLE) / n_words, 5) AS top_frac
             FROM agg
         """,
-        "shard_assign": """
-            SELECT CAST(((doc_id % 1048573) * 2654435761) % 16 AS BIGINT) AS shard,
+        "shard_assign": f"""
+            SELECT CAST({_knuth_sql(16)} AS BIGINT) AS shard,
                    COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars
             FROM documents GROUP BY 1
         """,
@@ -3762,12 +3577,10 @@ def oracle_sql() -> dict[str, str]:
         "suffix_dup_spans_sampled": _suffix_twin_sql(rate=4),
         "url_canonicalize": f"""
             WITH p AS (
-              SELECT split_part(split_part(url, '#', 1), '?', 1) AS canonical_url
+              SELECT {_URL_BASE_SQL} AS canonical_url
               FROM read_parquet('{_cache01}/pages.parquet')
             ), h AS (
-              SELECT canonical_url,
-                     split_part(split_part(canonical_url, '://', 2), '/', 1) AS host
-              FROM p
+              SELECT canonical_url, {_host_sql("canonical_url")} AS host FROM p
             )
             SELECT canonical_url, host,
                    CASE WHEN len(string_split(host, '.')) >= 2
@@ -3807,14 +3620,8 @@ def oracle_sql() -> dict[str, str]:
                    count(*) AS n_docs
             FROM u GROUP BY 1 HAVING count(*) > 1
         """,
-        "line_dedup_reconstruct": """
-            WITH d AS (
-              SELECT doc_id, string_split(text, ' ') AS w FROM documents
-            ), chunks AS (
-              SELECT doc_id, i AS chunk_no,
-                     array_to_string(list_slice(w, i*8 + 1, i*8 + 8), ' ') AS chunk
-              FROM d, UNNEST(range(0, (len(w) + 7) // 8)) AS t(i)
-            ), common AS (
+        "line_dedup_reconstruct": f"""
+            WITH {_CHUNKS_SQL}, common AS (
               SELECT chunk FROM chunks
               GROUP BY chunk HAVING count(DISTINCT doc_id) >= 3
             ), kept AS (
@@ -3977,14 +3784,8 @@ def oracle_sql() -> dict[str, str]:
               FROM embeddings q JOIN embeddings e ON q.vec_id != e.vec_id
               WHERE q.vec_id < 5) WHERE rn <= 5
         """,
-        "knn_cosine": """
-            WITH n AS (
-              SELECT vec_id,
-                     list_transform(CAST(embedding AS DOUBLE[]),
-                                    x -> CAST(floor(x * 1048576.0) AS BIGINT)
-                     ) AS q
-              FROM embeddings
-            ), m AS (
+        "knn_cosine": f"""
+            WITH n AS ({_QVEC_SQL}), m AS (
               SELECT vec_id, q,
                      list_sum(list_transform(list_zip(q, q), x -> x[1]*x[2]))
                        AS n2

@@ -67,7 +67,6 @@ class DedupConfig:
     # on non-duplicate docs; k=16 floods candidates with common-phrase hits.
     gram_k: int = 32            # char gram size for fingerprinting
     winnow_window: int = 19     # w ; t = 32 + 19 - 1 = 50 = min_substr
-    min_substr: int = 50        # guaranteed-detection threshold (chars)
 
     # --- stage 4: verification ------------------------------------------
     jaccard_tau: float = 0.8    # signature-Jaccard ⇒ duplicate edge
@@ -96,12 +95,16 @@ class DedupConfig:
             self.minhash_k & (self.minhash_k - 1)
         ):
             raise ValueError("minhash_scheme='oph' requires power-of-two minhash_k")
-        if self.winnow_window + self.gram_k - 1 != self.min_substr:
-            raise ValueError("winnowing guarantee t = w + k - 1 must equal min_substr")
         if self.hamming_radius > self.pigeonhole_blocks - self.pigeonhole_combo:
             raise ValueError(
                 "pigeonhole guarantee needs hamming_radius <= blocks - combo"
             )
+
+    @property
+    def min_substr(self) -> int:
+        """Guaranteed-detection threshold in chars: winnowing finds every
+        shared span of at least t = w + k - 1 chars."""
+        return self.winnow_window + self.gram_k - 1
 
     @property
     def simhash_block_widths(self) -> tuple[int, ...]:

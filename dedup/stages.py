@@ -217,11 +217,13 @@ def stage3_candidates(
     # Generator codes (tinyint, decoded only in the tiny dropped/sources
     # outputs) keep the entries shuffle key fully numeric: (g, k1, k2,
     # uid) sorts/compares as fixed-width machine words, no string keys
-    # anywhere in the hot shuffles. GEN_NAMES maps g back; SRC_CODES maps
-    # g to the source code whose numeric order equals the alphabetical
-    # order of source names ('lsh','sha','simhash','winnow'), so sorting
-    # codes before decoding equals sorting names.
-    GEN_NAMES = F.array(F.lit("lsh"), F.lit("simhash"), F.lit("winnow"))
+    # anywhere in the hot shuffles. g is the source code itself (lsh=0,
+    # simhash=2, winnow=3; the sha tier is 1), numbered so that numeric
+    # order equals the alphabetical order of the source names: sorting
+    # codes before decoding through SRC_NAMES equals sorting names.
+    SRC_NAMES = F.array(
+        F.lit("lsh"), F.lit("sha"), F.lit("simhash"), F.lit("winnow")
+    )
     # (a) LSH home+probe bucket rows, raw: a doc can hit one (band, key)
     # as home and as probe(s); the (key, uid) dedup below keeps one row.
     lsh_entries = buckets.join(ids, "url").select(
@@ -236,12 +238,12 @@ def stage3_candidates(
     # materializes uids into the committed tables at stage-1 commit so
     # these joins disappear entirely (docs/SCALE.md).
     sim_entries = _simhash_combo_entries(signatures, cfg).join(ids, "url").select(
-        F.lit(1).cast("tinyint").alias("g"), "k1", "k2", "uid",
+        F.lit(2).cast("tinyint").alias("g"), "k1", "k2", "uid",
         F.lit(False).alias("is_probe"), "is_new",
     )
     fp_entries = signatures.select(
         "url",
-        F.lit(2).cast("tinyint").alias("g"),
+        F.lit(3).cast("tinyint").alias("g"),
         F.lit(0).alias("k1"),
         F.explode("fingerprints").alias("k2"),
         F.lit(False).alias("is_probe"),
@@ -281,9 +283,9 @@ def stage3_candidates(
         .groupBy(*keys)
         .agg(F.max("n").alias("n"))
         .select(
-            F.element_at(GEN_NAMES, F.col("g") + 1).alias("generator"),
+            F.element_at(SRC_NAMES, F.col("g") + 1).alias("generator"),
             # key strings match the oracle's per-generator formats
-            F.when(F.col("g") == 2, F.col("k2").cast("string"))
+            F.when(F.col("g") == 3, F.col("k2").cast("string"))
             .otherwise(F.concat_ws(":", "k1", "k2"))
             .alias("key"),
             F.col("n").cast("long").alias("n"),
@@ -304,15 +306,6 @@ def stage3_candidates(
     # by max_bucket. The probe-probe exclusion ([MPLSH] J2: the index
     # stores home buckets, perturbation applies to queries) only bites for
     # gen='lsh' — other generators have is_probe=false everywhere.
-    # source codes ordered like the source names sort: lsh=0 sha=1
-    # simhash=2 winnow=3 (g 0/1/2 -> s 0/2/3)
-    SRC_NAMES = F.array(
-        F.lit("lsh"), F.lit("sha"), F.lit("simhash"), F.lit("winnow")
-    )
-    g_to_src = F.array(
-        F.lit(0).cast("tinyint"), F.lit(2).cast("tinyint"),
-        F.lit(3).cast("tinyint"),
-    )
     pairs = (
         grouped.select("g", F.explode("members").alias("a"), F.col("members"))
         .select("g", "a", F.explode("members").alias("b"))
@@ -322,7 +315,7 @@ def stage3_candidates(
         .select(
             F.col("a.uid").alias("uid_a"),
             F.col("b.uid").alias("uid_b"),
-            F.element_at(g_to_src, F.col("g") + 1).alias("s"),
+            F.col("g").alias("s"),
         )
     )
 

@@ -4,6 +4,7 @@ Runs every `queries()` entry from __spark_entry__.py at sf0.01 and
 compares it against its `oracle_sql()` DuckDB twin the way the driver
 does: row count, column-name set, and a value hash computed after
 sorting columns by name and rows by value. Prints one line per query
+(with its 16-hex value hash, so two runs can be diffed query by query)
 plus a summary; exit code 1 if any twinned query mismatches.
 
 Usage:  python scripts/check_contract.py [sf_dir] [query ...]
@@ -119,12 +120,13 @@ def main() -> int:
         sc, oc = _canon(sdf), _canon(odf)
         rows_ok = len(sc) == len(oc)
         cols_ok = list(sc.columns) == list(oc.columns)
-        hash_ok = rows_ok and cols_ok and _hash(sc) == _hash(oc)
+        sh, oh = _hash(sc), _hash(oc)
+        hash_ok = rows_ok and cols_ok and sh == oh
         status = "PASS" if (rows_ok and cols_ok and hash_ok) else "FAIL"
         print(
             f"{name:28s} {status}  rows={len(sc)}/{len(oc)} "
             f"cols={'ok' if cols_ok else f'{list(sc.columns)}!={list(oc.columns)}'} "
-            f"hash={'ok' if hash_ok else 'MISMATCH'}  ({time.time()-t0:.1f}s)"
+            f"hash={sh if hash_ok else f'{sh}!={oh}'}  ({time.time()-t0:.1f}s)"
         )
         if status == "FAIL":
             bad.append(name)

@@ -149,41 +149,63 @@ def test_ann_hyperplane_recall(spark):
     assert n_results <= n * 5
 
 
+def _duckdb_codes(sf, code_cols):
+    """{vec_id: (q, code...)} computed by DuckDB from the twins' SQL: the
+    fixed-point vectors of `_QVEC_SQL` and `_code_sql` code columns."""
+    import duckdb
+
+    import __spark_entry__ as e
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS "
+        f"SELECT * FROM read_parquet('{sf}/embeddings.parquet')"
+    )
+    rows = con.execute(
+        f"SELECT vec_id, q, {code_cols} FROM ({e._QVEC_SQL})"
+    ).fetchall()
+    con.close()
+    return {r[0]: (tuple(r[1]), *r[2:]) for r in rows}
+
+
 def test_ann_codes_arrow_matches_jvm(spark):
     """The shared Arrow code kernel behind ann_hyperplane must be
-    bit-identical to the JVM literal-fold reference — codes AND the
+    bit-identical, per vector, to DuckDB's independent SQL statement of
+    the same codes (`_code_sql`, the twin's arithmetic) — codes AND the
     fixed-point vectors the exact re-rank consumes — at both the fixture
     width (4 bits) and the production width (12 bits)."""
     import __spark_entry__ as e
 
-    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    sf = "/root/testdata/sf0.01"
+    emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     for n_bits in (4, 12):
-        jvm = {
-            r["vec_id"]: (tuple(r["q"]), r["code"])
-            for r in e._ann_codes_jvm(emb, n_bits).collect()
-        }
+        ref = _duckdb_codes(sf, e._code_sql(e._ann_planes(n_bits)))
         arrow = {
             r["vec_id"]: (tuple(r["q"]), r["code"])
             for r in e._ann_codes_arrow(emb, n_bits).collect()
         }
-        assert arrow == jvm and len(arrow) == emb.count(), n_bits
+        assert arrow == ref and len(arrow) == emb.count(), n_bits
 
 
 def test_cos_codes_arrow_matches_jvm(spark):
-    """The vectorized Arrow code kernel must be bit-identical to the
-    JVM literal-fold reference on the real fixture embeddings — the
-    gate that lets cosine_near_dup ship the Arrow path while the DuckDB
-    twin keeps recomputing codes from the same plane constants."""
+    """The vectorized Arrow code kernel must be bit-identical, per
+    vector, to DuckDB's `_code_sql` codes on the real fixture embeddings
+    — the gate that lets cosine_near_dup ship the Arrow path while its
+    DuckDB twin recomputes codes from the same plane constants."""
     import __spark_entry__ as e
 
     sf = "/root/testdata/sf0.01"
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
-    cols = ["vec_id"] + [f"c{t}" for t in range(e._COS_L)]
-    jvm = {r["vec_id"]: tuple(r[c] for c in cols[1:])
-           for r in e._cos_codes_jvm(emb).collect()}
-    arrow = {r["vec_id"]: tuple(r[c] for c in cols[1:])
+    planes = e._planes((e._COS_L, e._COS_B, 64))
+    code_cols = ", ".join(
+        f"{e._code_sql(table)} AS c{t}" for t, table in enumerate(planes)
+    )
+    ref = _duckdb_codes(sf, code_cols)
+    cols = [f"c{t}" for t in range(e._COS_L)]
+    arrow = {r["vec_id"]: tuple(r[c] for c in cols)
              for r in e._cos_codes_arrow(emb).collect()}
-    assert arrow == jvm and len(arrow) == emb.count()
+    assert {v: codes[1:] for v, codes in ref.items()} == arrow
+    assert len(arrow) == emb.count()
 
 
 def test_ann_code_kernels_are_cached_once(spark):

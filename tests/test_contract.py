@@ -492,14 +492,17 @@ def test_cross_dup_domains_accounts_every_dup_pair(spark):
         assert r["host_a"] <= r["host_b"]
 
 
-def test_word_grams_distinct_equals_shuffled_distinct(spark):
+def test_word_grams_distinct_equals_shuffled_distinct(spark, ddb):
     """The map-side array_distinct dedup must equal the shuffled
-    `_word_grams().distinct()` form exactly — (doc, gram) duplicates can
-    only arise within one document's single input row."""
+    `SELECT DISTINCT doc_id, gram` over the twins' shared gram CTE
+    exactly — (doc, gram) duplicates can only arise within one
+    document's single input row."""
     d = spark.read.parquet(f"{SF}/documents.parquet")
-    a = set(map(tuple, entry_mod._word_grams_distinct(d).collect()))
-    b = set(map(tuple, entry_mod._word_grams(d).distinct().collect()))
-    assert a == b and len(a) > 0
+    a = list(map(tuple, entry_mod._word_grams_distinct(d).collect()))
+    b = ddb.execute(
+        f"WITH {entry_mod._grams_sql(8)} SELECT DISTINCT doc_id, gram FROM grams"
+    ).fetchall()
+    assert len(a) == len(set(a)) and set(a) == set(b) and len(a) > 0
 
 
 def test_bigram_lm_score_matches_recomputation(spark):
