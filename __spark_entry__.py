@@ -2135,12 +2135,13 @@ def _pipeline_tables(spark, sf_dir):
 
 def _dedup_stage(table: str):
     def f(spark, sf_dir):
-        from dedup.stages import cluster_report
+        from dedup.stages import buckets_from_fused, cluster_report
 
         out = _pipeline_tables(spark, sf_dir)
         if table == "report":
             return cluster_report(out.df(spark, "clusters"))
-        df = out.df(spark, table)
+        # bucket rows are an explode of the committed signatures table
+        df = out.df(spark, "signatures" if table == "buckets" else table)
         if table == "signatures":
             df = df.select(
                 "url",
@@ -2153,7 +2154,7 @@ def _dedup_stage(table: str):
                 F.size("fingerprints").cast("long").alias("n_fp"),
             )
         elif table == "buckets":
-            df = df.select(
+            df = buckets_from_fused(df).select(
                 F.col("band").cast("long").alias("band"),
                 "bucket_key",
                 "url",

@@ -463,19 +463,14 @@ class Warehouse:
 
     def read(self, spark: SparkSession, table: str) -> DataFrame:
         """The committed `table`, scanned with the schema its manifest
-        carries: no schema-inference job. A manifest written before the
-        `schema` field existed (a warehouse a resumed run reopens) reads
-        through inference."""
+        carries: no schema-inference job."""
         if not self.is_complete(table):
             raise FileNotFoundError(
                 f"table {table!r} has no committed manifest for config "
                 f"{self.config_hash} under {self.root}"
             )
-        schema = self.manifest(table).get("schema")
-        reader = spark.read
-        if schema is not None:
-            reader = reader.schema(T.StructType.fromJson(json.loads(schema)))
-        return reader.parquet(self.path(table))
+        schema = T.StructType.fromJson(json.loads(self.manifest(table)["schema"]))
+        return spark.read.schema(schema).parquet(self.path(table))
 
     # -- per-partition metrics: the `stage_metrics` table (S4) --------------
     METRICS_TABLE = "stage_metrics"

@@ -37,10 +37,6 @@ class DedupConfig:
     # comparison tests and as the literature baseline)
     minhash_scheme: str = "oph"
     min_text_len: int = 5       # rows with shorter normalized text are skipped (P2)
-    # P2 language allowlist: None = all languages pass; ("en", ...) keeps
-    # only those rows at stage 1 (rows filtered here never sign/bucket/pair,
-    # matching a production "English-only training set" run)
-    lang_allow: tuple[str, ...] | None = None
 
     # --- stage 2: banding + multi-probe ---------------------------------
     bands: int = 8              # b
@@ -49,14 +45,14 @@ class DedupConfig:
                                 # (T=1 → plain banding, no perturbations)
 
     # --- simhash tier ----------------------------------------------------
-    # Manku/Jain/Sarma (WWW 2007) combination blocking: split 64 bits into
+    # Manku/Jain/Sarma (WWW 2007) combination blocking: split the 64-bit
+    # SimHash (hashing.simhash64; always 64 bits) into
     # `pigeonhole_blocks` blocks and index every `pigeonhole_combo`-subset
     # of blocks as one key. hamming <= blocks - combo flipped bits leave
     # >= combo blocks clean, so at least one combo key matches exactly.
     # 3-of-6 gives ~32-bit keys (selective to ~10^9 docs) instead of the
     # 16-bit keys of the naive 4-block scheme, which saturate the bucket
     # cap and kill the tier at web scale.
-    simhash_bits: int = 64
     hamming_radius: int = 3
     pigeonhole_blocks: int = 6
     pigeonhole_combo: int = 3   # keys = C(blocks, combo) per doc (20)
@@ -110,7 +106,7 @@ class DedupConfig:
     def simhash_block_widths(self) -> tuple[int, ...]:
         """Per-block bit widths (as equal as possible, MSB-blocks narrower),
         e.g. 64 bits / 6 blocks -> (11, 11, 11, 11, 10, 10)."""
-        q, r = divmod(self.simhash_bits, self.pigeonhole_blocks)
+        q, r = divmod(64, self.pigeonhole_blocks)
         return tuple(q + 1 if i < r else q for i in range(self.pigeonhole_blocks))
 
     def config_hash(self) -> str:

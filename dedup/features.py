@@ -78,19 +78,15 @@ class BatchFeatures(NamedTuple):
 
 
 def batch_doc_features(texts, cfg: DedupConfig, a: np.ndarray, b: np.ndarray):
-    """Vectorized stage-1 kernel for a whole Arrow batch — bit-identical
-    outputs to calling `doc_features` per document (tests/test_batchkernel
-    asserts equality field by field).
+    """Stage-1 features for a whole Arrow batch — bit-identical outputs to
+    calling `doc_features` per document (tests/test_batchkernel asserts
+    equality field by field, in every mode). Returns None when every row
+    is filtered (P2). Each text is signed as given: callers that want
+    identical texts signed once pass distinct texts (udfs.make_fused_fn).
 
-    Identical texts within a batch are signed ONCE and fanned back out:
-    every feature here is a pure function of the text, and exact
-    duplicates are the norm in the corpora this engine exists for (the
-    replicated bench corpus is ~94% identical text; real web crawls run
-    30-60%), so per-batch dedup removes the dominant share of kernel work
-    with no approximation at all.
-
-    The per-document Python and NumPy call overhead is amortized across
-    the batch:
+    Word shingles and classic kxu MinHash stack the per-doc kernel. The
+    scale path (char shingles + OPH, the DEFAULT config) amortizes the
+    per-document Python and NumPy call overhead across the batch:
 
       - ALL documents' normalized buffers are joined (single-space
         separators) into one uint8 buffer; the k-char shingle hashes and
@@ -104,48 +100,23 @@ def batch_doc_features(texts, cfg: DedupConfig, a: np.ndarray, b: np.ndarray):
       - SimHash token hashes come from `fnv1a64_tokens_batch` (one
         vector pass over all tokens of all documents), and the per-bit
         +/-1 sums reduce per document via np.add.reduceat.
-
-    Only supported for the scale path (shingle_mode='char' +
-    minhash_scheme='oph'); callers fall back to the per-doc kernel for
-    the other modes (word shingles, classic kxu MinHash).
     """
     if cfg.shingle_mode != "char" or cfg.minhash_scheme != "oph":
-        raise ValueError("batched kernel supports char shingles + oph only")
-    uniq_idx: dict = {}
-    uniq_texts: list = []
-    inv = np.empty(len(texts), dtype=np.int64)
-    for i, t in enumerate(texts):
-        if t is None:
-            inv[i] = -1
-            continue
-        j = uniq_idx.setdefault(t, len(uniq_texts))
-        if j == len(uniq_texts):
-            uniq_texts.append(t)
-        inv[i] = j
-    ubf = _batch_features_unique(uniq_texts, cfg, a, b)
-    if ubf is None:
-        return None
-    if len(uniq_texts) == len(texts):
-        return ubf  # no nulls, no duplicates: unique rows ARE the batch
-    urow = np.full(len(uniq_texts), -1, dtype=np.int64)
-    urow[ubf.keep] = np.arange(ubf.keep.size, dtype=np.int64)
-    rows = np.where(inv >= 0, urow[np.maximum(inv, 0)], -1)
-    keep = np.nonzero(rows >= 0)[0]
-    sel = rows[keep]
-    return BatchFeatures(
-        keep=keep,
-        minhash=ubf.minhash[sel],
-        runnerup=ubf.runnerup[sel],
-        simhash=ubf.simhash[sel],
-        n_shingles=ubf.n_shingles[sel],
-        n_tokens=ubf.n_tokens[sel],
-        text_sha=[ubf.text_sha[r] for r in sel],
-        fingerprints=[ubf.fingerprints[r] for r in sel],
-    )
-
-
-def _batch_features_unique(texts, cfg: DedupConfig, a, b):
-    """The vectorized kernel proper, over already-distinct texts."""
+        feats = [doc_features(t, cfg, a, b) for t in texts]
+        keep = [i for i, f in enumerate(feats) if f is not None]
+        if not keep:
+            return None
+        fs = [feats[i] for i in keep]
+        return BatchFeatures(
+            keep=np.array(keep, dtype=np.int64),
+            minhash=np.stack([f.minhash for f in fs]),
+            runnerup=np.stack([f.runnerup for f in fs]),
+            simhash=np.array([f.simhash for f in fs], dtype=np.uint64),
+            n_shingles=np.array([f.n_shingles for f in fs], dtype=np.int64),
+            n_tokens=np.array([f.n_tokens for f in fs], dtype=np.int64),
+            text_sha=[f.text_sha for f in fs],
+            fingerprints=[f.fingerprints for f in fs],
+        )
     k_sh = cfg.shingle_k
     K = cfg.minhash_k
     # P2 + empty-shingle filter: a char-mode doc signs iff its normalized

@@ -5,13 +5,13 @@ design point; SURVEY.md §2.9's incremental note made real).
 `run_incremental` runs the same stage composition as a fresh run
 (`pipeline.execute`) and passes it only data: how each table commits
 (`_COMMITS`) and the committed global state the batch folds into (the
-`_with_deltas` views of pages, signatures and buckets, plus the old
-clusters). What is incremental vs recomputed:
+`_with_deltas` views of pages and signatures, plus the old clusters).
+What is incremental vs recomputed:
   - stage 1/2 run on the NEW batch only (the dominant per-doc cost).
-  - candidate generation sees OLD + NEW bucket/signature state but emits
-    only pairs touching >= 1 new url (stage3_candidates new_urls mode);
-    the bucket cap counts old+new members, matching what a from-scratch
-    run over the union would drop.
+  - candidate generation sees OLD + NEW signatures (whose bucket arrays
+    explode into bucket rows) but emits only pairs touching >= 1 new url
+    (stage3_candidates new_urls mode); the bucket cap counts old+new
+    members, matching what a from-scratch run over the union would drop.
   - verification runs on those new-touching pairs only.
   - connectivity: the base run's clusters table IS the transitive
     closure of the old dup pairs, compressed to one star per component —
@@ -56,7 +56,7 @@ from .cc import connected_components  # noqa: F401  perfbench/spans.py wraps thi
 from .config import DedupConfig
 
 #: the tables an increment commits as `<table>_delta_<run_id>`, in order
-DELTA_TABLES = ("pages", "signatures", "buckets", "verified_pairs")
+DELTA_TABLES = ("pages", "signatures", "verified_pairs")
 #: the global tables an increment replaces whole (catalog.replace)
 REPLACED_TABLES = ("clusters", "canonical_pages")
 #: the tables a completed base run has committed
@@ -202,9 +202,7 @@ def run_incremental(
             )
         # the global state before this increment: the views are built
         # before its own deltas are registered
-        prior = {
-            t: _with_deltas(spark, wh, t) for t in ("pages", "signatures", "buckets")
-        }
+        prior = {t: _with_deltas(spark, wh, t) for t in ("pages", "signatures")}
         prior["clusters"] = wh.read(spark, "clusters")  # always global (replaced)
 
         # guard: a url may appear in exactly one batch. Left-semi from the
@@ -227,7 +225,6 @@ def run_incremental(
         wh.mark_increment_committed(run_id)
         return {
             "signatures_delta": wh.read(spark, wh.delta("signatures")),
-            "buckets_delta": wh.read(spark, wh.delta("buckets")),
             "verified_pairs_delta": wh.read(spark, wh.delta("verified_pairs")),
             "clusters": wh.read(spark, "clusters"),
             "canonical_pages": wh.read(spark, "canonical_pages"),

@@ -64,8 +64,6 @@ def run_oracle(pages: pd.DataFrame, cfg: DedupConfig) -> OracleResult:
     # ---------------- stage 1: signatures --------------------------------
     sig_rows = []
     for rec in pages.itertuples(index=False):
-        if cfg.lang_allow is not None and rec.lang not in cfg.lang_allow:
-            continue  # P2 allowlist, mirrored by stages.stage12_fused
         f = doc_features(rec.text, cfg, a, b)
         if f is None:
             continue

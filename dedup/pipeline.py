@@ -15,14 +15,15 @@ Pipelined commits: every committed table is consumed one way. Its write,
 commit and metrics append run in a background thread, and a later stage
 reads the committed table back, which first joins that commit; so a
 stage's Spark compute runs inside its own write job instead of in a
-separate persist + count. Only two relations are persisted: the
-fused stage-1/2 relation both of its tables are written from, and stage
-3's entries, which candidate_pairs and dropped_buckets share. Commits
-still overlap where no stage reads the other's output: the signatures
-and buckets writes, the candidate_pairs and dropped_buckets writes, and
-canonical_pages with the metrics appends. The driver waits for a table
-before a later stage reads it back, for every write before
-`verified_pairs` before the stage-3 and fused caches go, and at the end.
+separate persist + count. Stages 1+2 are one table: the one Arrow pass
+is the `signatures` write, and its bucket-entry array columns explode
+into bucket rows where stage 3 reads them. Only stage 3's entries are
+persisted, which candidate_pairs and dropped_buckets share. Commits
+still overlap where no stage reads the other's output: the
+candidate_pairs and dropped_buckets writes, and canonical_pages with the
+metrics appends. The driver waits for a table before a later stage reads
+it back, for every write before `verified_pairs` before the stage-3
+cache goes, and at the end.
 
 Resume: `run(..., resume=True)` skips any table committed under the SAME
 config_hash; a crash mid-stage leaves no manifest, so the stage reruns
@@ -39,7 +40,6 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import stages
@@ -53,8 +53,8 @@ from .config import DedupConfig
 
 #: the pipeline's tables in commit order; also the valid `stop_after` names
 TABLES = (
-    "pages", "signatures", "buckets", "candidate_pairs",
-    "dropped_buckets", "verified_pairs", "clusters", "canonical_pages",
+    "pages", "signatures", "candidate_pairs", "dropped_buckets",
+    "verified_pairs", "clusters", "canonical_pages",
 )
 
 
@@ -121,7 +121,7 @@ def execute(
     manifest) or "replace" (a new generation behind the table's pointer);
     a table it leaves out is not committed, so its build stays lazy and
     runs only if a later build reads it. prior: the committed global
-    pages, signatures, buckets and clusters this run folds into (none
+    pages, signatures and clusters this run folds into (none
     for a fresh run). Each commit appends its table's per-partition
     metrics rows to the warehouse's `stage_metrics` table, so the rows
     of every table committed before a failure survive it."""
@@ -157,23 +157,19 @@ def _compose(
     pages_t = st("pages", lambda: pages)()
     pages_all = over("pages", pages_t)
 
-    # stages 1+2: ONE Arrow pass (stages.stage12_fused) computes both
-    # tables; each write is a cache-read + file IO. A resume with only one
-    # of the two committed reruns the pass for the other.
-    fused = functools.cache(
-        lambda: st.cache("fused", stages.stage12_fused(pages_t, cfg))
-    )
-    sigs = st("signatures", lambda: stages.signatures_from_fused(fused()))
-    buckets = st("buckets", lambda: stages.buckets_from_fused(fused()))
+    # stages 1+2: ONE Arrow pass (stages.stage12_fused) is the signatures
+    # table, each row carrying its bucket entries as array columns
+    sigs = st("signatures", lambda: stages.stage12_fused(pages_t, cfg))
 
-    # stage 3: candidates and the dropped-bucket report share the
-    # persisted entries relation, and their two writes run side by side.
-    # Folding into prior state, only pairs touching this run's urls are
-    # emitted.
+    # stage 3: bucket rows explode from the signatures. Candidates and the
+    # dropped-bucket report share the persisted entries relation, and
+    # their two writes run side by side. Folding into prior state, only
+    # pairs touching this run's urls are emitted.
     @functools.cache
     def cand() -> stages.CandidateOut:
+        sig_all = over("signatures", sigs())
         out = stages.stage3_candidates(
-            over("signatures", sigs()), over("buckets", buckets()), cfg,
+            sig_all, stages.buckets_from_fused(sig_all), cfg,
             new_urls=sigs().select("url") if prior else None,
         )
         st.cached["entries"] = out.entries  # persisted by stage 3
@@ -185,7 +181,7 @@ def _compose(
     # stage 4: verify reads the committed candidates (joining their
     # commit, which re-raises a failure before verify is built); the join
     # below waits for dropped_buckets too, and once verify has landed the
-    # stage-3 and fused caches go before CC
+    # stage-3 cache goes before CC
     verified = st(
         "verified_pairs",
         lambda: stages.stage4_verify(
@@ -201,7 +197,7 @@ def _compose(
     # (tests/test_incremental.py)
     def cluster() -> DataFrame:
         edges = verified().filter("is_dup").select("url_a", "url_b")
-        st.release("fused", "entries")
+        st.release("entries")
         if "clusters" in prior:
             old = prior["clusters"].filter(F.col("url") != F.col("cluster_id"))
             edges = edges.unionByName(old.select(
@@ -282,13 +278,6 @@ class _Stages:
         """This run's committed `name`, read back once its commit lands."""
         self.join(name)
         return self.wh.read(self.spark, self.table(name))
-
-    def cache(self, key: str, df: DataFrame) -> DataFrame:
-        """Persist (spilling) and count `df`; release(key) unpersists it."""
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        df.count()
-        self.cached[key] = df
-        return df
 
     def release(self, *keys: str) -> None:
         """Unpersist the named caches (all when none are named)."""

@@ -4,8 +4,13 @@ materialization/checkpointing lives in pipeline.py. Catalyst handles column
 pruning/pushdown; the only Python on the data path is the Arrow UDF surface
 in udfs.py.
 
+Stages 1+2 are one Arrow pass and one committed table: `signatures`
+carries each document's bucket entries as array columns, and bucket rows
+are a JVM explode of it (`buckets_from_fused`) wherever a consumer needs
+rows.
+
 Scale notes (the 100 TB story, SURVEY.md §4):
-- Candidate generation never self-joins the bucket table. One window
+- Candidate generation never self-joins the bucket rows. One window
   count marks every bucket entry with its key's cardinality and the cap
   filters oversized groups row-wise BEFORE any collect_list — a hot
   bucket (boilerplate pages) is sorted and counted on one task, never
@@ -45,40 +50,30 @@ def day_layout(df: DataFrame) -> tuple[DataFrame, list[str] | None]:
 
 
 # ---------------------------------------------------------------------------
-# fused stage 1+2 — one Arrow pass emits signatures AND bucket entries
+# stages 1+2 — one Arrow pass emits signatures WITH their bucket entries
 # ---------------------------------------------------------------------------
 def stage12_fused(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """pages -> fused (signature columns + per-doc bucket-entry arrays).
+    """pages -> the `signatures` table: signature columns plus each
+    document's bucket entries as four array columns (udfs.BUCKET_COLS).
 
     Stages 1 and 2 share ONE Arrow pass: bucket entries are computed
-    from the minhash/runnerup matrices while they are still in NumPy,
-    and stage 2 is a JVM explode (buckets_from_fused) over the fused
-    relation — no second JVM->Python->JVM copy of the signature arrays.
-    P1: only (url, text) crosses into Arrow; html and every other column
-    are pruned at the scan. P2: the lang allowlist (when set) filters at
-    the scan too — pushed into the parquet reader. Values match the
-    oracle bit-for-bit (tests/test_parity.py)."""
-    src = pages
-    if cfg.lang_allow is not None:
-        src = src.filter(F.col("lang").isin(*cfg.lang_allow))
-    narrow = src.select("url", "text").filter(F.col("text").isNotNull())
-    return narrow.mapInPandas(udfs.make_fused_fn(cfg), udfs.FUSED_SCHEMA)
+    from the minhash/runnerup matrices while they are still in NumPy, and
+    bucket rows are a JVM explode (buckets_from_fused) of this relation
+    or of its commit — no second JVM->Python->JVM copy of the signature
+    arrays. P1: only (url, text) crosses into Arrow; html and every other
+    column are pruned at the scan. Values match the oracle bit-for-bit
+    (tests/test_parity.py)."""
+    narrow = pages.select("url", "text").filter(F.col("text").isNotNull())
+    return narrow.mapInPandas(udfs.make_fused_fn(cfg), udfs.SIGNATURES_SCHEMA)
 
 
-FUSED_BUCKET_COLS = ("b_band", "b_key", "b_probe", "b_rank")
-
-
-def signatures_from_fused(fused: DataFrame) -> DataFrame:
-    return fused.drop(*FUSED_BUCKET_COLS)
-
-
-def buckets_from_fused(fused: DataFrame) -> DataFrame:
-    """Explode the fused bucket-entry arrays into bucket rows (band,
+def buckets_from_fused(signatures: DataFrame) -> DataFrame:
+    """Explode the signatures' bucket-entry arrays into bucket rows (band,
     bucket_key, url, is_probe, probe_rank) — pure whole-stage-codegen JVM
     work (arrays_zip + explode)."""
-    e = fused.select(
+    e = signatures.select(
         "url",
-        F.explode(F.arrays_zip(*FUSED_BUCKET_COLS)).alias("e"),
+        F.explode(F.arrays_zip(*udfs.BUCKET_COLS)).alias("e"),
     )
     return e.select(
         F.col("e.b_band").alias("band"),
@@ -192,8 +187,8 @@ def stage3_candidates(
     """
     from pyspark import StorageLevel
 
-    # URL -> id encode FIRST: every url in buckets/signatures appears in
-    # the signatures relation (incremental passes the base+delta union),
+    # URL -> id encode FIRST: every url in buckets appears in the
+    # signatures relation (incremental passes the base+delta union),
     # so one id map covers all three generators and the sha tier. The
     # encode joins are map-side at fixture scale (AQE broadcasts the map)
     # and every shuffle in this stage — the entries exchange, the pair
@@ -235,7 +230,7 @@ def stage3_candidates(
     # (c) simhash combination keys, (d) winnow fingerprints (distinct per
     # doc via np.unique in the kernel, so count(*) == distinct urls).
     # Both encode map-side (broadcast map); at 10^12 docs a deployment
-    # materializes uids into the committed tables at stage-1 commit so
+    # materializes uids into the committed table at stage-1 commit so
     # these joins disappear entirely (docs/SCALE.md).
     sim_entries = _simhash_combo_entries(signatures, cfg).join(ids, "url").select(
         F.lit(2).cast("tinyint").alias("g"), "k1", "k2", "uid",
@@ -261,7 +256,7 @@ def stage3_candidates(
     # Scale note: at the 100 TB design point the entries relation (~64
     # rows/doc) exceeds any executor-storage budget — there a deployment
     # flips this to no-persist and lets both passes recompute from the
-    # committed buckets/signatures tables (two cheap columnar scans);
+    # committed signatures table (cheap columnar scans);
     # persist wins only while entries fit the cluster's storage fraction.
     from pyspark.sql import Window
 

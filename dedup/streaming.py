@@ -4,10 +4,11 @@ incremental dedup machinery (SURVEY.md §2.9's stretch goal made real).
 Shape: `spark.readStream` over a parquet drop directory (the sandbox
 stand-in for an Iceberg-snapshot / Kafka WARC feed) -> `foreachBatch` ->
 `dedup.incremental.run_incremental`. foreachBatch rather than stateful
-streaming operators, deliberately: the dedup state — signatures, buckets,
-clusters — already lives in the warehouse's committed tables, not in
-Spark's state store, so every micro-batch becomes one incremental commit
-that is resumable, queryable mid-stream, and survives the streaming query
+streaming operators, deliberately: the dedup state — signatures (with
+their bucket arrays), clusters — already lives in the warehouse's
+committed tables, not in Spark's state store, so every micro-batch
+becomes one incremental commit that is resumable, queryable mid-stream,
+and survives the streaming query
 (and Spark itself) restarting. At the design point this is the daily-crawl
 service: new WARC batches land in the drop directory and each trigger
 folds them into the global dedup view without recomputing old-old work.
@@ -90,7 +91,6 @@ def run_stream(
     warehouse_root: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
-    bootstrap: bool = True,
     compact_every: int | None = None,
 ) -> StreamResult:
     """Fold every parquet file currently in `source_dir` (pages schema:
@@ -141,7 +141,7 @@ def run_stream(
         own_bootstrap = (
             pages_man is not None and pages_man.get("run_id") == run_id
         )
-        if bootstrap and (not base_complete or own_bootstrap):
+        if not base_complete or own_bootstrap:
             run_pipeline(spark, batch_df, cfg, warehouse_root, run_id=run_id)
             result.bootstrapped = True
         else:

@@ -24,16 +24,16 @@ from pyspark.sql import types as T
 
 from . import hashing as H
 from .config import DedupConfig
-from .features import (
-    batch_doc_features,
-    doc_features,
-    minhash_params,
-    u64_to_i64,
-)
+from .features import batch_doc_features, minhash_params, u64_to_i64
 
 # ---------------------------------------------------------------------------
 # fixed schemas (§1.2: every stage declares its StructType, never inferred)
 # ---------------------------------------------------------------------------
+#: the committed `signatures` table: the stage-1 signature bundle plus
+#: this document's stage-2 bucket entries as four parallel arrays (a JVM
+#: arrays_zip + explode turns them into bucket rows wherever a consumer
+#: needs rows — stages.buckets_from_fused)
+BUCKET_COLS = ("b_band", "b_key", "b_probe", "b_rank")
 SIGNATURES_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),
@@ -44,15 +44,6 @@ SIGNATURES_SCHEMA = T.StructType(
         T.StructField("n_tokens", T.IntegerType(), False),
         T.StructField("text_sha", T.StringType(), False),
         T.StructField("fingerprints", T.ArrayType(T.LongType(), False), False),
-    ]
-)
-
-#: fused stage-1+2 output: the signature bundle plus this document's
-#: bucket rows as four parallel arrays (JVM-side arrays_zip + explode
-#: turns them into bucket rows — stages.buckets_from_fused)
-FUSED_SCHEMA = T.StructType(
-    list(SIGNATURES_SCHEMA.fields)
-    + [
         T.StructField("b_band", T.ArrayType(T.IntegerType(), False), False),
         T.StructField("b_key", T.ArrayType(T.LongType(), False), False),
         T.StructField("b_probe", T.ArrayType(T.BooleanType(), False), False),
@@ -70,92 +61,15 @@ SUBSTR_SCHEMA = T.StructType(
 
 
 # ---------------------------------------------------------------------------
-# U1 — signatures: (url, text) -> full signature bundle
+# U1+U2 — signatures with their bucket entries: (url, text) -> one row
 # ---------------------------------------------------------------------------
-def _sig_columns(pdf: pd.DataFrame, cfg: DedupConfig, a, b):
-    """Signature columns for one Arrow batch, plus the raw uint64
-    minhash/runnerup matrices (the fused stage-2 path derives bucket keys
-    from them without re-crossing the Arrow boundary).
-
-    The scale path (char shingles + OPH, the DEFAULT config) runs the
-    whole batch through `features.batch_doc_features` — one vectorized
-    NumPy pass per feature family across ALL documents of the batch
-    instead of a per-document Python loop (VERDICT r2 perf item). Other
-    modes (word shingles, classic kxu MinHash) keep the per-doc kernel;
-    outputs are bit-identical either way (tests/test_batchkernel.py).
-
-    Returns (columns dict, minh uint64 (n, K), runner uint64 (n, K)) or
-    None when every row of the batch is filtered (P2)."""
-    if cfg.shingle_mode == "char" and cfg.minhash_scheme == "oph":
-        bf = batch_doc_features(pdf["text"].tolist(), cfg, a, b)
-        if bf is None:
-            return None
-        cols = {
-            "url": pd.Series(pdf["url"].to_numpy()[bf.keep], dtype=object),
-            "minhash": pd.Series(list(bf.minhash.view(np.int64)), dtype=object),
-            "runnerup": pd.Series(
-                list(bf.runnerup.view(np.int64)), dtype=object
-            ),
-            "simhash": pd.Series(bf.simhash.view(np.int64), dtype=np.int64),
-            "n_shingles": pd.Series(bf.n_shingles, dtype=np.int32),
-            "n_tokens": pd.Series(bf.n_tokens, dtype=np.int32),
-            "text_sha": pd.Series(bf.text_sha, dtype=object),
-            "fingerprints": pd.Series(
-                [u64_to_i64(f) for f in bf.fingerprints], dtype=object
-            ),
-        }
-        return cols, bf.minhash, bf.runnerup
-    urls, minhs, runs, sims, nsh, ntok, shas, fps = [], [], [], [], [], [], [], []
-    for url, text in zip(pdf["url"].to_numpy(), pdf["text"].to_numpy()):
-        f = doc_features(text, cfg, a, b)
-        if f is None:
-            continue  # P2 filter: null/too-short text never signs
-        urls.append(url)
-        minhs.append(f.minhash)
-        runs.append(f.runnerup)
-        sims.append(np.int64(np.uint64(f.simhash)))
-        nsh.append(f.n_shingles)
-        ntok.append(f.n_tokens)
-        shas.append(f.text_sha)
-        fps.append(u64_to_i64(f.fingerprints))
-    if not urls:
-        return None
-    minh_mat = np.stack(minhs)
-    run_mat = np.stack(runs)
-    cols = {
-        "url": pd.Series(urls, dtype=object),
-        "minhash": pd.Series(list(minh_mat.view(np.int64)), dtype=object),
-        "runnerup": pd.Series(list(run_mat.view(np.int64)), dtype=object),
-        "simhash": pd.Series(sims, dtype=np.int64),
-        "n_shingles": pd.Series(nsh, dtype=np.int32),
-        "n_tokens": pd.Series(ntok, dtype=np.int32),
-        "text_sha": pd.Series(shas, dtype=object),
-        "fingerprints": pd.Series(fps, dtype=object),
-    }
-    return cols, minh_mat, run_mat
-
-
-def _bucket_arrays(
-    minh: np.ndarray, run: np.ndarray, cfg: DedupConfig, keys=None
-):
+def _bucket_arrays(minh: np.ndarray, run: np.ndarray, cfg: DedupConfig):
     """Per-document bucket-entry arrays (band, key, is_probe, rank) for a
     batch: home keys for the whole batch in one vectorized call
     (band_keys_batch) + the [MPLSH §4.1] probe keys (probe_keys_batch),
-    grouped per doc so the fused stage-1+2 UDF can emit them as array
-    columns (stage 2 is then one JVM explode, stages.buckets_from_fused).
-
-    `keys` (optional): per-doc text_sha. Equal key => equal text => equal
-    signature => identical bucket entries, so the probe-sequence heap —
-    the costliest per-doc step of the whole pipeline — runs once per
-    DISTINCT document and fans out (exact; duplicates dominate dedup
-    corpora by definition)."""
+    grouped per doc so the stage-1+2 UDF can emit them as array columns
+    (bucket rows are then one JVM explode, stages.buckets_from_fused)."""
     n = minh.shape[0]
-    if keys is not None and n:
-        codes, uniques = pd.factorize(np.asarray(keys, dtype=object))
-        if len(uniques) < n:
-            _, first = np.unique(codes, return_index=True)
-            ub = _bucket_arrays(minh[first], run[first], cfg)
-            return tuple([comp[c] for c in codes] for comp in ub)
     bands = cfg.bands
     home = H.band_keys_batch(minh, bands, cfg.rows_per_band).view(np.int64)
     if cfg.probes > 1:
@@ -199,28 +113,49 @@ def _bucket_arrays(
 
 
 def make_fused_fn(cfg: DedupConfig):
-    """mapInPandas fn for the fused stage 1+2: signature bundle plus this
-    doc's bucket entries as four parallel arrays (FUSED_SCHEMA). One Arrow
-    pass computes both stages' outputs; stage 2 becomes a JVM-side explode
-    of the cached fused relation (stages.buckets_from_fused). The (a, b)
-    MinHash coefficients are derived from cfg.seed inside each worker
-    (cheap, deterministic) rather than broadcast."""
+    """mapInPandas fn for stages 1+2 (SIGNATURES_SCHEMA): each kept row's
+    signature bundle plus its bucket entries as four parallel arrays, in
+    one Arrow pass. Identical texts are signed ONCE per batch and fanned
+    back out: every output column but `url` is a pure function of the
+    text, and exact duplicates are the norm in the corpora this engine
+    exists for (the replicated bench corpus is ~94% identical text; real
+    web crawls run 30-60%), so the dedup removes the dominant share of
+    kernel work — the probe-sequence heap included — with no
+    approximation. Rows whose text is null or filtered (P2) emit nothing;
+    the rest keep their input order. The (a, b) MinHash coefficients are
+    derived from cfg.seed inside each worker (cheap, deterministic)
+    rather than broadcast."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         a, b = minhash_params(cfg)
         for pdf in batches:
-            out = _sig_columns(pdf, cfg, a, b)
-            if out is None:
+            codes, texts = pd.factorize(pdf["text"])  # null text -> -1
+            bf = batch_doc_features(list(texts), cfg, a, b)
+            if bf is None:
                 continue
-            cols, minh, run = out
-            bb, bk, bp, br = _bucket_arrays(
-                minh, run, cfg, keys=cols["text_sha"].tolist()
+            # each input row's row in bf, or -1 when it does not sign (the
+            # extra last slot answers code -1)
+            urow = np.full(len(texts) + 1, -1, dtype=np.int64)
+            urow[bf.keep] = np.arange(bf.keep.size, dtype=np.int64)
+            rows = urow[codes]
+            keep = np.nonzero(rows >= 0)[0]
+            sel = rows[keep]
+            out = pd.DataFrame(
+                {
+                    "url": pdf["url"].to_numpy()[keep],
+                    "minhash": list(bf.minhash.view(np.int64)[sel]),
+                    "runnerup": list(bf.runnerup.view(np.int64)[sel]),
+                    "simhash": bf.simhash.view(np.int64)[sel],
+                    "n_shingles": bf.n_shingles[sel].astype(np.int32),
+                    "n_tokens": bf.n_tokens[sel].astype(np.int32),
+                    "text_sha": [bf.text_sha[r] for r in sel],
+                    "fingerprints": [u64_to_i64(bf.fingerprints[r]) for r in sel],
+                }
             )
-            cols["b_band"] = pd.Series(bb, dtype=object)
-            cols["b_key"] = pd.Series(bk, dtype=object)
-            cols["b_probe"] = pd.Series(bp, dtype=object)
-            cols["b_rank"] = pd.Series(br, dtype=object)
-            yield pd.DataFrame(cols)
+            arrays = _bucket_arrays(bf.minhash, bf.runnerup, cfg)
+            for col, per_text in zip(BUCKET_COLS, arrays):
+                out[col] = [per_text[r] for r in sel]
+            yield out
 
     return fn
 

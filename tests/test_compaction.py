@@ -27,7 +27,7 @@ from dedup.incremental import REPLACED_TABLES, _with_deltas, compact, run_increm
 from dedup.pipeline import run
 from dedup.synth import pages_schema
 
-DELTA_TABLES = ("pages", "signatures", "buckets", "verified_pairs")
+DELTA_TABLES = ("pages", "signatures", "verified_pairs")
 
 
 def _wh(root):
@@ -184,7 +184,7 @@ def test_crash_between_swap_and_gc_loses_nothing(spark, splits, tmp_path_factory
     # signatures' delta was already folded (crashed GC finished, nothing
     # re-folded for it); the other tables folded normally
     assert "signatures" not in folded
-    assert set(folded) == {"pages", "buckets", "verified_pairs"}
+    assert set(folded) == {"pages", "verified_pairs"}
     after = _views(spark, wh_root)
     for t in DELTA_TABLES:
         pd.testing.assert_frame_equal(before[t], after[t])

@@ -120,12 +120,12 @@ def test_incremental_rejects_nonalphanumeric_run_id(
             run_incremental(spark, new_df, DEFAULT, wh, run_id=bad)
 
 
-@pytest.mark.parametrize("fail_on", ["buckets", "verified_pairs"])
+@pytest.mark.parametrize("fail_on", ["signatures", "verified_pairs"])
 def test_failed_delta_write_releases_caches(
     spark, split_corpus, tmp_path_factory, monkeypatch, fail_on
 ):
-    """A delta write that raises must not leave the fused or stage-3
-    entries caches pinned in the session (a streaming retry reuses it)."""
+    """A delta write that raises must not leave the stage-3 entries cache
+    pinned in the session (a streaming retry reuses it)."""
     from dedup.catalog import Warehouse
 
     base_pd, new_pd = split_corpus
@@ -352,7 +352,7 @@ def test_run_and_increment_release_caches_and_record_metrics(spark, dup_heavy):
     assert dup_heavy["empty_after_inc"]
     wh = Warehouse(dup_heavy["wh"], DEFAULT.config_hash(), "dup1")
     rows = [r for r in wh.read_metrics() if r["run_id"] == "dup1"]
-    deltas = ("pages", "signatures", "buckets", "verified_pairs")
+    deltas = ("pages", "signatures", "verified_pairs")
     replaced = ("clusters", "canonical_pages")
     assert {r["stage"] for r in rows} == {*deltas, *replaced}
     for t in (*deltas, *replaced):
@@ -369,13 +369,10 @@ def test_catalog_runs_no_spark_job_for_metadata(spark, dup_heavy, tmp_path):
     increment, partitioned, delta and pointer-versioned ones included),
     run_incremental's return dict and the metrics-table append run no
     Spark job: a read takes its schema from the manifest, and the schema
-    and rows equal an inferred read's. A manifest without `schema`
-    (written before it existed) still reads, through inference."""
-    import json
+    and rows equal an inferred read's."""
     import os
-    import shutil
 
-    from dedup.catalog import MANIFEST, METRICS_SCHEMA, Warehouse
+    from dedup.catalog import METRICS_SCHEMA, Warehouse
     from dedup.incremental import DELTA_TABLES
     from dedup.pipeline import TABLES
 
@@ -392,18 +389,6 @@ def test_catalog_runs_no_spark_job_for_metadata(spark, dup_heavy, tmp_path):
         inferred = spark.read.parquet(wh.path(t))
         assert df.schema == inferred.schema, t
         assert rows(df) == rows(inferred), t
-
-    # a pre-schema manifest: the same table, read through inference
-    old = Warehouse(str(tmp_path / "old"), wh.config_hash, "old")
-    shutil.copytree(wh.path("pages"), old.path("pages"))
-    with open(os.path.join(old.path("pages"), MANIFEST)) as f:
-        man = json.load(f)
-    del man["schema"]
-    with open(os.path.join(old.path("pages"), MANIFEST), "w") as f:
-        json.dump(man, f)
-    legacy = old.read(spark, "pages")
-    assert legacy.schema == reads["pages"].schema
-    assert rows(legacy) == rows(reads["pages"])
 
     # non-nullable nested fields and a partition column that is not last
     # read back as a parquet scan reports them

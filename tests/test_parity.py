@@ -12,7 +12,7 @@ import pytest
 
 from dedup.config import DEFAULT
 from dedup.oracle import run_oracle
-from dedup import pipeline
+from dedup import pipeline, stages
 
 
 @pytest.fixture(scope="module")
@@ -53,7 +53,8 @@ def test_signatures_bit_for_bit(run):
 def test_buckets_exact(run):
     spark, res, oracle, _ = run
     cols = ["band", "bucket_key", "url", "is_probe", "probe_rank"]
-    got = _sorted(res.df(spark, "buckets").toPandas(), cols)[cols]
+    buckets = stages.buckets_from_fused(res.df(spark, "signatures"))
+    got = _sorted(buckets.toPandas(), cols)[cols]
     want = _sorted(oracle.buckets, cols)[cols]
     pd.testing.assert_frame_equal(
         got, want, check_dtype=False

@@ -41,35 +41,31 @@ def _table_pd(spark, res, name):
 
 @pytest.fixture(scope="module")
 def three_runs(spark, corpus_smoke, tmp_path_factory):
-    """(full run A, full run B, killed-then-resumed runs C, D and E)."""
-    roots = [str(tmp_path_factory.mktemp(f"wh_{i}")) for i in range(5)]
+    """(full run A, full run B, killed-then-resumed runs C and D)."""
+    roots = [str(tmp_path_factory.mktemp(f"wh_{i}")) for i in range(4)]
     pages = _pages_df(spark, corpus_smoke)
     a = pipeline.run(spark, pages, DEFAULT, roots[0])
     b = pipeline.run(spark, pages, DEFAULT, roots[1])
-    # run C: stop after buckets ("crash"), partially delete an uncommitted
-    # stage dir to simulate a torn write, then resume
-    pipeline.run(spark, pages, DEFAULT, roots[2], stop_after="buckets")
+    # run C: stop after signatures ("crash"), partially delete an
+    # uncommitted stage dir to simulate a torn write, then resume
+    pipeline.run(spark, pages, DEFAULT, roots[2], stop_after="signatures")
     torn = os.path.join(roots[2], "candidate_pairs")
     os.makedirs(torn, exist_ok=True)
     with open(os.path.join(torn, "part-00000.parquet"), "wb") as f:
         f.write(b"torn write, no manifest")
     c = pipeline.run(spark, pages, DEFAULT, roots[2])
-    # run D: stop after signatures, so the resume finds signatures
-    # committed but buckets not — it reruns stages 1+2 and commits buckets
-    pipeline.run(spark, pages, DEFAULT, roots[3], stop_after="signatures")
-    d = pipeline.run(spark, pages, DEFAULT, roots[3])
-    # run E: stop after candidate_pairs, so the resume finds candidates
+    # run D: stop after candidate_pairs, so the resume finds candidates
     # committed but dropped_buckets not — it reruns stage 3 for the
     # dropped-bucket report only
-    pipeline.run(spark, pages, DEFAULT, roots[4], stop_after="candidate_pairs")
-    e = pipeline.run(spark, pages, DEFAULT, roots[4])
-    yield spark, a, b, c, d, e
+    pipeline.run(spark, pages, DEFAULT, roots[3], stop_after="candidate_pairs")
+    d = pipeline.run(spark, pages, DEFAULT, roots[3])
+    yield spark, a, b, c, d
     for r in roots:
         shutil.rmtree(r, ignore_errors=True)
 
 
 def test_determinism_two_runs_identical(three_runs):
-    spark, a, b, _, _, _ = three_runs
+    spark, a, b, _, _ = three_runs
     for t in FINAL_TABLES:
         pd.testing.assert_frame_equal(
             _table_pd(spark, a, t), _table_pd(spark, b, t), check_dtype=False
@@ -77,14 +73,12 @@ def test_determinism_two_runs_identical(three_runs):
 
 
 def test_resume_equals_uninterrupted(three_runs):
-    spark, a, _, c, d, e = three_runs
+    spark, a, _, c, d = three_runs
     assert "signatures" in c.stages_skipped
     assert "candidate_pairs" in c.stages_run  # torn write was rebuilt
-    assert "signatures" in d.stages_skipped
-    assert "buckets" in d.stages_run
-    assert "candidate_pairs" in e.stages_skipped
-    assert "dropped_buckets" in e.stages_run
-    for resumed in (c, d, e):
+    assert "candidate_pairs" in d.stages_skipped
+    assert "dropped_buckets" in d.stages_run
+    for resumed in (c, d):
         for t in FINAL_TABLES:
             pd.testing.assert_frame_equal(
                 _table_pd(spark, a, t),
@@ -115,10 +109,10 @@ def test_stop_after_rejects_unknown_table(tmp_path):
 
 
 def test_metrics_have_per_partition_rows(three_runs):
-    _, a, _, _, _, _ = three_runs
+    _, a, _, _, _ = three_runs
     rows = a.warehouse.read_metrics()
     stages = {m["stage"] for m in rows}
-    assert {"signatures", "buckets", "clusters"} <= stages
+    assert {"signatures", "clusters"} <= stages
     for m in rows:
         assert m["rows"] >= 0 and m["bytes"] > 0 and "partition_id" in m
 
@@ -141,7 +135,7 @@ def test_metrics_survive_a_failed_run(spark, corpus_smoke, tmp_path, monkeypatch
     with pytest.raises(RuntimeError, match="stage 4 failed"):
         pipeline.run(spark, _pages_df(spark, corpus_smoke), DEFAULT, root)
     committed = pipeline.TABLES[: pipeline.TABLES.index("verified_pairs")]
-    assert committed == ("pages", "signatures", "buckets", "candidate_pairs", "dropped_buckets")
+    assert committed == ("pages", "signatures", "candidate_pairs", "dropped_buckets")
     table = spark.read.parquet(os.path.join(root, Warehouse.METRICS_TABLE))
     got = {
         r["stage"]: r

@@ -16,12 +16,9 @@ from dedup.synth import pages_schema
 @pytest.fixture(scope="module")
 def sig_buckets(spark, corpus_smoke):
     pages = spark.createDataFrame(corpus_smoke.pages, schema=pages_schema())
-    fused = stages.stage12_fused(pages, DEFAULT).cache()
-    yield (
-        stages.signatures_from_fused(fused),
-        stages.buckets_from_fused(fused),
-    )
-    fused.unpersist()
+    sigs = stages.stage12_fused(pages, DEFAULT).cache()
+    yield sigs, stages.buckets_from_fused(sigs)
+    sigs.unpersist()
 
 
 def test_url_ids_unique_and_frozen(spark):

@@ -210,9 +210,9 @@ def test_stream_resumes_crashed_bootstrap(
         os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
 
     # forge the crashed bootstrap: stream batch 0 (run_id "s0") committed
-    # pages + signatures + buckets, then died — no done marker
+    # pages + signatures, then died — no done marker
     boot_df = spark.createDataFrame(batches[0], schema=pages_schema())
-    run(spark, boot_df, DEFAULT, wh_root, run_id="s0", stop_after="buckets")
+    run(spark, boot_df, DEFAULT, wh_root, run_id="s0", stop_after="signatures")
 
     result = run_stream(spark, source, DEFAULT, wh_root, ckpt)
     assert result.bootstrapped
