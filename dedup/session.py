@@ -2,8 +2,9 @@
 assumes (SURVEY.md §4): AQE on (skew-join split + partition coalescing),
 Arrow everywhere (the UDF surface is 100% pandas/Arrow, BASELINE.json:15),
 bounded Arrow batches, shuffle partitions sized to the local core count
-(on a real cluster: ~2-3x total executor cores; set via --conf), and a
-codegen cache that holds every class a dedup call compiles.
+(on a real cluster: ~2-3x total executor cores; set via --conf), a
+codegen cache that holds every class a dedup call compiles, and zstd
+for every block Spark compresses (shuffle, broadcast, spill).
 """
 
 from __future__ import annotations
@@ -87,6 +88,15 @@ def build_session(
         # the first session built in a JVM fixes it.
         # dedup.spark_metrics.codegen_classes counts compiles.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # zstd (at Spark's default level 1) for every block Spark
+        # compresses: shuffle files, broadcasts, spills. Most shuffled
+        # bytes are stage 3's entry rows, whose random 64-bit bucket keys
+        # lz4 (Spark's default) barely shrinks: 15.0 B/row under lz4 and
+        # 9.4 B/row under zstd, and a perfbench dedup call writes ~40%
+        # fewer shuffle bytes (docs/SCALE.md). Its cost at that size:
+        # ~25 ms more summed shuffle-write task time per call, and peak
+        # PSS within 0.3% over ten paired runs per workload.
+        .config("spark.io.compression.codec", "zstd")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # Shuffle/spill scratch on tmpfs when available: this host's /tmp
         # is disk-backed; RAM is 128 GiB and shuffle state for the bench

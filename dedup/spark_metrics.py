@@ -19,8 +19,10 @@ from pyspark.sql import SparkSession
 
 
 def shuffle_totals(spark: SparkSession) -> dict:
-    """Cumulative bytes across all Spark stages this session: shuffle
-    write/read, input (storage scans), output (storage writes). Py4J
+    """Cumulative totals across all Spark stages this session: bytes of
+    shuffle write/read, input (storage scans) and output (storage
+    writes), plus the shuffle's written records and write time (the
+    codec's CPU cost shows in it; ms, from Spark's ns). Py4J
     access to AppStatusStore.stageList (the v1 REST shape without the
     REST server); returns {} if the internal API ever moves — callers
     treat the numbers as best-effort evidence, never control flow."""
@@ -35,18 +37,22 @@ def shuffle_totals(spark: SparkSession) -> dict:
             gw.new_array(jvm.double, 0),
             jvm.java.util.ArrayList(),
         )
-        w = r = inp = out = 0
+        w = r = inp = out = recs = wt_ns = 0
         for i in range(seq.length()):
             s = seq.apply(i)
             w += s.shuffleWriteBytes()
             r += s.shuffleReadBytes()
             inp += s.inputBytes()
             out += s.outputBytes()
+            recs += s.shuffleWriteRecords()
+            wt_ns += s.shuffleWriteTime()
         return {
             "shuffle_write_bytes": int(w),
             "shuffle_read_bytes": int(r),
             "input_bytes": int(inp),
             "output_bytes": int(out),
+            "shuffle_write_records": int(recs),
+            "shuffle_write_time_ms": round(wt_ns / 1e6, 3),
         }
     except Exception:
         return {}

@@ -442,42 +442,32 @@ def stage4_verify(
         | (F.col("jaccard") >= F.lit(cfg.jaccard_tau))
         | (F.col("hamming") <= F.lit(cfg.hamming_radius))
     )
-    base = base.withColumn("cheap_dup", cheap)
-
-    # Substring confirm for ALL winnow-sourced pairs, derived from the
-    # `candidates` input (not from `base`): deriving from base would put
-    # the expensive join subtree on both sides of a diamond and Spark would
-    # evaluate it twice. Checking a superset is cheap — identical texts
-    # short-circuit at the first matching gram — and the oracle's rule
-    # (substr only decides what the cheap rules left open) is restored
-    # below by masking with ~cheap_dup.
-    need = candidates.filter(F.col("sources").contains("winnow")).select(
-        "url_a", "url_b"
-    )
+    # Substring confirm in line: only winnow-sourced pairs the cheap
+    # rules left undecided get their texts (the left joins' condition
+    # carries that flag; other pairs get nulls), and one mapInPandas pass
+    # scores them and passes the rest through. No second branch over
+    # `candidates`: it would evaluate an uncommitted candidates relation
+    # (an increment's) twice. No broadcast hints: the text side can be
+    # large on pathological corpora — AQE broadcasts at runtime when the
+    # measured size allows.
+    base = base.withColumn(
+        "need", F.col("sources").contains("winnow") & ~cheap
+    ).withColumn("cheap_dup", cheap)
     texts = pages.select("url", "text")
-    # No broadcast hints: `need` can be large on pathological corpora —
-    # AQE broadcasts at runtime when the measured size allows.
-    need_t = (
-        texts.join(need, texts["url"] == need["url_a"])
-        .select("url_a", "url_b", F.col("text").alias("text_a"))
-        .join(texts, F.col("url") == F.col("url_b"))
-        .select("url_a", "url_b", "text_a", F.col("text").alias("text_b"))
-    )
-    substr = need_t.mapInPandas(udfs.make_substr_fn(cfg), udfs.SUBSTR_SCHEMA)
-
-    verified = (
-        base.join(substr, ["url_a", "url_b"], "left")
-        .withColumn(
-            "substr_ok",
-            F.coalesce("substr_ok", F.lit(False)) & ~F.col("cheap_dup"),
+    for side in ("a", "b"):
+        t = texts.select(
+            F.col("url").alias(f"t_url_{side}"), F.col("text").alias(f"text_{side}")
         )
-        .withColumn("is_dup", F.col("cheap_dup") | F.col("substr_ok"))
-        .select(
-            "url_a", "url_b", "jaccard", "hamming",
-            "sha_equal", "substr_ok", "is_dup", "sources",
-        )
+        base = base.join(
+            t, (F.col(f"url_{side}") == F.col(f"t_url_{side}")) & F.col("need"), "left"
+        ).drop(f"t_url_{side}")
+    scored = base.drop("need").mapInPandas(
+        udfs.make_substr_fn(cfg), udfs.SUBSTR_SCHEMA
     )
-    return verified
+    return scored.select(
+        "url_a", "url_b", "jaccard", "hamming", "sha_equal", "substr_ok",
+        (F.col("cheap_dup") | F.col("substr_ok")).alias("is_dup"), "sources",
+    )
 
 
 # ---------------------------------------------------------------------------

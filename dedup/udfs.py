@@ -51,10 +51,17 @@ SIGNATURES_SCHEMA = T.StructType(
     ]
 )
 
+#: make_substr_fn's output: the scored pair columns it passes through,
+#: then substr_ok (the texts it read are dropped)
 SUBSTR_SCHEMA = T.StructType(
     [
         T.StructField("url_a", T.StringType(), False),
         T.StructField("url_b", T.StringType(), False),
+        T.StructField("jaccard", T.DoubleType(), True),
+        T.StructField("hamming", T.LongType(), True),
+        T.StructField("sha_equal", T.BooleanType(), True),
+        T.StructField("cheap_dup", T.BooleanType(), True),
+        T.StructField("sources", T.StringType(), True),
         T.StructField("substr_ok", T.BooleanType(), False),
     ]
 )
@@ -169,28 +176,24 @@ def make_fused_fn(cfg: DedupConfig):
 # U4 — substring verification for winnow-sourced pairs
 # ---------------------------------------------------------------------------
 def make_substr_fn(cfg: DedupConfig):
-    """mapInPandas fn: (url_a, url_b, text_a, text_b) -> substr_ok.
-    Runs on every winnow-sourced candidate pair (stage 4), including
-    pairs the cheap rules already decided: stages.stage4_verify derives
-    its input from the candidates, not from the scored pairs, so the
-    join subtree is not evaluated twice, and masks the result with
-    ~cheap_dup afterwards. The O(len_a + len_b) check therefore runs on
-    a superset of the undecided pairs."""
+    """mapInPandas fn over stage 4's scored pairs: substr_ok is the
+    normalized common-substring check (>= cfg.min_substr) where the pair
+    carries both texts, else False. stages.stage4_verify attaches texts
+    only to winnow-sourced pairs the cheap rules left undecided, so the
+    O(len_a + len_b) check runs on exactly those; every other pair
+    passes through unchanged (SUBSTR_SCHEMA)."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ok = [
-                H.has_common_substring(
+                ta is not None
+                and tb is not None
+                and H.has_common_substring(
                     H.normalize(ta), H.normalize(tb), cfg.min_substr
                 )
                 for ta, tb in zip(pdf["text_a"], pdf["text_b"])
             ]
-            yield pd.DataFrame(
-                {
-                    "url_a": pdf["url_a"],
-                    "url_b": pdf["url_b"],
-                    "substr_ok": pd.Series(ok, dtype=bool),
-                }
-            )
+            out = pdf.drop(columns=["text_a", "text_b"])
+            yield out.assign(substr_ok=pd.Series(ok, dtype=bool, index=out.index))
 
     return fn

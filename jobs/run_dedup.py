@@ -105,7 +105,9 @@ def main() -> None:
         # at two parallelism levels these must match — the evidence that
         # scaling legs did identical work and only the host varied
         for k, v in shuffle_totals(spark).items():
-            summary[k.replace("_bytes", "_mb")] = round(v / 1e6, 1)
+            if k.endswith("_bytes"):
+                k, v = k.replace("_bytes", "_mb"), round(v / 1e6, 1)
+            summary[k] = v
         print(json.dumps(summary))
     finally:
         spark.stop()

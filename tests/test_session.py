@@ -1,6 +1,8 @@
 """Session defaults (dedup/session.py): the codegen cache holds a dedup
 call's whole working set of generated classes, so a warm call reuses
-them instead of recompiling each one.
+them instead of recompiling each one, and every block Spark ships is
+zstd-compressed. Also the session-wide shuffle totals
+(dedup/spark_metrics.py) that measure what those blocks cost.
 
 The compile counts come from a fresh JVM: this module, run as a script,
 builds its own session and prints the counts. The suite's shared session
@@ -87,6 +89,25 @@ def test_warm_increment_reuses_compiled_classes(compiles):
 
 def test_build_session_sizes_codegen_cache(spark):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+
+
+def test_build_session_compresses_blocks_with_zstd(spark):
+    assert spark.conf.get("spark.io.compression.codec") == "zstd"
+
+
+def test_shuffle_totals_count_records_and_write_time(spark):
+    """A known shuffle moves its rows: 10,000 rows repartitioned write at
+    least 10,000 records and some bytes, and the write time is in ms."""
+    from dedup.spark_metrics import shuffle_totals
+
+    before = shuffle_totals(spark)
+    assert spark.range(10_000).repartition(4).count() == 10_000
+    after = shuffle_totals(spark)
+    delta = {k: after[k] - before[k] for k in after}
+    assert delta["shuffle_write_records"] >= 10_000, delta
+    assert delta["shuffle_write_bytes"] > 0, delta
+    assert delta["shuffle_write_time_ms"] >= 0, delta
+    assert {"shuffle_read_bytes", "input_bytes", "output_bytes"} <= set(after)
 
 
 def test_codegen_classes_runs_no_spark_job(spark):

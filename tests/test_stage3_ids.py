@@ -1,6 +1,7 @@
 """Stage 3's url-id map (stages._url_ids) and the entries exchange: ids
 are unique and frozen, the entries relation costs one shuffle, and no
-output depends on id order matching url order."""
+output depends on id order matching url order. Stage 4 over stage 3's
+lazy candidates (an increment's verify) evaluates them once."""
 
 import re
 
@@ -58,6 +59,29 @@ def test_entries_cost_one_exchange(sig_buckets):
         assert cols[:-1] == ["g", "k1", "k2"]  # the last item is the count
     finally:
         out.entries.unpersist()
+
+
+def test_verify_aggregates_lazy_candidates_once(spark, sig_buckets, corpus_smoke):
+    """Verify over an uncommitted candidates relation, as an increment
+    runs it, plans and runs the (uid_a, uid_b) pair aggregate once: AQE's
+    final plan holds one final collect_set aggregate, not one per
+    consumer of `candidates`."""
+    sigs, buckets = sig_buckets
+    pages = spark.createDataFrame(corpus_smoke.pages, schema=pages_schema())
+    out = stages.stage3_candidates(sigs, buckets, DEFAULT)
+    try:
+        verified = stages.stage4_verify(out.candidates, sigs, pages, DEFAULT)
+        assert verified.collect()
+        plan = verified._jdf.queryExecution().executedPlan().toString()
+    finally:
+        out.entries.unpersist()
+    assert plan.startswith("AdaptiveSparkPlan isFinalPlan=true"), plan
+    final_plan = plan.split("\n+- == Initial Plan ==")[0]
+    final_aggs = re.findall(
+        r"ObjectHashAggregate\(keys=\[uid_a#\d+L, uid_b#\d+L\], functions=\[collect_set",
+        final_plan,
+    )
+    assert len(final_aggs) == 1, plan
 
 
 def test_outputs_ignore_id_order(spark, sig_buckets, corpus_smoke, monkeypatch):
